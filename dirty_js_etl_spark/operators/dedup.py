@@ -7,17 +7,41 @@ Scale design (the point of each choice):
 - **exact**: hash-groupBy on the dedup key — one shuffle on the md5
   fingerprint, map-side combined. At 100 TB this is the cheapest possible
   full-corpus op.
-- **MinHash signatures** are computed with *array expressions only*
-  (``transform`` + ``array_min`` over the shingle array): a pure
-  projection, no explode, no shuffle, whole-stage codegen. The only
-  shuffle in the LSH path is the band-bucket self-join — the canonical
-  O(candidates) instead of O(n²) pattern.
+- **MinHash-LSH** — every LSH entry point (:func:`minhash_lsh_pairs`,
+  :func:`minhash_band_table`, :func:`incremental_minhash_pairs`, the
+  near-dup index build/probe, ``linkage.lsh_link_pairs``) is a
+  composition of one private core:
+
+  1. ``_hashed_shingles`` — a doc's distinct shingles hashed (xxhash64,
+     or ``hash_fn``) as one array; ``_postings`` explodes them into
+     ``(id, g)`` posting rows. Shingles are ``array_distinct``, so the
+     array length, or the count of a doc's postings (``_set_sizes``),
+     IS the set size.
+  2. ``_band_table`` — per seeded permutation, ``min((a·h + b) mod P)``
+     over the postings in one map-side-combined aggregation (codegen'd;
+     the array-expression :func:`minhash_signature` nests ``num_perm``
+     interpreted higher-order functions), then band j buckets on the
+     hash of its r-column slice: ``(id, band, bucket)``.
+  3. ``_cap`` — drop (band, bucket) groups above ``max_bucket_size``:
+     a degenerate bucket (boilerplate, empty docs) would make the
+     candidate join quadratic.
+  4. ``_band_candidates`` — the band self-join (``id_a < id_b``) or a
+     probe join of one band table into another, then ``distinct``.
+     This is the only corpus-scale shuffle: O(candidates), not O(n²).
+  5. a verify with the TRUE hashed-shingle Jaccard, so LSH never emits
+     a false positive. ``_array_verify`` pulls the two docs' hashed
+     arrays and intersects them map-side (x6, x167);
+     ``_count_based_verify`` counts shared ``(id, g)`` posting rows,
+     the shape a persisted posting index serves (the near-dup index
+     probe, and the prefix-filtered exact join). Both compute the same
+     raw ratio.
+
+  NULL text shingles to a NULL array: it explodes to nothing, never
+  bands and never pairs. Empty text is one empty shingle, so two empty
+  docs pair at Jaccard 1.0.
 - **ANSI-safe hashing**: Spark 4 runs with ``spark.sql.ansi.enabled=true``
   where bigint overflow *raises*; the universal-hash step reduces xxhash64
   into [0, P) first (P = 2^31-1) so ``a*h + b`` stays < 2^62.
-- **hot-bucket capping**: degenerate buckets (boilerplate shingles, empty
-  docs) would quadratically blow up the candidate join; buckets larger
-  than ``max_bucket_size`` are dropped, matching production LSH practice.
 - **SimHash**: 64-bit signature folded into four 16-bit chunks; near-dup
   candidates join on any equal chunk (pigeonhole: hamming<=3 over 64 bits
   guarantees an equal 16-bit chunk), verified with ``bit_count(xor)``.
@@ -122,10 +146,12 @@ def _hash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
 def minhash_signature(
     shingles: Column, num_perm: int = 64, seed: int = 42
 ) -> Column:
-    """MinHash signature (array<int> of length num_perm) as a pure
-    projection: xxhash64 each shingle, reduce into [0,P), then per
-    permutation take ``array_min`` of ``(a*h + b) mod P``. No explode, no
-    shuffle — signatures for 100 TB of docs are a map-only stage."""
+    """MinHash signature (array<int> of length num_perm) of one shingle
+    array as a pure projection: xxhash64 each shingle, reduce into
+    [0,P), then per permutation take ``array_min`` of
+    ``(a*h + b) mod P``. Same values as the LSH core's signature
+    aggregation, which the pipelines use because these ``num_perm``
+    nested higher-order functions evaluate interpreted."""
     base = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
     mins = [
         F.array_min(
@@ -136,49 +162,210 @@ def minhash_signature(
     return F.array(*mins)
 
 
-def _signature_from_hashed(
-    exploded: DataFrame, num_perm: int, seed: int
-) -> DataFrame:
-    """(id, m0..) signature agg over an already-exploded ``(id, g)``
-    frame of raw xxhash64 shingle hashes. Set sizes no longer ride this
-    shuffle: verify is array-based (round 8) and reads ``F.size`` off
-    the checkpointed hashed arrays instead."""
-    h = F.pmod(F.col("g"), F.lit(_P))
-    aggs = [
-        F.min(F.pmod(a * h + b, F.lit(_P))).cast("int").alias(f"m{i}")
-        for i, (a, b) in enumerate(_hash_params(num_perm, seed))
-    ]
-    return exploded.groupBy("id").agg(*aggs)
+def _jaccard(inter: Column, size_a: Column, size_b: Column) -> Column:
+    """``|A∩B| / (|A| + |B| − |A∩B|)`` as the RAW integer-count ratio —
+    one IEEE division of values both engines materialize identically,
+    so it hashes identically everywhere. NO decimal re-round: Spark's
+    F.round (HALF_UP on the shortest decimal repr) and DuckDB's round
+    (binary half-away) disagree on ratios like 41/640 = 0.0640625
+    (tools/round_audit.py scan: 93 such p/q with q<=20000 at scale 6)
+    — the kmv_estimate discipline."""
+    return inter / (size_a + size_b - inter)
 
 
-def minhash_signature_table(
-    sh_base: DataFrame, num_perm: int = 64, seed: int = 42
-) -> DataFrame:
-    """(id, m0..m{num_perm-1}) signature table via explode + hash-agg.
-
-    The array-expression form (:func:`minhash_signature`) builds
-    ``num_perm`` nested higher-order functions, which Spark evaluates
-    *interpreted* (HOFs are outside whole-stage codegen) — measurably
-    slow at even 5k docs. Exploding the hashed shingles once and taking
-    ``min((a_i*h+b_i) mod P)`` per permutation keeps every expression
-    codegen'd; the map-side partial min means the single shuffle carries
-    one 64-int row per doc per partition. Same values as the array form.
-    """
-    exploded = sh_base.select(
-        "id",
-        F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("g"),
+def _hashed_shingles(
+    text: Column,
+    shingle_k: int,
+    hash_fn: Callable[[Column], Column] | None = None,
+    shingler: Callable[[Column, int], Column] = word_shingles,
+) -> Column:
+    """A doc's distinct shingles hashed (xxhash64 unless ``hash_fn``):
+    ``array<bigint>``, NULL for NULL text."""
+    return F.transform(
+        shingler(text, shingle_k), hash_fn or (lambda s: F.xxhash64(s))
     )
-    return _signature_from_hashed(exploded, num_perm, seed)
 
 
-def band_hashes(sig: Column, bands: int, rows: int) -> Column:
-    """Fold the signature into ``bands`` bucket hashes (array<bigint>):
-    bucket_j = xxhash64 of the j-th r-row slice rendered as a string."""
-    return F.array(
+def _postings(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_k: int,
+    hash_fn: Callable[[Column], Column] | None = None,
+    shingler: Callable[[Column, int], Column] = word_shingles,
+) -> DataFrame:
+    """``(id, g)``: one posting row per hashed shingle of each doc. The
+    explode runs over the hashing EXPRESSION, never over a projected
+    array column: Catalyst infers ``size(arr) > 0`` from an explode over
+    a column and pushes it below the projection, which would shingle
+    and hash every doc twice."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(
+            _hashed_shingles(F.col(text_col), shingle_k, hash_fn, shingler)
+        ).alias("g"),
+    )
+
+
+def _set_sizes(posts: DataFrame) -> DataFrame:
+    """``(id, sz)``: each doc's shingle-set size, counted off its
+    postings (a NULL-text doc has neither)."""
+    return posts.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
+
+
+def _band_table(
+    posts: DataFrame,
+    num_perm: int,
+    bands: int,
+    seed: int,
+    portable_bands: bool,
+    checkpoint: bool = False,
+) -> DataFrame:
+    """``(id, band, bucket)`` rows from ``(id, g)`` posting rows: per
+    seeded permutation ``min((a·h + b) mod P)`` in one map-side-combined
+    aggregation, then band j buckets on the xxhash64 (``portable_bands``:
+    md5-60bit) of its contiguous r-column signature slice.
+    ``checkpoint`` materializes the signature table (one
+    ``num_perm``-int row per doc, the smallest relation in the
+    pipeline) for callers whose band table fans out to several
+    consumers that would each replay the aggregation."""
+    rows = num_perm // bands
+    h = F.pmod(F.col("g"), F.lit(_P))
+    sig = posts.groupBy("id").agg(
         *[
-            F.xxhash64(F.concat_ws("_", F.slice(sig, j * rows + 1, rows)))
+            F.min(F.pmod(a * h + b, F.lit(_P))).cast("int").alias(f"m{i}")
+            for i, (a, b) in enumerate(_hash_params(num_perm, seed))
+        ]
+    )
+    if checkpoint:
+        sig = sig.localCheckpoint(eager=True)
+    bucket = portable_token_hash60 if portable_bands else F.xxhash64
+    buckets = F.array(
+        *[
+            bucket(
+                F.concat_ws(
+                    "_", *[F.col(f"m{j * rows + i}") for i in range(rows)]
+                )
+            )
             for j in range(bands)
         ]
+    )
+    return sig.select("id", F.posexplode(buckets).alias("band", "bucket"))
+
+
+def _cap(banded: DataFrame, max_bucket_size: int) -> DataFrame:
+    """Drop every (band, bucket) holding more than ``max_bucket_size``
+    rows: a degenerate bucket would make the candidate join quadratic."""
+    ok = (
+        banded.groupBy("band", "bucket")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") <= max_bucket_size)
+        .select("band", "bucket")
+    )
+    return banded.join(ok, ["band", "bucket"])
+
+
+def _band_candidates(
+    left: DataFrame,
+    right: DataFrame | None = None,
+    top_m: int | None = None,
+) -> DataFrame:
+    """Distinct ``(id_a, id_b)`` pairs that share a (band, bucket): the
+    self-join of ``left`` (``id_a < id_b``) or ``left`` probing
+    ``right`` (``id_a`` from left, ``id_b`` from right).
+
+    ``top_m`` keeps, per ``id_a``, only the ``top_m`` partners that
+    co-bucket in the most bands (ties → min ``id_b``) — same pair-keyed
+    shuffle as the distinct, plus a per-``id_a`` window bounded by
+    bands × bucket cap."""
+    l = left.alias("l")
+    r = (left if right is None else right).alias("r")
+    cond = (F.col("l.band") == F.col("r.band")) & (
+        F.col("l.bucket") == F.col("r.bucket")
+    )
+    if right is None:
+        cond = cond & (F.col("l.id") < F.col("r.id"))
+    pairs = l.join(r, cond).select(
+        F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
+    )
+    if top_m is None:
+        return pairs.distinct()
+    w = Window.partitionBy("id_a").orderBy(
+        F.col("__bands").desc(), F.col("id_b")
+    )
+    return (
+        pairs.groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("__bands"))
+        .withColumn("__crn", F.row_number().over(w))
+        .filter(F.col("__crn") <= top_m)
+        .select("id_a", "id_b")
+    )
+
+
+def _array_verify(
+    cands: DataFrame,
+    hashed_a: DataFrame,
+    hashed_b: DataFrame,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs from the two docs' hashed
+    ARRAYS: two id-keyed joins pull them and ``array_intersect``
+    (an O(|A|+|B|) hash-set probe inside codegen) counts the overlap
+    map-side. Per-pair work is candidate-cardinality and the array
+    table is one row per doc, so no corpus-scale posting table is
+    re-shuffled (SCALE.md: x6 at sf1 ~14 s → ~8 s against the posting
+    verify).
+
+    No broadcast hints anywhere in a verify: candidates and the
+    per-doc tables are corpus-cardinality on a near-dup-heavy corpus
+    and a forced broadcast of either is an OOM at 100 TB. AQE still
+    broadcasts at runtime when the actual size is small."""
+    a = hashed_a.select(F.col("id").alias("id_a"), F.col("ga").alias("__gaa"))
+    b = hashed_b.select(F.col("id").alias("id_b"), F.col("ga").alias("__gab"))
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn("__inter", F.size(F.array_intersect("__gaa", "__gab")))
+        .withColumn(
+            "jaccard",
+            _jaccard(F.col("__inter"), F.size("__gaa"), F.size("__gab")),
+        )
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _count_based_verify(
+    cands: DataFrame,
+    posts_a: DataFrame,
+    posts_b: DataFrame,
+    sizes_a: DataFrame,
+    sizes_b: DataFrame,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs from narrow ``(id, g)`` posting
+    rows and ``(id, sz)`` set sizes — the verify a persisted posting
+    index (:class:`NearDupIndex`) serves, since shingle arrays never
+    ship: each candidate joins its left doc's postings, then the right
+    doc's postings on ``(id, g)``, and the matches count per pair. No
+    broadcast hints, as in :func:`_array_verify`."""
+    pa = posts_a.select(F.col("id").alias("id_a"), "g")
+    pb = posts_b.select(F.col("id").alias("id_b"), "g")
+    sa = sizes_a.select(F.col("id").alias("id_a"), F.col("sz").alias("__sza"))
+    sb = sizes_b.select(F.col("id").alias("id_b"), F.col("sz").alias("__szb"))
+    return (
+        cands.join(pa, "id_a")
+        .join(pb, ["id_b", "g"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("__inter"))
+        .join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn(
+            "jaccard",
+            _jaccard(F.col("__inter"), F.col("__sza"), F.col("__szb")),
+        )
+        .filter(F.col("jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -198,211 +385,42 @@ def minhash_lsh_pairs(
     """Near-duplicate pairs via MinHash + banded LSH, verified with the
     *true* shingle Jaccard. Returns (id_a, id_b, jaccard), id_a < id_b.
 
-    Pipeline: signature projection (map-only) → explode bands → hot-bucket
-    cap → bucket self-join (the one shuffle) → distinct candidate pairs →
-    verify with exact Jaccard on the shingle arrays.
-
     ``hash_fn`` swaps the shingle hash (default xxhash64; pass
     :func:`portable_token_hash60` for an oracle-recomputable pipeline)
     and ``portable_bands=True`` buckets each band on the md5-derived
     60-bit hash instead of xxhash64 so the band join, the hot-bucket
     cap, and therefore the exact candidate set are engine-portable too.
     """
-    rows = num_perm // bands
-    sh_base = df.select(
+    # The hashed arrays feed the signature agg AND the array verify;
+    # shingling is the pipeline's real CPU cost (~5 s of x6's sf1 wall
+    # measured serially), so they are checkpointed to run it once.
+    # LAZY: the first consumer is the signature table's EAGER build,
+    # one sequential job in which this frame appears once, so it
+    # materializes inside that job instead of paying its own; the
+    # verify joins read the persisted blocks. The lazy-checkpoint race
+    # (concurrent stages computing an unmaterialized frame) cannot
+    # happen: the eager build completes before any concurrent consumer
+    # launches. The signature table is eager because the band table
+    # fans out to three consumers (bucket counts, join left/right).
+    hashed = df.select(
         F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    )
-    # Hashed-shingle ARRAYS — one (id, array<bigint>) row per doc,
-    # materialized once. Shingling (lower/split/k-gram concat/distinct)
-    # is the pipeline's real CPU cost (~5 s of x6's sf1 wall measured
-    # serially), and both downstream consumers — the signature agg and
-    # the array verify — need the same hashed sets; checkpointing the
-    # packed arrays (≈ posting-row bytes, but one row per doc) makes
-    # it run exactly once. Shingles are array_distinct so the array
-    # length IS the set size (modulo a 2^-64 xxhash collision).
-    # GC-scoped localCheckpoint, LAZY (r14 job-floor audit): the FIRST
-    # consumer is sig_tbl's EAGER build below — a single sequential job
-    # in which this frame appears once, so it materializes (and
-    # persists) inside that job instead of paying its own blocking
-    # job first. The later verify-join consumers read the persisted
-    # blocks. The VERDICT r04 #8 lazy-checkpoint race (concurrent
-    # stages both computing an unmaterialized frame, spraying
-    # cancelled-task noise) cannot happen here because sig_tbl's eager
-    # build completes before any concurrent consumer launches.
-    hashed = sh_base.select(
-        "id",
-        F.transform("sh", hash_fn or (lambda s: F.xxhash64(s))).alias("ga"),
+        _hashed_shingles(F.col(text_col), shingle_k, hash_fn).alias("ga"),
     ).localCheckpoint(eager=False)
-    exploded = hashed.select("id", F.explode("ga").alias("g"))
-    # codegen-friendly signature table (see minhash_signature_table);
-    # band j buckets on the hash of its contiguous r-column slice.
-    # Also materialized — one 64-int row per doc (the smallest relation
-    # in the pipeline), and the banded frame below fans out to three
-    # consumers (bucket counts, join left/right) that would each replay
-    # the signature aggregation otherwise.
-    sig_tbl = _signature_from_hashed(exploded, num_perm, seed).localCheckpoint(
-        eager=True
+    # exploding the checkpointed column is safe: the size filter
+    # Catalyst infers from it reads persisted blocks (see _postings)
+    posts = hashed.select("id", F.explode("ga").alias("g"))
+    banded = _cap(
+        _band_table(
+            posts, num_perm, bands, seed, portable_bands, checkpoint=True
+        ),
+        max_bucket_size,
     )
-
-    def _bucket(cols):
-        joined = F.concat_ws("_", *cols)
-        if portable_bands:
-            return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast(
-                "bigint"
-            )
-        return F.xxhash64(joined)
-
-    buckets = F.array(
-        *[
-            _bucket([F.col(f"m{j * rows + i}") for i in range(rows)])
-            for j in range(bands)
-        ]
-    )
-    banded = sig_tbl.select(
-        "id", F.posexplode(buckets).alias("band", "bucket")
-    )
-    # cap pathological buckets before the join blows up quadratically
-    counts = banded.groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("__n"))
-    banded = (
-        banded.join(counts, ["band", "bucket"])
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
-    )
-
-    # NO pinned spread on the band self-join (r14, VERDICT r13 task 4):
-    # the r13 both-sided REPARTITION_BY_NUM pin was re-measured in an
-    # interleaved kill-switch ABAB at sf0.1 in quiet windows — spread ON
-    # 3.26-3.89 s vs OFF 2.56-3.20 s, consistent across both pairs; the
-    # driver's r13 read (x6 3.04 → 3.74, −19%) was a real regression,
-    # not noise. Unlike the linkage enumerators (broadcast build side,
-    # probe partitioning free), this self-join's two pinned exchanges
-    # replaced ENSURE_REQUIREMENTS exchanges AQE was already placing on
-    # the same keys, so they bought no parallelism and cost two extra
-    # pinned stages. AQE's byte-coalescing of the banded table is
-    # bounded here by the bucket cap + distinct-pair dedup downstream.
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cands = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-
-    # array-based exact verify: each candidate pair pulls the two
-    # hashed-shingle ARRAYS (two id-keyed joins) and intersects them
-    # map-side (``array_intersect`` — O(|A|+|B|) hash-set probe inside
-    # codegen). This replaced the count-based posting join (round 8):
-    # that shape exploded every candidate against its full posting
-    # list and re-shuffled the corpus-scale posting table on (id, g) —
-    # at sf1 the verify stage alone was 8.9 s of x6's 14 s; the array
-    # table is one row per doc (the corpus's own scale, ~8·|shingles|
-    # bytes per row) and the per-pair work is candidate-cardinality.
-    # jaccard = inter / (|A| + |B| - inter).
-    #
-    # No broadcast hints anywhere in the verify stage: the candidate
-    # set and the array table are both corpus-cardinality relations on
-    # a near-dup-heavy corpus, and a forced broadcast of either is an
-    # OOM at 100 TB. These are plain shuffle joins; AQE converts them
-    # to broadcasts at runtime when the actual size is small (the
-    # sf0.01 test case), which is the only time a broadcast is safe.
-    verified = (
-        cands.join(
-            hashed.select(
-                F.col("id").alias("id_a"), F.col("ga").alias("__gaa")
-            ),
-            "id_a",
-        )
-        .join(
-            hashed.select(
-                F.col("id").alias("id_b"), F.col("ga").alias("__gab")
-            ),
-            "id_b",
-        )
-        .withColumn("__inter", F.size(F.array_intersect("__gaa", "__gab")))
-        .withColumn(
-            "jaccard",
-            # RAW integer-count ratio — one IEEE division of values both
-            # engines materialize identically, so it hashes identically
-            # everywhere. NO decimal re-round: Spark's F.round (HALF_UP
-            # on the shortest decimal repr) and DuckDB's round (binary
-            # half-away) disagree on ratios like 41/640 = 0.0640625
-            # (tools/round_audit.py scan: 93 such p/q with q<=20000 at
-            # scale 6) — the kmv_estimate discipline, VERDICT r12 task 3.
-            F.col("__inter")
-            / (F.size("__gaa") + F.size("__gab") - F.col("__inter")),
-        )
-    )
-    return verified.filter(
-        F.col("jaccard") >= jaccard_threshold
-    ).select("id_a", "id_b", "jaccard")
-
-
-def _count_based_verify(
-    cands: DataFrame,
-    posts_a: DataFrame,
-    posts_b: DataFrame,
-    sizes_a: DataFrame,
-    sizes_b: DataFrame,
-    jaccard_threshold: float,
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate pairs from narrow
-    ``(id, g)`` posting rows: intersections arrive as (id_a, id_b,
-    count) — shingle arrays never ship. Shared by the self-join LSH
-    path (both posting frames identical) and the incremental
-    batch-vs-corpus path (distinct frames). No broadcast hints: all
-    relations are data-scaled; AQE broadcasts at runtime when small.
-
-    The per-doc sizes attach to the CANDIDATE pairs (pair-cardinality —
-    the same two joins the old shape spent on the intersection output)
-    and gate them with the size-ratio prefilter
-    ``min(|A|,|B|) ≥ τ·max(|A|,|B|)`` — necessary for ``J ≥ τ`` — so a
-    size-incompatible candidate never reaches the posting-list join,
-    the expensive stage it would otherwise cost O(|A|) rows in
-    (VERDICT r07 task 5). Sizes then ride the posting join as two ints
-    and come out through the pair groupBy's keys."""
-    # prefilters admit against τ - 5e-7, not τ: the emitted contract is
-    # round(jaccard, 6) >= τ, so a pair with true J in [τ-5e-7, τ) that
-    # rounds up must never be pruned before the verify (ADVICE r08)
-    tau_pre = max(jaccard_threshold - 5e-7, 0.0)
-    sa = sizes_a.select(F.col("id").alias("id_a"), F.col("sz").alias("__sza"))
-    sb = sizes_b.select(F.col("id").alias("id_b"), F.col("sz").alias("__szb"))
-    cands = (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(
-            F.least(F.col("__sza"), F.col("__szb"))
-            >= tau_pre * F.greatest(F.col("__sza"), F.col("__szb"))
-        )
-    )
-    ea = posts_a.join(
-        cands, F.col("id") == F.col("id_a")
-    ).select("id_a", "id_b", "__sza", "__szb", "g")
-    inter = (
-        ea.alias("ea")
-        .join(
-            posts_b.alias("eb"),
-            (F.col("eb.id") == F.col("ea.id_b"))
-            & (F.col("eb.g") == F.col("ea.g")),
-        )
-        .groupBy("ea.id_a", "ea.id_b", "ea.__sza", "ea.__szb")
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            # raw integer-count ratio, no decimal re-round (the kmv
-            # discipline — see the array-verify path's note)
-            F.col("__inter")
-            / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
+    # No pinned spread on the band self-join: an interleaved kill-switch
+    # ABAB at sf0.1 measured the both-sided pin at 3.26-3.89 s vs
+    # 2.56-3.20 s without, since its exchanges only replaced the ones
+    # AQE already places on the same keys.
+    return _array_verify(
+        _band_candidates(banded), hashed, hashed, jaccard_threshold
     )
 
 
@@ -416,21 +434,16 @@ def ngram_jaccard_pairs(
     prefix_l: int = 3,
     dedup_values: bool = False,
 ) -> DataFrame:
-    """Exact n-gram-Jaccard near-dup pairs, count-based (no MinHash).
+    """Exact n-gram-Jaccard near-dup pairs (no MinHash).
 
-    Explode shingles (hashed to 64-bit ints so shuffle rows are narrow),
-    drop stop-shingles above the document-frequency cap (a shingle in
-    >``max_shingle_df`` docs creates O(df²) candidates while signaling
-    nothing), self-join on the shingle hash and COUNT matches per pair:
-    ``|A∩B|`` arrives from the same shuffle that found the candidates.
-    Intersection counts use capped shingles; sizes are uncapped full
-    shingle counts (the operational near-dup contract: stop-shingles
-    can't *create* a pair but still count toward its union).
+    Shingles hash to 64-bit ints so shuffle rows are narrow; a shingle
+    in more than ``max_shingle_df`` docs (a stop-shingle: O(df²)
+    candidates, no signal) cannot CREATE a pair. Intersections count
+    capped shingles; sizes are uncapped full shingle counts, so
+    stop-shingles still count toward the union.
 
     Candidate generation is a LOSSLESS extended prefix filter (the
-    PPJoin family's l-prefix scheme), which collapsed the sf1 pair-join
-    output from 86M rows to ~16M and the candidate set to ~0.5M
-    (VERDICT r07 task 2 — x5 was 25% of the sf1 wall):
+    PPJoin family's l-prefix scheme):
 
     - shingles sort per doc by the global (document-frequency, hash)
       order — rarest first — and only the first
@@ -438,50 +451,31 @@ def ngram_jaccard_pairs(
       qualifying pair the required overlap is
       α(A,B) = ⌈τ/(1+τ)·(|A|+|B|)⌉ and a valid partner has |B| ≥ τ|A|,
       so α ≥ ⌈τ·|A|⌉ per doc; the l-prefix theorem then guarantees
-      ≥ min(prefix_l, ⌈α(A,B)⌉) shared tokens inside these prefixes, so
-      the pair filter requires exactly that count — the old ≥2 filter
-      with its small-pair relaxation is the prefix_l=2 special case.
-      Measured at sf1: prefix_l=3 cuts surviving candidates 1.53M→305k
-      (true pairs: 250.6k) for one extra posting row per doc, the best
-      wall time of l∈{2,3,4} (8.5 s vs 9.8/9.3 s);
-    - every prefilter admits against τ_pre = τ − 5e-7 rather than τ:
-      the emitted contract is ``round(jaccard, 6) ≥ τ``, so a pair
-      whose true J lies in [τ−5e-7, τ) and rounds up survives the
-      screens and reaches the verify (ADVICE r08);
+      ≥ min(prefix_l, ⌈α(A,B)⌉) shared tokens inside these prefixes,
+      which is exactly the count the pair filter requires. At sf1
+      prefix_l=3 cut surviving candidates 1.53M→305k (true pairs:
+      250.6k), the best wall time of l∈{2,3,4} (8.5 s vs 9.8/9.3 s);
+    - every prefilter admits against τ_pre = τ − 5e-7 rather than τ, so
+      a pair whose true J lies in [τ−5e-7, τ) still reaches the verify;
     - the size-ratio prefilter ``min ≥ τ·max`` (necessary for J ≥ τ)
       rides the prefix join condition;
-    - surviving candidates verify by exact hashed-set intersection
-      (``array_intersect`` on the capped per-doc arrays, built in the
-      same groupBy that forms the prefixes) — candidate-cardinality
-      work, no corpus-scale posting join;
-    - ``dedup_values`` (default False; r10): the dedup-then-pair option
-      for EXACT-duplicate-heavy corpora (the r9 linkage lesson —
-      scraped training corpora routinely carry big identical-text
-      cliques, and record-level pairing is O(clique²) inside them).
-      Identical normalized texts collapse to a min-id representative
-      (md5 value key, one narrow (id, key) shuffle — text never
-      shuffles), the whole shingle/prefix/verify pipeline runs on
-      DISTINCT values only, and pairs re-expand through the clique map
-      at output cardinality. Cross-value member pairs inherit the
-      value pair's jaccard verbatim (identical shingle sets);
-      same-value member pairs get J = szc/(2·sz − szc) — exactly what
-      the record-level pipeline computes for an identical pair under
-      the capped-intersection / uncapped-size contract (and exactly no
-      pair when no shingle survives the cap, szc = 0, matching the
-      shared-surviving-token requirement). The emitted pair set is
-      IDENTICAL either way — including when the df cap binds: the
-      representative carries its clique size into the shingle pipeline
-      as a weight, so document frequency counts RECORDS (Σ clique
-      sizes), exactly what the record-level path counts (ADVICE r10;
-      hypothesis-property-tested against the brute force with a
-      binding cap). Only the work moves from clique-quadratic to
-      value-level + output-cardinality. Default OFF because on a
-      LOW-exact-dup corpus (the fixtures: sf1 documents are 99.8%
-      distinct texts — their near-dup pairs are perturbed variants,
-      not clique members) the three extra materializations and
-      expansion joins are pure overhead (~2× at sf0.1); flip it on
-      when exact-dup mass is expected — it composes with, not
-      replaces, the upstream exact-dedup pass.
+    - survivors verify by ``array_intersect`` on the capped per-doc
+      arrays, built in the same groupBy that forms the prefixes.
+
+    ``dedup_values`` (default False) is the dedup-then-pair option for
+    EXACT-duplicate-heavy corpora, where record-level pairing is
+    O(clique²). Identical normalized texts collapse to a min-id
+    representative (md5 value key; text never shuffles), the pipeline
+    runs on DISTINCT values, and pairs re-expand through the clique map
+    at output cardinality. Cross-value member pairs inherit the value
+    pair's jaccard; same-value member pairs get J = szc/(2·sz − szc),
+    exactly the record-level result under the capped-intersection /
+    uncapped-size contract (no pair when szc = 0). The representative
+    carries its clique size as a df weight, so the cap counts RECORDS
+    and the emitted pair set is IDENTICAL either way
+    (hypothesis-tested with a binding cap). Default OFF: on a
+    low-exact-dup corpus (sf1 documents are 99.8% distinct texts) the
+    extra materializations and expansion joins cost ~2× at sf0.1.
     """
     from pyspark.sql import Window
 
@@ -507,9 +501,8 @@ def ngram_jaccard_pairs(
         # the representative carries its clique size __c so the df cap
         # stays RECORD-level: a shingle's document frequency must count
         # every record (sum of clique sizes), not distinct values —
-        # otherwise, on exactly the exact-dup-heavy corpora this flag
-        # targets, the two modes would cap different shingles and emit
-        # different pairs (ADVICE r10)
+        # otherwise the two modes would cap different shingles and emit
+        # different pairs
         rep_docs = df.select(
             F.col(id_col).alias("id"),
             normalize_text(F.col(text_col)).alias("nt"),
@@ -540,10 +533,7 @@ def ngram_jaccard_pairs(
             .join(sizes, "rep")
             .filter(F.col("szc") > 0)
             .withColumn(
-                "jaccard",
-                # raw integer-count ratio, no decimal re-round (kmv
-                # discipline)
-                F.col("szc") / (2 * F.col("sz") - F.col("szc")),
+                "jaccard", _jaccard(F.col("szc"), F.col("sz"), F.col("sz"))
             )
             .filter(F.col("jaccard") >= tau)
             .select("vk", "jaccard")
@@ -595,18 +585,11 @@ def _ngram_pairs_core(
         F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("g"),
     )
     # document frequency per shingle as ONE window over the posting
-    # table (r10): the previous shape — a groupBy(g) aggregate joined
-    # back onto the postings — shuffled the corpus-scale posting rows
-    # TWICE (once map-side-combined for the counts, once full for the
-    # sort-merge cap join) and needed an eager localCheckpoint because
-    # exploded had two consumers replaying the scan+shingle lineage
-    # (31 s vs 11 s at sf1 without it). count(*) OVER (PARTITION BY g)
-    # computes the same uncapped df in the single g-keyed shuffle the
-    # join's probe side paid anyway, the lineage is linear (one
-    # consumer — no checkpoint, no second scan), and the per-shingle
-    # partitions a window must buffer are exactly the df counts the
-    # cap is about to bound (a hot stop-shingle buffers at most its
-    # posting list, the same rows the old join shuffled to one reducer).
+    # table: a single g-keyed shuffle with a linear lineage (no second
+    # consumer, so no checkpoint), where a groupBy(g) joined back would
+    # shuffle the corpus-scale postings twice. A window partition
+    # buffers at most one shingle's posting list, the rows the cap is
+    # about to bound.
     capped = exploded.withColumn(
         "__df", F.sum("__w").over(Window.partitionBy("g"))
     ).filter(F.col("__df") <= max_shingle_df)
@@ -623,12 +606,9 @@ def _ngram_pairs_core(
         )
         .localCheckpoint(eager=True)
     )
-    # prefilters run against τ_pre = τ - 5e-7, not τ: the emitted
-    # contract is round(jaccard, 6) >= τ, so a pair whose true J lies in
-    # [τ-5e-7, τ) and rounds up must survive every prefilter and reach
-    # the verify (ADVICE r08). τ_pre is smaller, so every use below is
-    # monotone-safe: longer prefixes, weaker size/positional/count
-    # screens — never a lost qualifying pair.
+    # prefilters run against τ_pre = τ - 5e-7, not τ; τ_pre is smaller,
+    # so every use below is monotone-safe: longer prefixes, weaker
+    # size/positional/count screens — never a lost qualifying pair.
     tau_pre = max(jaccard_threshold - 5e-7, 0.0)
     # α underestimates shave with a 1e-9 epsilon: a too-small α only
     # lengthens the prefix (safe); a float overshoot would truncate it
@@ -716,10 +696,7 @@ def _ngram_pairs_core(
     pairs = (
         verified.withColumn(
             "jaccard",
-            # raw integer-count ratio, no decimal re-round (kmv
-            # discipline)
-            F.col("__inter")
-            / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
+            _jaccard(F.col("__inter"), F.col("__sza"), F.col("__szb")),
         )
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
@@ -797,52 +774,37 @@ def dup_clusters(
     cluster_id = min member id — the keep-one-per-cluster dedup step
     (SURVEY.md §7.1: shingle → minhash → band → pairs → components).
 
-    Min-label propagation with pointer jumping: each round every node
-    takes the minimum label over its neighborhood, then adopts its
-    label's own label (path halving) — convergence in O(log diameter)
-    rounds, so even pathological duplicate chains finish fast. Each
-    round is two key-joins + a min-agg; labels are checkpointed per
-    round so the plan does not grow. Raises if ``max_iterations``
-    rounds don't converge.
+    The physical strategy is SIZE-ADAPTIVE. The edge table is
+    materialized first; when it holds at most ``small_graph_edges``
+    rows (the common case, since every candidate generator caps its
+    blocks/bands) components run as a single-task union-find
+    (:func:`_components_single_task`): ONE job instead of O(log d)
+    rounds of join + checkpoint + check jobs, whose cost on a small
+    match graph is pure scheduler floor. The 1M default is sized to
+    that task's memory (a ~16 MB Arrow batch plus a ~100 MB Python
+    dict). The single task is materialized eagerly and FALLS BACK to
+    the distributed loop on task failure.
 
-    Physical strategy is SIZE-ADAPTIVE (r11, the broadcast-vs-shuffle
-    analog for iterative graph work): the edge table is materialized
-    first (it is needed either way), and when it holds at most
-    ``small_graph_edges`` rows — the common case, since every upstream
-    candidate generator caps its blocks/bands — components run as a
-    single-task union-find (:func:`_components_single_task`): ONE job
-    instead of O(log d) iterations of join+checkpoint+check jobs whose
-    cost on a small match graph is pure scheduler floor (x209's
-    component stage was ~5 s of job floor for a 4.4k-edge graph at
-    sf0.1). The default threshold is sized to the single task's MEMORY,
-    not to when the distributed loop gets competitive: 1M bidirectional
-    edges is a ~16 MB Arrow batch plus a Python dict union-find of at
-    most 1M entries (~100 B+/entry ≈ 100 MB) — comfortable inside a
-    default executor, where a 5M default could straggle or OOM right at
-    the threshold. Above the threshold the distributed min-label loop
-    runs unchanged — at 100 TB a pair graph can be billions of edges (the
-    caps bound per-block work, not the total), and nothing here ever
-    collects to the driver. The single-task path is materialized eagerly
-    and FALLS BACK to the distributed loop on task failure (a 1M-edge
-    graph with pathological node count can still OOM one executor; the
-    fallback recovers instead of failing the query). Output is
-    bit-identical either way
-    (union-by-min-root ≡ converged min-label propagation; both label a
-    component by its minimum member id). Per-round cost of the big-path
-    loop is one checkpoint job plus one bounded scan: the old-vs-new
-    comparison rides the checkpointed frame as a ``__chg`` flag, so the
-    convergence check is a filter over in-memory blocks, not a third
-    join.
+    Above the threshold, min-label propagation with pointer jumping:
+    each round every node takes the minimum label over its
+    neighborhood, then adopts its label's own label (path halving), so
+    convergence takes O(log diameter) rounds. Each round is two
+    key-joins + a min-agg, checkpointed so the plan does not grow; the
+    old-vs-new comparison rides the checkpoint as a ``__chg`` flag, so
+    the convergence check is a filter over in-memory blocks. Raises if
+    ``max_iterations`` rounds don't converge. Nothing is ever collected
+    to the driver, and both strategies label a component by its
+    minimum member id, so output is bit-identical either way.
     """
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        # LAZY + count (r14 job-floor audit): the strategy-pick count
-        # below is the first consumer, so it materializes the
-        # checkpoint inside its own job — one blocking job instead of
-        # the former eager-build-then-count two. No concurrent-consumer
-        # race: everything after the count reads persisted blocks.
+        # LAZY + count: the strategy-pick count below is the first
+        # consumer, so it materializes the checkpoint inside its own
+        # job — one blocking job instead of an eager build plus a
+        # count. No concurrent-consumer race: everything after the
+        # count reads persisted blocks.
         .localCheckpoint(eager=False)
     )
     # bounded job over the checkpointed blocks — the strategy pick
@@ -853,8 +815,8 @@ def dup_clusters(
         # a lazy return would surface that failure downstream, inside
         # whatever action consumes the clusters. Materializing bounds
         # the failure to this call so it can FALL BACK to the
-        # distributed min-label loop instead of failing the query
-        # (VERDICT r12 task 5). Output is bit-identical either way, so
+        # distributed min-label loop instead of failing the query.
+        # Output is bit-identical either way, so
         # the fallback is invisible except in the log.
         try:
             return _components_single_task(
@@ -909,12 +871,12 @@ def dup_clusters(
                     != F.col("__old")
                 ).alias("__chg"),
             )
-            # lazy (r14 job-floor audit): the convergence probe below is
-            # the first consumer and runs sequentially, so it
-            # materializes the round's frame inside its own job — one
-            # blocking job per round instead of two. (The initial
-            # ``labels`` checkpoint above stays EAGER: it feeds three
-            # concurrent stages of the round job, the r04 lazy-race.)
+            # lazy: the convergence probe below is the first consumer
+            # and runs sequentially, so it materializes the round's
+            # frame inside its own job — one blocking job per round
+            # instead of two. (The initial ``labels`` checkpoint above
+            # stays EAGER: it feeds three concurrent stages of the
+            # round job, the lazy-checkpoint race.)
             .localCheckpoint(eager=False)
         )
         changed = new_labels.filter(F.col("__chg")).limit(1).count()
@@ -1021,23 +983,16 @@ def chunked_signature_pairs(
     ``max_bucket_size`` like the LSH band join. Returns
     ``(id_a, id_b, hamming)``.
     """
-    banded = base.select(
-        "id", "sig", F.posexplode("sig").alias("chunk_idx", "chunk_val")
-    )
-    counts = banded.groupBy("chunk_idx", "chunk_val").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    banded = (
-        banded.join(counts, ["chunk_idx", "chunk_val"])
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
+    banded = _cap(
+        base.select("id", "sig", F.posexplode("sig").alias("band", "bucket")),
+        max_bucket_size,
     )
     l, r = banded.alias("l"), banded.alias("r")
     return (
         l.join(
             r,
-            (F.col("l.chunk_idx") == F.col("r.chunk_idx"))
-            & (F.col("l.chunk_val") == F.col("r.chunk_val"))
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
             & (F.col("l.id") < F.col("r.id")),
         )
         .select(
@@ -1181,10 +1136,10 @@ def prefix_jaccard_pairs(
     t), so the candidate self-join runs on the prefix postings — a
     t-proportional fraction of the full posting list, with the HOTTEST
     (high-df) shingles preferentially excluded, which is where the df²
-    join blowup lives. Candidates are then verified with an exact
-    intersection count (two candidate-driven joins against the full
-    postings), so the result is bit-identical to the uncapped
-    brute-force pair join — which is literally the oracle.
+    join blowup lives. Candidates then pass the exact posting-count
+    verify (:func:`_count_based_verify`), so the result is
+    bit-identical to the uncapped brute-force pair join — which is
+    literally the oracle.
 
     Scale profile: one shingle shuffle (df counts), one id-keyed window
     (prefix ranks), the prefix self-join (the pruned quadratic term),
@@ -1193,21 +1148,17 @@ def prefix_jaccard_pairs(
     which prefix ordering actively minimizes.
     """
     t = jaccard_threshold
-    base = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
+    # eager: the df counts, the prefix window and both verify sides
+    # read the postings, and sizes count off them instead of
+    # re-shingling the corpus
+    posts = _postings(df, id_col, text_col, shingle_k).localCheckpoint(
+        eager=True
     )
-    # eager for the same mid-job-materialization reason as
-    # minhash_lsh_pairs (VERDICT r04 #8); sizes derive from the hash
-    # counts (distinct shingles) instead of re-shingling the corpus
-    exploded = base.select(
-        "id", F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("g")
-    ).localCheckpoint(eager=True)
-    sizes = exploded.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
-    df_counts = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
+    sizes = _set_sizes(posts)
+    df_counts = posts.groupBy("g").agg(F.count(F.lit(1)).alias("__df"))
     w = Window.partitionBy("id").orderBy(F.asc("__df"), F.asc("g"))
     prefix = (
-        exploded.join(df_counts, "g")
+        posts.join(df_counts, "g")
         .withColumn("__pos", F.row_number().over(w))
         .join(sizes, "id")
         .filter(
@@ -1222,29 +1173,7 @@ def prefix_jaccard_pairs(
         .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
         .distinct()
     )
-    pa = exploded.select(F.col("id").alias("id_a"), "g")
-    pb = exploded.select(F.col("id").alias("id_b"), "g")
-    inter = (
-        cand.join(pa, "id_a")
-        .join(pb, ["id_b", "g"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__inter"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("__sza"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("__szb"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            # raw integer-count ratio, no decimal re-round (kmv
-            # discipline)
-            F.col("__inter")
-            / (F.col("__sza") + F.col("__szb") - F.col("__inter")),
-        )
-        .filter(F.col("jaccard") >= t)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _count_based_verify(cand, posts, posts, sizes, sizes, t)
 
 
 def minhash_band_table(
@@ -1260,46 +1189,19 @@ def minhash_band_table(
     shingler: Callable[[Column, int], Column] = word_shingles,
 ) -> DataFrame:
     """``(id, band, bucket)`` LSH index rows for a corpus — the table a
-    production pipeline PERSISTS as its near-dup index (partitioned by
-    band/bucket) so daily ingests join against it instead of
-    recomputing corpus signatures. Same signature/banding parameters
-    must be used on both sides of any later join (seed included).
-
-    ``hash_fn``/``portable_bands`` mirror :func:`minhash_lsh_pairs`:
-    the defaults are the xxhash64 fast path; passing
-    :func:`portable_token_hash60` + ``portable_bands=True`` makes the
-    whole index recomputable by an external SQL engine. ``shingler``
-    picks the shingle granularity — :func:`word_shingles` (documents)
-    or :func:`char_shingles` (short records, where word grams collapse
-    to one shingle and distinct values can never collide)."""
-    rows = num_perm // bands
-    sh_base = df.select(
-        F.col(id_col).alias("id"),
-        shingler(F.col(text_col), shingle_k).alias("sh"),
+    production pipeline PERSISTS (partitioned by band/bucket) so daily
+    ingests probe it instead of recomputing corpus signatures. Both
+    sides of any later join must use the same parameters, seed
+    included. ``hash_fn``/``portable_bands`` mirror
+    :func:`minhash_lsh_pairs`; ``shingler`` picks :func:`word_shingles`
+    (documents) or :func:`char_shingles` (short records)."""
+    return _band_table(
+        _postings(df, id_col, text_col, shingle_k, hash_fn, shingler),
+        num_perm,
+        bands,
+        seed,
+        portable_bands,
     )
-    exploded = sh_base.select(
-        "id",
-        F.explode(
-            F.transform("sh", hash_fn or (lambda s: F.xxhash64(s)))
-        ).alias("g"),
-    )
-    sig_tbl = _signature_from_hashed(exploded, num_perm, seed)
-
-    def _bucket(cols):
-        joined = F.concat_ws("_", *cols)
-        if portable_bands:
-            return F.conv(F.substring(F.md5(joined), 1, 15), 16, 10).cast(
-                "bigint"
-            )
-        return F.xxhash64(joined)
-
-    buckets = F.array(
-        *[
-            _bucket([F.col(f"m{j * rows + i}") for i in range(rows)])
-            for j in range(bands)
-        ]
-    )
-    return sig_tbl.select("id", F.posexplode(buckets).alias("band", "bucket"))
 
 
 def incremental_minhash_pairs(
@@ -1318,90 +1220,37 @@ def incremental_minhash_pairs(
 ) -> DataFrame:
     """Near-dup screen of a NEW batch against an already-curated corpus
     plus within-batch pairs — the MinHash complement of
-    :func:`incremental_dedup` (exact fingerprints). Returns
-    ``(id_a, id_b, jaccard, against)`` where ``against`` is
-    ``'corpus'`` (id_a = batch doc, id_b = corpus doc) or ``'batch'``
-    (both new, id_a < id_b).
+    :func:`incremental_dedup`. Returns ``(id_a, id_b, jaccard,
+    against)``: ``'corpus'`` rows pair a batch doc (id_a) with a corpus
+    doc (id_b), ``'batch'`` rows pair two batch docs (id_a < id_b).
 
-    The corpus×corpus join NEVER happens: candidates come from the
-    batch's band buckets probing the corpus band table (in production a
-    persisted index — :func:`minhash_band_table` — so the corpus side
-    is a partitioned read, not a recompute; here it is derived on the
-    fly from the corpus frame). Join cost scales with batch size ×
-    bucket hit rate, not corpus²; this is how a 100 TB curated corpus
-    admits a daily delta. Caller guarantees disjoint id spaces.
+    The corpus×corpus join never happens: the batch's band table
+    probes the corpus band table (in production the persisted
+    :func:`minhash_band_table`), so cost scales with batch size ×
+    bucket hit rate, not corpus². Caller guarantees disjoint id spaces.
     """
-    nb = minhash_band_table(
-        new_batch, id_col, text_col, shingle_k, num_perm, bands, seed,
-        hash_fn=hash_fn, portable_bands=portable_bands,
+    nb, cb = (
+        minhash_band_table(
+            d, id_col, text_col, shingle_k, num_perm, bands, seed,
+            hash_fn=hash_fn, portable_bands=portable_bands,
+        )
+        for d in (new_batch, corpus)
     )
-    cb = minhash_band_table(
-        corpus, id_col, text_col, shingle_k, num_perm, bands, seed,
-        hash_fn=hash_fn, portable_bands=portable_bands,
-    )
-    # cap pathological buckets by their CORPUS population (the side
-    # that can be huge); the batch side additionally self-caps below
-    c_counts = cb.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    cb = (
-        cb.join(c_counts, ["band", "bucket"])
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
-    )
-
-    def shingle_frames(df):
-        sh = df.select(
+    # corpus buckets cap by their CORPUS population (the side that can
+    # be huge); the batch's own buckets cap for the within-batch join
+    cb = _cap(cb, max_bucket_size)
+    new_h, cor_h = (
+        d.select(
             F.col(id_col).alias("id"),
-            word_shingles(F.col(text_col), shingle_k).alias("sh"),
+            _hashed_shingles(F.col(text_col), shingle_k, hash_fn).alias("ga"),
         )
-        posts = sh.select(
-            "id",
-            F.explode(
-                F.transform("sh", hash_fn or (lambda s: F.xxhash64(s)))
-            ).alias("g"),
-        )
-        return posts, sh.select("id", F.size("sh").alias("sz"))
-
-    new_posts, new_sizes = shingle_frames(new_batch)
-    cor_posts, cor_sizes = shingle_frames(corpus)
-
-    cross_cands = (
-        nb.alias("l")
-        .join(
-            cb.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
+        for d in (new_batch, corpus)
     )
-    cross = _count_based_verify(
-        cross_cands, new_posts, cor_posts, new_sizes, cor_sizes,
-        jaccard_threshold,
+    cross = _array_verify(
+        _band_candidates(nb, cb), new_h, cor_h, jaccard_threshold
     ).withColumn("against", F.lit("corpus"))
-
-    n_counts = nb.groupBy("band", "bucket").agg(
-        F.count(F.lit(1)).alias("__n")
-    )
-    nb_capped = (
-        nb.join(n_counts, ["band", "bucket"])
-        .filter(F.col("__n") <= max_bucket_size)
-        .drop("__n")
-    )
-    within_cands = (
-        nb_capped.alias("l")
-        .join(
-            nb_capped.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
-    within = _count_based_verify(
-        within_cands, new_posts, new_posts, new_sizes, new_sizes,
+    within = _array_verify(
+        _band_candidates(_cap(nb, max_bucket_size)), new_h, new_h,
         jaccard_threshold,
     ).withColumn("against", F.lit("batch"))
     return cross.unionByName(within)
@@ -1413,14 +1262,12 @@ def incremental_minhash_pairs(
 
 
 class NearDupIndex(NamedTuple):
-    """The three tables a production pipeline PERSISTS (partitioned by
-    band/bucket resp. bucketed by id) so daily ingests never touch the
-    corpus text again: the hot-bucket-capped band index, the per-doc
-    shingle-hash posting table (the verify side), and the per-doc
-    shingle-set sizes. Built once by :func:`build_near_dup_index`;
-    every probe (:func:`probe_near_dup_index`) is ingest-sized."""
+    """The three tables a production pipeline PERSISTS so daily
+    ingests never touch the corpus text again. Built once by
+    :func:`build_near_dup_index`; every :func:`probe_near_dup_index`
+    is ingest-sized."""
 
-    band_index: DataFrame  # (old_id, band, bucket), cap already applied
+    band_index: DataFrame  # (band, bucket, old_id), cap already applied
     hashed: DataFrame      # (old_id, h) corpus shingle hashes
     sizes: DataFrame       # (old_id, szc)
 
@@ -1439,31 +1286,19 @@ def build_near_dup_index(
 ) -> NearDupIndex:
     """Build the persisted near-dup index for a curated corpus — the
     ONCE-per-corpus half of :func:`incremental_near_dup`. The hot-bucket
-    cap is applied HERE, at index build (a degenerate corpus bucket
-    would otherwise make every future probe quadratic); the posting and
-    size tables serve the exact-Jaccard verify so probes never re-read
-    corpus text. At 100 TB the band index is bands × corpus narrow rows
-    and the posting table is one long per shingle — both a small
-    fraction of the text they index, written once, read per-ingest."""
-    hf = hash_fn or (lambda c: F.xxhash64(c))
-    idx = minhash_band_table(
-        corpus_docs, id_col, text_col, shingle_k=shingle_k,
-        num_perm=num_perm, bands=bands, seed=seed, hash_fn=hash_fn,
-        portable_bands=portable_bands,
+    cap is applied HERE (a degenerate corpus bucket would make every
+    future probe quadratic); the posting and size tables serve the
+    count-based verify so probes never re-read corpus text."""
+    posts = _postings(corpus_docs, id_col, text_col, shingle_k, hash_fn)
+    sizes = _set_sizes(posts)
+    return NearDupIndex(
+        band_index=_cap(
+            _band_table(posts, num_perm, bands, seed, portable_bands),
+            max_bucket_size,
+        ).withColumnRenamed("id", "old_id"),
+        hashed=posts.select(F.col("id").alias("old_id"), F.col("g").alias("h")),
+        sizes=sizes.select(F.col("id").alias("old_id"), F.col("sz").alias("szc")),
     )
-    ok = (
-        idx.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= max_bucket_size)
-        .select("band", "bucket")
-    )
-    kept = idx.join(ok, ["band", "bucket"]).withColumnRenamed("id", "old_id")
-    hc = corpus_docs.select(
-        F.col(id_col).alias("old_id"),
-        F.explode(word_shingles(F.col(text_col), shingle_k)).alias("g"),
-    ).select("old_id", hf(F.col("g")).alias("h"))
-    szc = hc.groupBy("old_id").agg(F.count(F.lit(1)).alias("szc"))
-    return NearDupIndex(band_index=kept, hashed=hc, sizes=szc)
 
 
 def probe_near_dup_index(
@@ -1482,98 +1317,43 @@ def probe_near_dup_index(
 ) -> DataFrame:
     """The PER-INGEST half of :func:`incremental_near_dup`: band the new
     batch with the same seeded signature family, probe the persisted
-    index with one band+bucket equi-join, and pay the exact
-    hashed-shingle Jaccard verify only on surviving candidates. All
-    signature parameters (shingle_k/num_perm/bands/seed/hash_fn) MUST
-    match the index build. Cost is ingest-sized banding + a probe join
-    whose corpus side is index rows + candidate-cardinality verify
-    joins — never corpus-pairs-sized. Output contract is identical to
-    :func:`incremental_near_dup` (one argmax decision row per matched
-    new doc).
+    index with one band+bucket equi-join, and pay the exact Jaccard
+    verify only on the candidates, so cost is ingest-sized, never
+    corpus-pairs-sized. All signature parameters
+    (shingle_k/num_perm/bands/seed/hash_fn/portable_bands) MUST match
+    the index build.
 
-    ``max_candidates_per_probe`` (opt-in, VERDICT r12 task 2) bounds
-    the verify cost per ingest doc in duplicate-dense corpora: when a
-    new doc's buckets hold many corpus docs (e.g. a template with
-    hundreds of legitimate near-copies), only the top-m candidates by
-    BAND-AGREEMENT COUNT (the number of bands in which the pair
-    co-bucketed — a monotone proxy for signature similarity, hence for
-    Jaccard; ties → min old_id) proceed to the exact verify. The argmax
-    decision is preserved whenever the true best co-buckets in at least
-    as many bands as the m-th candidate — for an exact or near-exact
-    dup that is ALL bands, so the cap cannot evict it
-    (``test_probe_candidate_cap_keeps_argmax``). Candidate counts on
-    the uniform fixtures stay tiny (p99 = 2 at sf0.1); the knob exists
-    for the duplicate-dense regime, measured in SCALE.md r13."""
-    from pyspark.sql import Window
-
-    hf = hash_fn or (lambda c: F.xxhash64(c))
-    probe = minhash_band_table(
-        new_docs, id_col, text_col, shingle_k=shingle_k,
-        num_perm=num_perm, bands=bands, seed=seed, hash_fn=hash_fn,
-        portable_bands=portable_bands,
-    ).withColumnRenamed("id", "new_id")
-    if max_candidates_per_probe is None:
-        cands = (
-            probe.join(index.band_index, ["band", "bucket"])
-            .select("new_id", "old_id")
-            .distinct()
-        )
-    else:
-        # same shuffle shape as the .distinct() spelling (one agg keyed
-        # on the pair), plus a per-new_id window whose partitions are
-        # bounded by bands × index-side bucket cap
-        agree = (
-            probe.join(index.band_index, ["band", "bucket"])
-            .groupBy("new_id", "old_id")
-            .agg(F.count(F.lit(1)).alias("__bands"))
-        )
-        wc = Window.partitionBy("new_id").orderBy(
-            F.col("__bands").desc(), F.col("old_id")
-        )
-        cands = (
-            agree.withColumn("__crn", F.row_number().over(wc))
-            .filter(F.col("__crn") <= max_candidates_per_probe)
-            .select("new_id", "old_id")
-        )
-    hn = new_docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), shingle_k)).alias("g"),
-    ).select("id", hf(F.col("g")).alias("h"))
-    szn = hn.groupBy("id").agg(F.count(F.lit(1)).alias("szn"))
-    # candidate-cardinality verify: both joins are equi-keyed on
-    # (doc id, shingle hash) — the x6b intersection-count shape
-    hn2 = hn.select(F.col("id").alias("new_id"), F.col("h").alias("ha"))
-    hc2 = index.hashed.select(
-        F.col("old_id").alias("__oid"), F.col("h").alias("hb")
+    ``max_candidates_per_probe`` (opt-in) bounds the verify cost per
+    ingest doc in duplicate-dense corpora: only the top-m candidates by
+    BAND-AGREEMENT COUNT (bands in which the pair co-bucketed, a
+    monotone proxy for Jaccard; ties → min old_id) are verified. The
+    argmax survives whenever the true best co-buckets in at least as
+    many bands as the m-th candidate — ALL bands for an exact or
+    near-exact dup (``test_probe_candidate_cap_keeps_argmax``)."""
+    new_posts = _postings(new_docs, id_col, text_col, shingle_k, hash_fn)
+    cands = _band_candidates(
+        _band_table(new_posts, num_perm, bands, seed, portable_bands),
+        index.band_index.withColumnRenamed("old_id", "id"),
+        top_m=max_candidates_per_probe,
     )
-    inter = (
-        cands.join(hn2, "new_id")
-        .join(
-            hc2,
-            (F.col("old_id") == F.col("__oid"))
-            & (F.col("ha") == F.col("hb")),
-        )
-        .groupBy("new_id", "old_id")
-        .agg(F.count(F.lit(1)).alias("__i"))
+    scored = _count_based_verify(
+        cands,
+        new_posts,
+        index.hashed.select(F.col("old_id").alias("id"), F.col("h").alias("g")),
+        _set_sizes(new_posts),
+        index.sizes.select(F.col("old_id").alias("id"), F.col("szc").alias("sz")),
+        jaccard_threshold,
     )
-    scored = (
-        inter.join(szn.withColumnRenamed("id", "new_id"), "new_id")
-        .join(index.sizes, "old_id")
-        .withColumn(
-            "jaccard",
-            # raw integer-count ratio, no decimal re-round (kmv
-            # discipline)
-            F.col("__i") / (F.col("szn") + F.col("szc") - F.col("__i")),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    w = Window.partitionBy("new_id").orderBy(
-        F.col("jaccard").desc(), F.col("old_id")
+    w = Window.partitionBy("id_a").orderBy(
+        F.col("jaccard").desc(), F.col("id_b")
     )
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select("new_id", F.col("old_id").alias("dup_of"), "jaccard")
+        .select(
+            F.col("id_a").alias("new_id"), F.col("id_b").alias("dup_of"),
+            "jaccard",
+        )
     )
 
 
@@ -1592,36 +1372,19 @@ def incremental_near_dup(
     portable_bands: bool = False,
 ) -> DataFrame:
     """The DAILY-INGEST near-dup path: check new documents against an
-    EXISTING corpus without recomputing corpus pairs. The corpus's
-    ``(id, band, bucket)`` table (:func:`minhash_band_table`) is the
-    persisted index a production pipeline keeps partitioned by
-    (band, bucket); the ingest batch bands itself with the same
-    signature parameters, probes the index with ONE band+bucket
-    equi-join, and only the surviving candidates pay the exact
-    hashed-shingle Jaccard verify. Emits one decision row per matched
-    new doc: ``(new_id, dup_of, jaccard)`` with ``dup_of`` the
-    argmax-jaccard corpus doc (ties → min id) at
-    ``round(j, 6) >= jaccard_threshold``. New-vs-new duplicates inside
-    the ingest batch are a separate :func:`minhash_lsh_pairs` run —
-    this operator is the index-probe path.
+    EXISTING corpus without recomputing corpus pairs. Emits one decision
+    row per matched new doc, ``(new_id, dup_of, jaccard)``, with
+    ``dup_of`` the argmax-jaccard corpus doc (ties → min id) at
+    ``jaccard >= jaccard_threshold``. New-vs-new duplicates inside the
+    batch are a separate :func:`minhash_lsh_pairs` run.
 
-    Scale: the corpus is scanned to (re)build the index here for
-    self-containment; in production the index is READ, so per-ingest
-    cost is ingest-sized banding + a probe join whose corpus side is
-    index rows (bands × corpus, narrow), + candidate-cardinality
-    verify joins. The hot-bucket cap applies on the INDEX side (a
-    degenerate corpus bucket would make every probe quadratic — cap at
-    index build, exactly like the self-join pipelines). With
-    ``portable_token_hash60`` + ``portable_bands=True`` every stage is
-    ANSI-SQL-replayable (the x6b idiom), including the argmax: jaccards
-    are bit-identical, so the (jaccard DESC, id) rank order is too.
-
-    This is exactly :func:`build_near_dup_index` composed with
-    :func:`probe_near_dup_index` — kept as one self-contained call so
-    the driver's oracle can replay corpus + ingest from the same raw
-    table; production (and ``bench.py``'s probe-only entry) uses the
-    two halves so the index is built once and every ingest pays only
-    the probe."""
+    Exactly :func:`build_near_dup_index` composed with
+    :func:`probe_near_dup_index`, kept as one call so an oracle can
+    replay corpus + ingest from one raw table. Production (and
+    ``bench.py``'s probe-only entry) persists the index once and pays
+    only the probe per ingest. With ``portable_token_hash60`` +
+    ``portable_bands=True`` every stage, the argmax included, is
+    ANSI-SQL-replayable."""
     index = build_near_dup_index(
         corpus_docs, id_col, text_col, shingle_k=shingle_k,
         num_perm=num_perm, bands=bands, seed=seed,

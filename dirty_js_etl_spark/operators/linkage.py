@@ -201,43 +201,27 @@ def lsh_link_pairs(
     record string, verified by Levenshtein ≤ ``max_distance``. Returns
     (id_a, id_b, distance), id_a < id_b.
 
-    ``dedup_values`` (default True) collapses identical record VALUES to
-    their min-id representative before banding, so the output pairs
-    DISTINCT values only. This is the dedup-then-link discipline every
-    production linkage pipeline applies before a pair enumerator:
-    duplicate-heavy catalogs carry value cliques (c identical records),
-    and enumerating record-level pairs inside them is O(c²) — on the
-    10×-replica sf1 fixture the record-level spelling emits 52.9M pairs
-    (~100× the value-level 0.5M) with zero information the value pairs
-    don't carry. Identity linking (same value ⇒ same entity) belongs to
-    the exact-dedup pass; union it with these value pairs (expanded
-    through the value→id map) before :func:`resolve_entities`. Pass
-    ``dedup_values=False`` to enumerate raw record pairs.
+    :func:`blocked_link_pairs` misses a typo in the blocking token and
+    :func:`sorted_neighborhood_pairs` one in the sort prefix; LSH bands
+    over the record's CHARACTER shingles miss neither. Char grams suit
+    short records: a 2-3 word descriptor has ONE word shingle, while a
+    one-character typo in an n-char record kills ≤ k char grams
+    (J ≈ (n-2k)/n, caught with probability 1-(1-J^rows)^bands: ≥ 0.99
+    at J ≥ 0.5 for k=3, 16 bands × 2 rows).
 
-    Why it exists: :func:`blocked_link_pairs` blocks on an exact key
-    (a typo in the blocking token itself escapes the block) and
-    :func:`sorted_neighborhood_pairs` needs the typo to leave the
-    record sort-adjacent (a typo in the sort prefix breaks that). LSH
-    bands of the record's CHARACTER shingles have neither failure
-    mode — and char grams, not word grams, are the right granularity
-    for short linkage records: a 2-3 word descriptor carries ONE word
-    shingle, so distinct values would never collide, while a
-    single-character typo in an n-char record kills ≤ k of its
-    ~n char-grams (J ≈ (n-2k)/n, caught with probability
-    1-(1-J^rows)^bands — k=3, 16 bands × 2 rows: ≥ 0.99 at J ≥ 0.5).
-    Union the three passes before :func:`resolve_entities` for
-    multi-pass linkage.
+    ``dedup_values`` (default True) collapses identical record VALUES
+    to their min-id representative before banding, so only DISTINCT
+    values pair: a c-record identical clique would otherwise cost O(c²)
+    pairs that carry no information (52.9M vs 0.5M pairs on the
+    10×-replica sf1 fixture). Identity linking belongs to the
+    exact-dedup pass. ``dedup_values=False`` enumerates record pairs.
 
-    Scale: signature build is one map-side-combined aggregation over
-    exploded shingles; the only corpus-scale shuffle is the
-    (band, bucket) self-join, capped by ``max_bucket_size`` (the same
-    hot-bucket guard as the near-dup LSH — a degenerate bucket would
-    reintroduce the quadratic); the Levenshtein verify joins are
-    candidate-cardinality. With ``portable_bands=True`` +
-    ``portable_token_hash60`` every stage — shingles, signatures,
-    band buckets, cap, candidates, distances — is recomputable by an
-    ANSI-SQL oracle (the x6b replay idiom)."""
+    The LSH stages are the shared MinHash-LSH core
+    (``operators/dedup.py``); with ``portable_token_hash60`` +
+    ``portable_bands=True`` every stage is ANSI-SQL-replayable."""
     from dirty_js_etl_spark.operators.dedup import (
+        _band_candidates,
+        _cap,
         char_shingles,
         minhash_band_table,
     )
@@ -248,16 +232,11 @@ def lsh_link_pairs(
         # one value-keyed shuffle (map-side combined min); every later
         # stage then works on distinct values, never on clique members
         recs = recs.groupBy("rec").agg(F.min("id").alias("id"))
-    # NO spread on recs (r14 negative result, measured before reverting):
-    # pinning the signature map's parallelism with spread_for_cpu(recs,
-    # "id") below the shared subtree kept AQE stage reuse intact but
-    # still regressed the bench in a flat-canary window (x208 1.64 →
-    # 1.98 s, x209 4.25 → 4.51 s): the extra pinned exchange adds a
-    # stage to every one of the four consumer paths, and the md5
-    # signature work it parallelizes is not the critical path here
-    # (x209's generator branches already back-fill the cores, the r13
-    # finding; x208's signature stage is ~0.8 s of a 1.6 s query and
-    # overlaps the band-count stage).
+    # No spread on recs: pinning the signature map's parallelism with
+    # spread_for_cpu(recs, "id") was measured in a flat-canary window
+    # and regressed the bench (x208 1.64 → 1.98 s, x209 4.25 → 4.51 s);
+    # the pinned exchange adds a stage to every consumer path and the
+    # md5 signature work it parallelizes is not the critical path.
     bt = minhash_band_table(
         recs,
         "id",
@@ -270,24 +249,7 @@ def lsh_link_pairs(
         portable_bands=portable_bands,
         shingler=char_shingles,
     )
-    ok = (
-        bt.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= max_bucket_size)
-        .select("band", "bucket")
-    )
-    kept = bt.join(ok, ["band", "bucket"])
-    l, r = kept.alias("l"), kept.alias("r")
-    cands = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
-        .distinct()
-    )
+    cands = _band_candidates(_cap(bt, max_bucket_size))
     ra = recs.select(F.col("id").alias("id_a"), F.col("rec").alias("__ra"))
     rb = recs.select(F.col("id").alias("id_b"), F.col("rec").alias("__rb"))
     dist = F.levenshtein(F.col("__ra"), F.col("__rb"))
@@ -415,46 +377,28 @@ def weighted_link_pairs(
     """Weighted multi-field record pairs (Fellegi–Sunter-lite): within
     each block, pairs whose score = Σ wᵢ · levenshtein(fieldᵢ_a,
     fieldᵢ_b) is ≤ ``max_score``. Returns (id_a, id_b, score),
-    id_a < id_b, score DOUBLE.
+    id_a < id_b, score DOUBLE. With a single field at weight 1.0 this
+    is exactly :func:`blocked_link_pairs` (property-tested). NULL
+    fields compare as empty strings (missing ≈ no evidence, costing
+    that field's length).
 
-    Real catalogs weight per-field agreement — a brand mismatch should
-    cost more than a typo in a free-text name — where
-    :func:`blocked_link_pairs` scores one Levenshtein over the whole
-    concatenated record (every character equally important). With a
-    single field and weight 1.0 this degenerates exactly to
-    :func:`blocked_link_pairs` (property-tested). NULL fields compare
-    as empty strings (missing ≈ no evidence, costing that field's
-    length — the replayable simplification of Fellegi–Sunter's
-    missing-at-random term).
+    Scale shape is :func:`blocked_link_pairs`' (value-level dedup, the
+    distinct-value hot-block cap, ONE block-keyed shuffle, the score
+    evaluated INSIDE the join condition) plus two LOSSLESS per-field
+    prefilters: wᵢ·dᵢ ≤ score ≤ S forces dᵢ ≤ ⌊S/wᵢ⌋, so (a) a
+    char-length difference above ⌊S/wᵢ⌋ rejects with two length()
+    calls, and (b) the THRESHOLDED JVM levenshtein (banded O(n·cap) DP)
+    rejects without the full O(n·m) DP. Both are implied by the score
+    bound, so an ANSI-SQL oracle replays the plain inequality; weights
+    chosen as binary-exact doubles keep the score sum bit-stable.
 
-    Scale shape is :func:`blocked_link_pairs`' — value-level dedup
-    first (min-id representative per distinct (fields…, block) tuple),
-    the distinct-value hot-block cap, ONE block-keyed shuffle, and the
-    weighted score evaluated INSIDE the join condition — plus two
-    LOSSLESS per-field prefilters derived from the weights, ordered
-    cheapest-first in the join conjunction: wᵢ·dᵢ ≤ score ≤ S forces
-    dᵢ ≤ ⌊S/wᵢ⌋, so (a) a char-length difference > ⌊S/wᵢ⌋ (a lower
-    bound on Levenshtein) rejects with two length() calls, and (b) the
-    THRESHOLDED JVM levenshtein (banded O(n·cap) DP, Spark 3.5+)
-    rejects without ever running the full O(n·m) DP; only survivors
-    evaluate the exact score. Neither prefilter changes the output set
-    (both are implied by score ≤ S with non-negative terms), so the
-    ANSI-SQL oracle replays the plain score inequality. Literal weights
-    keep every stage SQL-replayable (the x208 oracle idiom); weights
-    chosen as binary-exact doubles (1.0, 0.5, 2.0 …) make the score
-    sum bit-stable across engines.
-
-    ``chunk_field`` (r11) switches candidate GENERATION from the
-    quadratic within-block enumeration to the lossless PassJoin
-    chunk-signature equi-join on that field (:func:`_chunk_candidates`
-    — its per-field cap dᵢ = ⌊S/wᵢ⌋ is implied by score ≤ S, so every
-    qualifying pair is generated; the full score verifies after). Pick
-    the longest/most-selective capped field. Output is IDENTICAL
-    (hypothesis-tested against the brute force both ways); at sf0.1 the
-    x210 shape drops from 4.4M enumerated block pairs to
-    candidate-cardinality and ~2× wall. The ±d shift window and the
-    (d+1)-partition make the signature join's fan-out
-    (d+1)·(2d+1)² per probe record — constant, corpus-linear."""
+    ``chunk_field`` switches candidate GENERATION from the quadratic
+    within-block enumeration to the lossless PassJoin chunk-signature
+    equi-join on that field (:func:`_chunk_candidates`, with the
+    per-field cap dᵢ = ⌊S/wᵢ⌋); the full score verifies after, so the
+    output is IDENTICAL (hypothesis-tested). Pick the longest, most
+    selective capped field; at sf0.1 the x210 shape drops from 4.4M
+    enumerated block pairs to candidate-cardinality, ~2× faster."""
     if len(fields) != len(weights):
         raise ValueError("fields and weights must align")
     if any(w < 0 for w in weights):
@@ -476,7 +420,7 @@ def weighted_link_pairs(
     recs = (
         recs.join(sizes, "blk").filter(F.col("__n") <= max_block_size).drop("__n")
     )
-    # per-record field lengths computed ONCE before the self-join (r11):
+    # per-record field lengths computed ONCE before the self-join:
     # the length-difference guards fire on every candidate pair, and
     # referencing precomputed ints beats re-evaluating length() twice
     # per field per pair inside the join condition
@@ -490,8 +434,8 @@ def weighted_link_pairs(
     # probe side pinned to the configured parallelism: per-row join work
     # is |block| guarded Levenshteins; AQE's byte-based coalescing folds
     # the saturated value table (a few hundred KB) to ONE task otherwise
-    # (r13 profile: x210's enumeration was a single 4.5 s task). Same
-    # ADVICE-r13 caveat as blocked_link_pairs: keys (blk, fields…) don't
+    # (x210's enumeration was a single 4.5 s task). Same caveat as
+    # blocked_link_pairs: keys (blk, fields…) don't
     # satisfy the join's blk-alone distribution, so the pin relies on
     # the build side broadcasting (true while the value-deduped table is
     # dimension-sized); above the threshold the planner adds its own blk
@@ -572,40 +516,25 @@ def multi_pass_resolve(
     reps: DataFrame | None = None,
 ) -> DataFrame:
     """One entity id per record from the UNION of several candidate
-    passes — the composed pipeline the linkage family exists for
-    (catalog dedup runs exact-key blocking + sorted neighborhood + LSH
-    and resolves over everything they found). Returns (id, entity_id).
+    passes (exact-key blocking + sorted neighborhood + LSH), resolved
+    together. Returns (id, entity_id).
 
     ``pairs`` are (id_a, id_b[, ...]) match pairs from any mix of
     :func:`blocked_link_pairs` / :func:`sorted_neighborhood_pairs` /
     :func:`lsh_link_pairs` over the SAME ``record_col``. Each pass
-    value-dedups under its own keying (rec+block vs rec only), so pair
-    endpoints may name different representatives of the same record
-    value; both endpoints are first canonicalized to the RECORD-value
-    representative (min id per distinct record string) through one
-    id→rep map — identical record values always co-resolve (identity
-    linking is the exact-dedup pass), and components then run on the
-    value-level union graph, never on clique members. Scale shape:
-    one value-keyed shuffle for the rep map, candidate-cardinality
-    joins to canonicalize, pointer-jumping components on the pair
-    graph only, and a final value-keyed re-attach.
+    value-dedups under its own keying, so both endpoints are first
+    canonicalized to the RECORD-value representative (min id per
+    distinct record string): identical record values always
+    co-resolve, and components run on the value-level union graph.
 
-    NULL record values are PER-RECORD SINGLETONS (ADVICE r10): missing
-    data is not evidence of identity, so a NULL-rec record keeps its
-    own id as its representative instead of fusing with every other
-    NULL-rec record (at corpus scale one NULL-heavy column would
-    silently merge millions of rows into one entity). Such records
-    still resolve into an entity when a pair set names their id
-    directly (canonicalization maps them to themselves).
+    NULL record values are PER-RECORD SINGLETONS: missing data is not
+    evidence of identity, so a NULL-rec record keeps its own id as its
+    representative (it still joins an entity when a pair names its id).
 
-    ``reps`` (optional) is a precomputed ``(rec, rep)`` representative
-    map — min id per DISTINCT NON-NULL record value of ``df`` — for
-    callers that already materialized one (the x209 idiom: the same
-    localCheckpointed rep table feeds the LSH generator's
-    ``dedup_values=False`` path and this resolve, so the value-dedup
-    shuffle runs once per pipeline instead of once per stage). Must be
-    derived from the same ``df``/``record_col``; when omitted it is
-    computed here."""
+    ``reps`` (optional) is a precomputed ``(rec, rep)`` map — min id per
+    DISTINCT NON-NULL record value of the same ``df``/``record_col`` —
+    so a pipeline that already materialized one (x209 feeds the same
+    table to ``lsh_link_pairs(dedup_values=False)``) shuffles once."""
     from dirty_js_etl_spark.operators.dedup import dup_clusters
 
     if not pairs:

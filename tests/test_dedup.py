@@ -339,28 +339,66 @@ def test_incremental_minhash_matches_full_lsh_restricted(spark, catalog):
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     inc = incremental_minhash_pairs(batch, corpus)
     got = {
-        (r["id_a"], r["id_b"], r["against"]) for r in inc.collect()
+        (r["id_a"], r["id_b"], r["against"], r["jaccard"])
+        for r in inc.collect()
     }
     # no corpus-side ids ever appear as id_a in 'corpus' rows, and
     # 'batch' rows are batch-only
-    for a, b, side in got:
+    for a, b, side, _ in got:
         if side == "corpus":
             assert a % 10 == 0 and b % 10 != 0
         else:
             assert a % 10 == 0 and b % 10 == 0 and a < b
     # recall vs the full self-join LSH restricted to pairs touching the
-    # batch: every full-LSH pair with >=1 batch doc must be found
+    # batch: every full-LSH pair with >=1 batch doc must be found, and
+    # the posting-count verify must score it exactly as the array verify
     full = minhash_lsh_pairs(docs, "doc_id", "text")
     want = set()
     for r in full.collect():
-        a, b = r["id_a"], r["id_b"]
+        a, b, j = r["id_a"], r["id_b"], r["jaccard"]
         if a % 10 == 0 and b % 10 == 0:
-            want.add((a, b, "batch"))
+            want.add((a, b, "batch", j))
         elif a % 10 == 0:
-            want.add((a, b, "corpus"))
+            want.add((a, b, "corpus", j))
         elif b % 10 == 0:
-            want.add((b, a, "corpus"))
+            want.add((b, a, "corpus", j))
     assert want <= got
+
+
+def test_null_and_empty_text_across_lsh_entry_points(spark):
+    # NULL text shingles to a NULL array: it never bands, never pairs
+    # and never raises. Empty text is one empty shingle, so two empty
+    # docs pair at jaccard 1.0 — on the array verify (minhash_lsh_pairs)
+    # and the posting-count verify (the other three) alike.
+    from dirty_js_etl_spark.operators.dedup import (
+        incremental_minhash_pairs,
+        incremental_near_dup,
+        prefix_jaccard_pairs,
+    )
+
+    t = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, t), (6, t)],
+        "doc_id long, text string",
+    )
+    for fn in (minhash_lsh_pairs, prefix_jaccard_pairs):
+        got = {
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in fn(df, "doc_id", "text").collect()
+        }
+        assert got == {(3, 4, 1.0), (5, 6, 1.0)}, fn.__name__
+    batch = df.filter(F.col("doc_id") % 2 == 0)  # NULL, "", t
+    corpus = df.filter(F.col("doc_id") % 2 == 1)  # NULL, "", t
+    inc = {
+        (r["id_a"], r["id_b"], r["jaccard"], r["against"])
+        for r in incremental_minhash_pairs(batch, corpus).collect()
+    }
+    assert inc == {(4, 3, 1.0, "corpus"), (6, 5, 1.0, "corpus")}
+    probe = {
+        (r["new_id"], r["dup_of"], r["jaccard"])
+        for r in incremental_near_dup(batch, corpus, "doc_id", "text").collect()
+    }
+    assert probe == {(4, 3, 1.0), (6, 5, 1.0)}
 
 
 def test_incremental_minhash_planted_cross_dup(spark):

@@ -191,7 +191,15 @@ def test_dedup_verify_stage_never_forces_broadcast(spark):
     # plan) is an OOM at 100 TB.  AQE may still *choose* a runtime
     # broadcast when the actual size is small; that is the only safe
     # form, and it leaves no hint in the logical plan.
-    for name in ("x5_ngram_jaccard_pairs", "x6_minhash_lsh_pairs"):
+    for name in (
+        "x5_ngram_jaccard_pairs",
+        "x6_minhash_lsh_pairs",
+        "x165_prefix_jaccard_join",
+        "x167_incremental_minhash",
+        "x208_lsh_link_pairs",
+        "x209_multi_pass_resolution",
+        "x216_incremental_ingest_dedup",
+    ):
         df = all_queries()[name](spark, SF)
         opt = df._jdf.queryExecution().optimizedPlan().toString()
         assert "strategy=broadcast" not in opt, name
