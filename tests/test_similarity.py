@@ -179,13 +179,131 @@ def test_near_dup_lsh_recall_vs_exact(spark, catalog):
         assert exact[pair] == approx[pair]
 
 
-def test_corpus_not_shuffled_for_topk(spark, catalog):
-    """Plan shape: queries broadcast, corpus side has no exchange before
-    the join (the scoring stage is map-only over corpus partitions)."""
+def _plan_nodes(node):
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+@pytest.mark.parametrize(
+    "topk", ["brute_force_topk", "lsh_topk", "ivf_topk", "ivf_topk_seeded"]
+)
+def test_corpus_not_shuffled_for_topk(spark, catalog, topk):
+    """Plan shape: the query side is broadcast and the corpus side has
+    no exchange before the join beyond the ones reading the corpus
+    already has (scoring is map-only over corpus partitions)."""
+    from dirty_js_etl_spark.operators import similarity
+
+    def exchanges(node):
+        return [n.nodeName() for n in _plan_nodes(node) if "Exchange" in n.nodeName()]
+
     emb = catalog.read("embeddings")
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    out = getattr(similarity, topk)(emb, emb.filter(F.col("vec_id") < 5), k=10)
+    plan = out._jdf.queryExecution().executedPlan()
+    join = next(
+        n
+        for n in _plan_nodes(plan)
+        if n.nodeName() in ("BroadcastHashJoin", "BroadcastNestedLoopJoin")
+    )
+    if join.buildSide().toString() == "BuildRight":
+        streamed, built = join.left(), join.right()
+    else:
+        streamed, built = join.right(), join.left()
+    read = emb._jdf.queryExecution().executedPlan()
+    assert exchanges(streamed) == exchanges(read)
+    assert built.nodeName() == "BroadcastExchange"
+    assert "< 5)" in built.toString() and "< 5)" not in streamed.toString()
+
+
+@pytest.fixture(scope="module")
+def degenerate(spark):
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0, 0.0]),
+        (2, [0.0, 1.0, 0.0, 0.0]),
+        (3, [0.0, 0.0, 0.0, 0.0]),  # all-zero: no cosine
+        (4, None),  # NULL: no cosine
+        (5, [0.8, 0.2, 0.1, 0.0]),
+        (6, [0.0, 0.1, 1.0, 0.0]),
+    ]
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_null_and_zero_vectors_across_cosine_entry_points(spark, degenerate):
+    """A NULL or all-zero vector has no cosine: it is never a query
+    result, a neighbor or a pair, and raises nowhere (ANSI division by
+    zero, the IVF trainer's sample). semantic_dedup still returns one
+    row per input and keeps such rows. Every cell is probed, so both IVF
+    paths must equal brute force over the scorable rows; the 1-bit LSH
+    tables put the zero vector's bucket next to most queries'."""
+    from dirty_js_etl_spark.operators.similarity import (
+        embedding_near_dup_pairs_lsh,
+        ivf_topk,
+        ivf_topk_seeded,
+        semantic_dedup,
+    )
+
+    scorable = {0, 1, 2, 5, 6}
+    lsh = {"n_tables": 8, "bits_per_table": 1, "dim": 4}
+    # seeding picks corpus vectors as centroids; a NULL one has no
+    # oracle spelling, so the seeded twin sees the zero vector only
+    no_null = degenerate.filter(F.col("embedding").isNotNull())
+
+    def topk(df):
+        rows = df.collect()
+        assert all(r["score"] is not None for r in rows)
+        return {(r["query_id"], r["neighbor_id"]): r["score"] for r in rows}
+
+    exact = topk(brute_force_topk(degenerate, degenerate, k=10))
+    assert set(exact) == {(q, n) for q in scorable for n in scorable if q != n}
+    assert topk(ivf_topk(degenerate, degenerate, n_centroids=2, n_probe=2)) == exact
+    assert topk(ivf_topk_seeded(no_null, no_null, n_centroids=2, n_probe=2)) == exact
+    approx = topk(lsh_topk(degenerate, degenerate, **lsh))
+    assert approx and approx.items() <= exact.items()
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]): r["cos_sim"] for r in df.collect()}
+
+    all_pairs = pairs(embedding_near_dup_pairs(degenerate, threshold=-1.0))
+    assert set(all_pairs) == {(a, b) for a in scorable for b in scorable if a < b}
+    lsh_pairs = pairs(embedding_near_dup_pairs_lsh(degenerate, threshold=-1.0, **lsh))
+    assert lsh_pairs and lsh_pairs.items() <= all_pairs.items()
+
+    dedup = {
+        r["vec_id"]: r
+        for r in semantic_dedup(degenerate, threshold=0.99, n_centroids=2).collect()
+    }
+    assert sorted(dedup) == list(range(7))
+    assert dedup[3]["kept"] and dedup[4]["kept"]
+    assert dedup[4]["cell"] is None and dedup[3]["cell"] is not None
+
+
+def test_semantic_dedup_cell_is_trainer_argmax_dot(spark, catalog):
+    """Cells are the nearest centroid by squared L2; on the trainer's
+    unit-norm centroids that is the trainer's own argmax dot (x148's
+    assignment, checked here against numpy)."""
+    import numpy as np
+
+    from dirty_js_etl_spark.operators.similarity import (
+        semantic_dedup,
+        train_ivf_centroids,
+    )
+
+    emb = catalog.read("embeddings")
+    cent = np.array(train_ivf_centroids(emb, n_centroids=8))
+    cells = {
+        r["vec_id"]: r["cell"]
+        for r in semantic_dedup(emb, threshold=0.97, n_centroids=8).collect()
+    }
+    expect = {
+        r["vec_id"]: int(np.argmax(cent @ np.asarray(r["embedding"], dtype=np.float64)))
+        for r in emb.collect()
+    }
+    assert len(set(expect.values())) > 1
+    assert cells == expect
 
 
 class TestKMeans:

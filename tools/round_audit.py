@@ -242,6 +242,11 @@ def main() -> int:
         return 0
     inv = sites()
     bad = [s for s in inv if s["class"] == "UNCLASSIFIED"]
+    path = os.path.join(REPO, "ROUND_AUDIT.json")
+    report = {}
+    if os.path.exists(path):  # keep the last scan result
+        with open(path) as fh:
+            report = {k: v for k, v in json.load(fh).items() if k == "scan"}
     report = {
         "sites": inv,
         "counts": {
@@ -249,8 +254,9 @@ def main() -> int:
             for cls in sorted({s["class"] for s in inv})
         },
         "unclassified": len(bad),
+        **report,
     }
-    with open(os.path.join(REPO, "ROUND_AUDIT.json"), "w") as fh:
+    with open(path, "w") as fh:
         json.dump(report, fh, indent=2)
     print(json.dumps(report["counts"], indent=2))
     if bad:
