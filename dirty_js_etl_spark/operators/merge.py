@@ -15,11 +15,19 @@ outer join** + per-column ``F.when`` selection:
 suppression (``tsql2008.js:304-314``); ``merge_pk`` columns are excluded
 from the UPDATE branch (``tsql2008.js:296-299``).
 
+Result and audit are two views of one **action-tagged frame**: the
+joined rows are projected once to ``_action`` plus the output columns,
+with ``_action`` NULL for dest-only rows (and for matched rows under
+``insert_only``). ``result`` drops the tag; ``audit`` keeps the tagged
+rows. A caller that stores the tagged frame once (``Pipeline.run``
+checkpoints it per mapping per pass) computes the merge once for every
+write and audit count that follows; an unstored frame is recomputed by
+each action, like any DataFrame.
+
 Scale notes (100 TB):
 
-- The join shuffles both sides by the merge keys once; every output —
-  result AND audit — derives from that single joined plan, so Spark
-  computes one shuffle, not two. AQE splits skewed keys at runtime.
+- The join shuffles both sides by the merge keys once per computation
+  of the tagged frame. AQE splits skewed keys at runtime.
 - When the source is a small delta against a huge destination, pass
   ``broadcast_source=True``: dest is never shuffled. Spark cannot
   broadcast a FULL OUTER hash join (the hint would be silently ignored
@@ -63,10 +71,27 @@ class DuplicateMergeKeysError(ValueError):
     """Source has rows sharing a merge key (T-SQL MERGE raises too)."""
 
 
-@dataclass
+_ACTION = "_action"
+
+
+@dataclass(frozen=True)
 class MergeResult:
-    result: DataFrame  # post-merge destination table contents
-    audit: DataFrame  # $action + Inserted.* analog (T6)
+    """The merge's action-tagged frame: ``_action`` ('UPDATE' / 'INSERT',
+    NULL for rows no source row acted on) followed by the destination
+    columns."""
+
+    tagged: DataFrame
+
+    @property
+    def result(self) -> DataFrame:
+        """Post-merge destination table contents."""
+        return self.tagged.drop(_ACTION)
+
+    @property
+    def audit(self) -> DataFrame:
+        """``OUTPUT $action, Inserted.*`` analog (T6): one row per source
+        row that produced an action, carrying the post-merge values."""
+        return self.tagged.filter(F.col(_ACTION).isNotNull())
 
 
 def merge_upsert(
@@ -163,20 +188,16 @@ def merge_upsert(
             value = value.when(inserted, s_val)
         out_cols.append(value.otherwise(d_val).alias(c))
 
-    result = joined.select(*out_cols)
-
-    # audit = OUTPUT $action, Inserted.* (tsql2008.js:294-316): one row per
-    # source row that produced an action, carrying the post-merge values.
-    action = F.when(matched, F.lit("UPDATE")).otherwise(F.lit("INSERT"))
-    audit_filter = F.col(_S_PRESENT).isNotNull()
+    # $action (tsql2008.js:294-316): NULL where no source row acted —
+    # dest-only rows, and matched rows whose UPDATE clause is suppressed.
+    # Spelled as one outer WHEN so that Catalyst folds the audit's
+    # ``_action IS NOT NULL`` to ``acted``: its source-side conjunct lets
+    # an unstored audit run the cheaper one-sided outer join.
+    acted = F.col(_S_PRESENT).isNotNull()
     if insert_only:
-        audit_filter = audit_filter & ~matched  # matched rows: no action
-        action = F.lit("INSERT")
-    if update_only:
-        action = F.lit("UPDATE")
-    audit = joined.filter(audit_filter).select(action.alias("_action"), *out_cols)
-
-    return MergeResult(result=result, audit=audit)
+        acted = acted & ~matched
+    action = F.when(acted, F.when(matched, F.lit("UPDATE")).otherwise(F.lit("INSERT")))
+    return MergeResult(joined.select(action.alias(_ACTION), *out_cols))
 
 
 def _join_condition(keys: list[MergeKey]) -> Column:

@@ -235,6 +235,9 @@ def run_mapping(
     - ``use_merge`` → join-based upsert (T5) + audit (T6);
     - otherwise     → append (T7, INSERT-SELECT): unmapped destination
       columns become NULL; audit is all-INSERT.
+
+    Both return the action-tagged frame described in
+    :mod:`dirty_js_etl_spark.operators.merge`, unmaterialized.
     """
     compiled = compile_mapping(spec, catalog)
     if dest is None:
@@ -258,6 +261,7 @@ def run_mapping(
         *[F.col(c) for c in proj.columns],
         *[F.lit(None).cast(dict(dest.dtypes)[c]).alias(c) for c in missing],
     ).select(*dest.columns)
-    result = dest.unionByName(widened)
-    audit = widened.select(F.lit("INSERT").alias("_action"), *dest.columns)
-    return MergeResult(result=result, audit=audit)
+    # the merge's tagged-frame shape: kept dest rows carry no action
+    kept = dest.select(F.lit(None).cast("string").alias("_action"), *dest.columns)
+    new = widened.select(F.lit("INSERT").alias("_action"), *dest.columns)
+    return MergeResult(kept.unionByName(new))

@@ -17,7 +17,17 @@ Reproduces the reference driver's orchestration semantics
 - **multi-pass** (T11): the whole body repeats ``passes`` times
   (``tsql2008.js:345-358``) — pass 2 over the same source must be a
   fixpoint (all-UPDATE, no value drift), which :meth:`Pipeline.check_idempotent`
-  asserts with ``exceptAll``;
+  asserts with ``exceptAll`` in both directions (rows pass 2 adds and
+  rows it drops);
+- **in-run state, stored once**: each mapping's action-tagged merge frame
+  (:class:`~dirty_js_etl_spark.operators.merge.MergeResult`) is replaced
+  by a lazy ``localCheckpoint``: under AQE the merge's shuffle stages run
+  when it is taken, the final stage on the first action that reads it,
+  and the rows are stored from then on. The next mapping's FK lookups, the
+  next pass's destination, and the caller's ``result`` writes and
+  ``audit_per_pass`` counts read those rows, so no consumer re-runs the
+  merge chain and no plan holds more than one merge. Base relations are
+  read once per run and shared by every pass;
 - **dry-run** (T12): the transactional test mode (``BEGIN TRANSACTION …
   rollback``, ``tsql2008.js:64-71,147-154``) becomes "compute every result
   DataFrame, never write" — results are returned for inspection and the
@@ -87,11 +97,11 @@ class Pipeline:
                 if spec.message:
                     log.info("INFO: %s", spec.message)
                 dest = run_catalog.read_dest(spec.destination)
-                mr: MergeResult = run_mapping(spec, run_catalog, dest=dest)
-                # later mappings and passes must see this table's new
-                # contents; localCheckpoint would also truncate lineage for
-                # very long chains — kept lazy here, the runner's caller
-                # decides when to materialize.
+                tagged = run_mapping(spec, run_catalog, dest=dest).tagged
+                # stored once: the next mapping's FK, the next pass's
+                # destination and the caller's writes and audit counts all
+                # read these rows instead of re-running the merge chain
+                mr = MergeResult(tagged.localCheckpoint(eager=False))
                 state[spec.destination] = mr.result
                 tr = results.setdefault(
                     spec.destination,
@@ -152,9 +162,10 @@ class Pipeline:
             setup=self.setup, teardown=self.teardown,
         ).run(catalog)
         for name, tr in first.items():
-            diff = tr.result.exceptAll(second[name].result)
-            if diff.limit(1).count() > 0:
-                return False
+            a, b = tr.result, second[name].result
+            for diff in (a.exceptAll(b), b.exceptAll(a)):
+                if diff.limit(1).count() > 0:
+                    return False
         return True
 
 
@@ -167,11 +178,15 @@ class _StateCatalog(Catalog):
         self.spark = base.spark
         self._base = base
         self._state = state
+        self._base_reads: dict[str, DataFrame] = {}
 
     def read(self, name: str) -> DataFrame:
         if name in self._state:
             return self._state[name]
-        return self._base.read(name)
+        # one base read per relation per run: every pass reuses it
+        if name not in self._base_reads:
+            self._base_reads[name] = self._base.read(name)
+        return self._base_reads[name]
 
     def has(self, name: str) -> bool:
         return name in self._state or self._base.has(name)

@@ -42,6 +42,15 @@ def test_merge_is_single_outer_join(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_audit_runs_one_sided_outer_join(spark):
+    # the audit is a filter on the merge's action-tagged frame; Catalyst
+    # must fold `_action IS NOT NULL` to its source-side test so the
+    # unstored audit never computes the dest-only rows of the full join
+    df = all_queries()["t6_audit"](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "RightOuter" in plan and "FullOuter" not in plan
+
+
 def test_rollup_aggregates_partially(spark):
     plan = _plan(spark, "x13_hourly_rollup")
     # partial (map-side) + final HashAggregate around one exchange
