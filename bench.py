@@ -3,7 +3,8 @@
 
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: best_sec}, "runs": {name: [all N run secs]},
-"canary": {"query": ..., "every": K, "series": [...]}, "sf": ...}.
+"canary": {"query": ..., "every": K, "series": [...]}, "sf": ...,
+"compiles": {name: classes compiled during its timed runs}}.
 The driver records this as BENCH_r{N}.json and grades against
 BASELINE.md (DuckDB on the same parquet is the de facto yardstick, 2x
 envelope). "How to read a contaminated run" is documented in
@@ -12,7 +13,10 @@ box can never fake a regression invisibly (BENCH_r12's tail did).
 
 Each timed run drains the query with a count-style action (collect on
 aggregates, count on wide outputs) so the whole plan executes; a warmup
-pass primes the JVM/codegen caches first.
+pass primes the JVM/codegen caches first. A warm query whose plan repeats
+compiles no new classes, so a nonzero ``compiles`` entry means the query
+generates different code per run or the codegen class cache is too
+small for the working set (see session.CODEGEN_CACHE_ENTRIES).
 """
 
 from __future__ import annotations
@@ -229,12 +233,19 @@ def main() -> None:
     runs = max(3, int(os.environ.get("BENCH_RUNS", "3")))
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
+    compiles: dict[str, int] = {}
+    # Spark's count of generated classes compiled (cache misses) in this JVM
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     for qi, n in enumerate(names):
         samples: list[float] = []
-        for i in range(runs + 1):
-            elapsed = timed_run(n)
-            if i > 0:  # run 0 is the untimed warmup
-                samples.append(round(elapsed, 4))
+        timed_run(n)  # untimed warmup
+        c0 = compiled()
+        for _ in range(runs):
+            samples.append(round(timed_run(n), 4))
+        compiles[n] = compiled() - c0
         timings[n] = min(samples)
         all_runs[n] = samples
         if canary and (qi + 1) % canary_every == 0:
@@ -256,6 +267,7 @@ def main() -> None:
                     "series": canary,
                 },
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "compiles": compiles,
             }
         )
     )

@@ -1,9 +1,11 @@
 """SparkSession factory tuned for both local testing and cluster scale.
 
 Local mode is a single JVM; the settings below are the ones that still
-matter there (shuffle partition count, AQE, Arrow). On a real cluster the
-same builder is correct — AQE coalesces the 32-partition default upward
-and the skew-join/broadcast settings kick in where they matter at 100 TB.
+matter there (shuffle partition count, AQE, Arrow, the codegen class
+cache). Shuffle partitions = ``SPARK_GRAFT_CPUS`` (default 32), and AQE
+coalesces small post-shuffle partitions down from that. On a real
+cluster the same builder is correct — the skew-join/broadcast settings
+kick in where they matter at 100 TB.
 """
 
 from __future__ import annotations
@@ -12,7 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# generated classes kept per JVM (Spark's default is 100); see the
+# config note in get_spark
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def base_confs() -> dict[str, str]:
@@ -37,6 +41,7 @@ def base_confs() -> dict[str, str]:
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
     # cluster-tuning hook: ';'-separated key=value pairs, applied last so
     # a deployment (or an A/B run) can override any default above without
@@ -92,6 +97,22 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
     #   shuffle-heavy queries (oversized G1 heaps collapse on these
     #   vCPUs) — keep the heap small and clear persisted frames between
     #   workloads instead.
+    #
+    # - codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES (1000): Spark's LRU
+    #   of compiled whole-stage/expression classes, default 100. Measured
+    #   working sets (entries): one perfbench `iterative` round (x143,
+    #   x206, x201 at sf0.001) 140-141, one `merge_bulk` round 59-63, the
+    #   60 bench.py headline queries at sf0.001 887-983. In local mode the
+    #   driver and the executor threads compile under two class loaders,
+    #   which are part of the cache key, so a class used on both sides
+    #   takes two entries (90-91 distinct sources). At 100 the iterative
+    #   round evicted its own classes and recompiled 112-133 per warm
+    #   round (Janino plus a second C2 JIT pass); at 1000 it compiles
+    #   0-7, and its `cpu_s` median fell 14-20% in 4-core ABABs. Cost:
+    #   ~35 KB of metaspace per entry, so a full cache is ~35 MB. It is
+    #   a static conf: read once when the JVM's first session starts, so
+    #   it must be set on the builder (or SPARK_GRAFT_EXTRA_CONF), never
+    #   with spark.conf.set on a running session.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"

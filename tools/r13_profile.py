@@ -36,8 +36,7 @@ def main() -> None:
     # EXACTLY the production session configs (ADVICE r13: the hand-copied
     # subset here omitted the r13 join configs, so profiles showed SMJ
     # plans production never runs), plus event logging. base_confs()
-    # already applies SPARK_GRAFT_EXTRA_CONF last; R13_EXTRA_CONF remains
-    # as a profile-only override on top of that.
+    # applies SPARK_GRAFT_EXTRA_CONF last, the one override hook.
     builder = (
         SparkSession.builder.appName("r13_profile")
         .master(f"local[{cpus}]")
@@ -47,12 +46,6 @@ def main() -> None:
         .config("spark.eventLog.rolling.enabled", "false")
     )
     for k, v in base_confs().items():
-        builder = builder.config(k, v)
-    for k, v in (
-        kv.split("=", 1)
-        for kv in os.environ.get("R13_EXTRA_CONF", "").split(";")
-        if "=" in kv
-    ):
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
