@@ -4,7 +4,10 @@
 Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: best_sec}, "runs": {name: [all N run secs]},
 "canary": {"query": ..., "every": K, "series": [...]}, "sf": ...,
-"compiles": {name: classes compiled during its timed runs}}.
+"compiles": {name: classes compiled during its timed runs},
+"session_start_s": get_spark's wall time, "class_archive": what the
+session start did with the driver's class-data archive, "mapped",
+"dumping" or "off: <reason>" (see session.get_spark)}.
 The driver records this as BENCH_r{N}.json and grades against
 BASELINE.md (DuckDB on the same parquet is the de facto yardstick, 2x
 envelope). "How to read a contaminated run" is documented in
@@ -28,8 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dirty_js_etl_spark import session  # noqa: E402
 from dirty_js_etl_spark.queries import all_queries  # noqa: E402
-from dirty_js_etl_spark.session import get_spark  # noqa: E402
 
 # headline set: the merge pipeline (shuffle join + audit), grouped agg,
 # broadcast FK join, distinct, idempotent re-merge — plus the
@@ -183,7 +186,10 @@ def main() -> None:
     # "sf0.1" -> "0.1"; ".sf1_testdata" -> "1" (numeric prefix only)
     raw = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf = raw[: next((i for i, c in enumerate(raw) if c not in "0123456789."), len(raw))]
-    spark = get_spark("bench")
+    t0 = time.perf_counter()
+    spark = session.get_spark("bench")
+    session_start_s = time.perf_counter() - t0
+    class_archive = session.class_archive
     qs = dict(all_queries())
     qs["x216_ingest_probe"] = _x216_ingest_probe
     names = [n for n in HEADLINE if n in qs]
@@ -268,6 +274,8 @@ def main() -> None:
                 },
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 "compiles": compiles,
+                "session_start_s": round(session_start_s, 4),
+                "class_archive": class_archive,
             }
         )
     )
