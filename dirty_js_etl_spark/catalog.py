@@ -86,18 +86,6 @@ FIXTURE_TABLES = [
 HEAVY_TABLES = ("documents", "embeddings", "events")
 
 
-# Memoized _spread decisions, keyed by (sorted (file, size) pairs,
-# parallelism, maxPartitionBytes). The expensive per-read work this
-# replaced was a df.rdd.getNumPartitions() plan conversion (VERDICT r05/
-# r07 task 1); the getsize stats feeding the key are driver-side
-# microsecond syscalls on < parallelism files. Sizes in the key mean a
-# file REWRITTEN at the same path mid-process (test fixture churn) gets
-# a fresh decision instead of a stale split plan (ADVICE r08); same-size
-# rewrites are indistinguishable, which only ever risks a suboptimal
-# repartition, never a wrong result.
-_SPREAD_DECISIONS: dict[tuple, bool] = {}
-
-
 def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Repartition an under-split scan up to the cluster's parallelism.
 
@@ -106,13 +94,11 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     on every catalog read (VERDICT r05: a per-read plan conversion on a
     real cluster). The fixtures are single-file single-row-group parquet,
     so file count is the partition count; on a many-file production
-    table the guard sees >= parallelism files and this is a no-op.
-
-    Set ``SPARK_GRAFT_NO_SPREAD=1`` to short-circuit entirely (bench A/B
-    hook, VERDICT r07 task 1).
+    table the guard sees >= parallelism files and this is a no-op. The
+    file sizes are re-read on every call (driver-side ``stat`` calls on
+    fewer than parallelism files), so a file rewritten at the same path
+    gets a fresh decision.
     """
-    if os.environ.get("SPARK_GRAFT_NO_SPREAD"):
-        return df
     par = spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
@@ -133,20 +119,11 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
         )
     except ValueError:
         max_bytes = 134217728
-    sized = []
-    for uri in sorted(files):
-        path = uri.removeprefix("file:")
-        if not os.path.exists(path):
-            return df  # remote storage: trust Spark's own split planning
-        sized.append((uri, os.path.getsize(path)))
-    key = (tuple(sized), par, max_bytes)
-    decide = _SPREAD_DECISIONS.get(key)
-    if decide is None:
-        total = sum(sz for _, sz in sized)
-        est_splits = max(nfiles, -(-total // max_bytes))
-        decide = est_splits < par
-        _SPREAD_DECISIONS[key] = decide
-    if decide:
+    paths = [uri.removeprefix("file:") for uri in files]
+    if not all(os.path.exists(p) for p in paths):
+        return df  # remote storage: trust Spark's own split planning
+    total = sum(os.path.getsize(p) for p in paths)
+    if max(nfiles, -(-total // max_bytes)) < par:
         df = df.repartition(par)
     return df
 
@@ -187,27 +164,19 @@ def _harden_session(spark: SparkSession) -> None:
     # The NTZ→LTZ fallback cast in _ntz_to_ltz is value-exact ONLY under a
     # UTC session zone; if the conf could not be set, a non-UTC zone would
     # silently shift epoch values away from the oracle's naive-UTC read.
-    # Fail loudly instead of silently diverging (ADVICE r05).
+    # Fail loudly instead of silently diverging (ADVICE r05): wrong
+    # answers are worse than a loud failure in a 226-query sweep.
     try:
         tz = spark.conf.get("spark.sql.session.timeZone")
     except Exception:  # noqa: BLE001
         tz = None
     if tz != "UTC":
-        msg = (
+        raise RuntimeError(
             "spark.sql.session.timeZone could not be set to UTC "
             f"(currently {tz!r}); TIMESTAMP_NTZ fixture columns will be "
             "reinterpreted in the session zone and epoch math will "
             "disagree with the naive-UTC oracle read"
         )
-        # Wrong answers are worse than a loud failure in a 226-query
-        # sweep (VERDICT r06) — raise unless the caller explicitly opts
-        # into warn-only (e.g. a deliberately non-UTC exploratory shell).
-        if os.environ.get("SPARK_GRAFT_TZ_WARN_ONLY") == "1":
-            import warnings
-
-            warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        else:
-            raise RuntimeError(msg)
 
 
 def fixture_catalog(spark: SparkSession, sf_dir: str) -> Catalog:

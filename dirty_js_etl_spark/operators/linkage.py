@@ -40,7 +40,22 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dirty_js_etl_spark.operators.parallel import spread_for_cpu
+
+def _spread_for_cpu(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """Hash-repartition ``df`` by ``cols`` to the session's
+    ``spark.sql.shuffle.partitions`` (``session.SHUFFLE_PARTITIONS``
+    unless a deployment sets its own), pinning the count so AQE cannot
+    fold the CPU-dense stage above it to one task.
+
+    AQE coalesces post-shuffle partitions toward a BYTE target, which
+    is right for scan/agg stages and wrong for the pair enumerators: a
+    value-deduped linkage table is a few hundred KB (one partition to
+    AQE) while the join above it runs |block| Levenshteins per row (the
+    r13 profile measured x210's enumeration as a single 4.5 s task).
+    Results are partitioning-invariant (the registry audit pins this),
+    so this is a pure plan change."""
+    n = int(str(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    return df.repartition(n, *cols)
 
 
 def blocked_link_pairs(
@@ -94,7 +109,7 @@ def blocked_link_pairs(
     # No broadcast hint on the build side on purpose: a hint would turn
     # a mis-sized value table into an executor OOM instead of a silent
     # fallback to the shuffle join.
-    l = spread_for_cpu(recs, "blk", "rec", "id").alias("l")
+    l = _spread_for_cpu(recs, "blk", "rec", "id").alias("l")
     r = recs.alias("r")
     dist = F.levenshtein(F.col("l.rec"), F.col("r.rec"))
     return (
@@ -233,7 +248,7 @@ def lsh_link_pairs(
         # stage then works on distinct values, never on clique members
         recs = recs.groupBy("rec").agg(F.min("id").alias("id"))
     # No spread on recs: pinning the signature map's parallelism with
-    # spread_for_cpu(recs, "id") was measured in a flat-canary window
+    # _spread_for_cpu(recs, "id") was measured in a flat-canary window
     # and regressed the bench (x208 1.64 → 1.98 s, x209 4.25 → 4.51 s);
     # the pinned exchange adds a stage to every consumer path and the
     # md5 signature work it parallelizes is not the critical path.
@@ -441,7 +456,7 @@ def weighted_link_pairs(
     # dimension-sized); above the threshold the planner adds its own blk
     # exchange and the pin degrades to one wasted small shuffle. No
     # broadcast hint on purpose — fallback beats a forced-broadcast OOM.
-    l = spread_for_cpu(recs, "blk", *fnames).alias("l")
+    l = _spread_for_cpu(recs, "blk", *fnames).alias("l")
     r = recs.alias("r")
     cond = (F.col("l.blk") == F.col("r.blk")) & (F.col("l.id") < F.col("r.id"))
     pairs = []

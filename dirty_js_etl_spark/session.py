@@ -2,10 +2,12 @@
 
 Local mode is a single JVM; the settings below are the ones that still
 matter there (shuffle partition count, AQE, Arrow, the codegen class
-cache). Shuffle partitions = ``SPARK_GRAFT_CPUS`` (default 32), and AQE
-coalesces small post-shuffle partitions down from that. On a real
-cluster the same builder is correct — the skew-join/broadcast settings
-kick in where they matter at 100 TB.
+cache). The config is the same at every core count: shuffle partitions
+are ``SHUFFLE_PARTITIONS`` (32) and AQE coalesces small post-shuffle
+partitions down from that; ``SPARK_GRAFT_CPUS`` (default 32) sets only
+the ``local[N]`` master's thread count. On a real cluster the same
+builder is correct — the skew-join/broadcast settings kick in where they
+matter at 100 TB.
 """
 
 from __future__ import annotations
@@ -22,6 +24,9 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
+# initial shuffle partitions, whatever the core count; see the config
+# note in get_spark
+SHUFFLE_PARTITIONS = 32
 # generated classes kept per JVM (Spark's default is 100); see the
 # config note in get_spark
 CODEGEN_CACHE_ENTRIES = 1000
@@ -116,7 +121,7 @@ def base_confs() -> dict[str, str]:
     never runs). ``SPARK_GRAFT_EXTRA_CONF`` overrides are applied last,
     here, so every consumer honors the deployment hook."""
     confs = {
-        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "spark.sql.shuffle.partitions": str(SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -129,7 +134,7 @@ def base_confs() -> dict[str, str]:
         ),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.driver.memory": "8g",
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
     global class_archive
@@ -161,6 +166,24 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
       ops) transfers columnar batches, not pickled rows.
     """
     # Config notes (the dict itself lives in base_confs so tools reuse it):
+    #
+    # - shuffle.partitions=SHUFFLE_PARTITIONS (32) on every box, not the
+    #   core count: plan shapes (skew splits, the linkage spread below
+    #   x205/x210, SMJ vs SHJ) then do not depend on where a query runs,
+    #   and AQE coalesces the count down where bytes are few. AQE splits
+    #   a partition only above skewedPartitionFactor (default 5, 2 in
+    #   the skew test) times the median. With one key holding 10% of the
+    #   rows and n partitions, the hot partition is 0.1 + 0.9/n of the
+    #   rows and the median 0.9/n, so hot/median = 1 + n/9: 1.4x at 4
+    #   partitions, 1.9x at 8, 4.6x at 32. Partitions tied to 4 cores
+    #   could never split that key. At 200 (Spark's default) AQE turns
+    #   the skew test's join into a ShuffledHashJoin instead.
+    #   Cost against partitions = cores on 4 cores / 16 GB (perfbench,
+    #   10 interleaved pairs each, BENCH_AB_fixed_partitions.json):
+    #   `iterative` cpu_s median 19.7 -> 20.4 s (+3%), `merge_bulk`
+    #   20.5 -> 22.3 s (+9%, higher in 9/10 pairs); setup_s +1% / -7%;
+    #   no failed operation. A deployment sets its own count through
+    #   SPARK_GRAFT_EXTRA_CONF.
     #
     # - parquet.inferTimestampNTZ=false: parquet writers that omit the
     #   isAdjustedToUTC flag (pandas/pyarrow defaults) would otherwise
@@ -231,7 +254,13 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
     #   dir in the cache; a conf dir with real files is never
     #   overridden and the JVM then starts without an archive. The JVM
     #   rejects an archive it cannot use (another JDK, a damaged file)
-    #   and loads classes as usual. Measured on 4 cores / 16 GB
+    #   and loads classes as usual; its java.vm.info then lacks
+    #   ", sharing" (a mapped archive always maps the JDK's base archive
+    #   with it), so a mapped start reads that property once and
+    #   deletes a rejected file, and the next start dumps a new one. A
+    #   valid archive of another class path would still read "sharing"
+    #   (its base archive maps), but the key already rules that out.
+    #   Measured on 4 cores / 16 GB
     #   (perfbench, interleaved pairs, BENCH_AB_class_archive.json):
     #   session start 8.9-9.9 s -> 4.1-5.2 s; `iterative` setup_s
     #   33.1 -> 25.8 s (-22%, 10/10 pairs), `merge_bulk` 34.5 -> 25.8 s
@@ -239,6 +268,7 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
     #   takes ~14 s instead of ~6-9 s and the dump adds ~16 s at JVM
     #   exit; the archive is 140-175 MB. Opt out with
     #   SPARK_GRAFT_EXTRA_CONF="spark.driver.defaultJavaOptions=".
+    global class_archive
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
         master or f"local[{cpus}]"
@@ -246,11 +276,19 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
     launching = SparkContext._gateway is None
     if launching:
         _finish_dump()  # an earlier JVM of this process dumped and exited
-    for k, v in base_confs().items():
+    confs = base_confs()
+    for k, v in confs.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if launching and class_archive == "dumping":
         # kept past a caller's gateway shutdown, for the exit-time rename
         _dump["proc"] = SparkContext._gateway.proc
+    if launching and class_archive == "mapped" and "sharing" not in (
+        spark._jvm.System.getProperty("java.vm.info")
+    ):
+        archive = confs["spark.driver.defaultJavaOptions"].split()[0]
+        with contextlib.suppress(OSError):
+            os.remove(archive.removeprefix("-XX:SharedArchiveFile="))
+        class_archive = "off: archive rejected"
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -59,8 +59,7 @@ def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
 
 def test_harden_session_raises_when_tz_unsettable(spark, monkeypatch):
     """VERDICT r06: a warn in a 226-query sweep is easy to miss — when the
-    session timezone cannot be pinned to UTC, raise (unless explicitly
-    opted into warn-only)."""
+    session timezone cannot be pinned to UTC, raise."""
     real_set = spark.conf.set
 
     def locked_set(key, value):
@@ -72,9 +71,6 @@ def test_harden_session_raises_when_tz_unsettable(spark, monkeypatch):
     try:
         monkeypatch.setattr(spark.conf, "set", locked_set)
         with pytest.raises(RuntimeError, match="timeZone"):
-            _harden_session(spark)
-        monkeypatch.setenv("SPARK_GRAFT_TZ_WARN_ONLY", "1")
-        with pytest.warns(RuntimeWarning, match="timeZone"):
             _harden_session(spark)
     finally:
         monkeypatch.undo()

@@ -1,4 +1,5 @@
-"""The driver JVM's class-data archive (``session.get_spark``).
+"""The session config (``session.base_confs``) and the driver JVM's
+class-data archive (``session.get_spark``).
 
 JVM cases start a fresh Python process whose cache is a temporary
 directory, so the user's real archive is never read or written; the
@@ -53,12 +54,9 @@ print("RESULT " + json.dumps({
 
 
 def _run(cache: str, code: str = START, extra_conf: str = "") -> tuple[dict, str]:
-    env = {k: v for k, v in os.environ.items()
-           if k not in ("SPARK_CONF_DIR", "SPARK_GRAFT_EXTRA_CONF")}
-    env.update(XDG_CACHE_HOME=cache, SPARK_GRAFT_DRIVER_MEM="1g",
-               SPARK_GRAFT_CPUS="1", PYTHONPATH=ROOT)
-    if extra_conf:
-        env["SPARK_GRAFT_EXTRA_CONF"] = extra_conf
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
+    env.update(XDG_CACHE_HOME=cache, SPARK_GRAFT_CPUS="1", PYTHONPATH=ROOT,
+               SPARK_GRAFT_EXTRA_CONF=f"spark.driver.memory=1g;{extra_conf}")
     out = subprocess.run(
         [sys.executable, "-c", code], env=env, cwd=ROOT, stdout=subprocess.PIPE,
         stderr=subprocess.DEVNULL, text=True, timeout=600, check=True,
@@ -124,9 +122,11 @@ def test_dump_and_fallback_keep_stdout_clean(dumped, isolated):
     assert "-XX:ArchiveClassesAtExit=" in opts
     with open(final, "wb") as fh:
         fh.write(b"not a class-data archive" * 100)
-    # a garbage archive: the JVM falls back to plain class loading
+    # a garbage archive: the JVM falls back to plain class loading, and
+    # the file goes so that the next start dumps a new one
     result, fallback_out = _run(str(isolated))
-    assert result == {"state": "mapped", "sum": 45}
+    assert result == {"state": "off: archive rejected", "sum": 45}
+    assert _files(str(isolated)) == []
     for out in (dump_out, fallback_out):
         assert "[cds" not in out, out
 
@@ -136,6 +136,15 @@ def test_killed_dump_leaves_no_file_and_is_not_retried(tmp_path):
     assert result == {"first": "dumping",
                       "state": "off: this process's dump failed", "sum": 45}
     assert _files(str(tmp_path)) == []
+
+
+def test_config_does_not_depend_on_the_core_count(isolated, monkeypatch):
+    confs = []
+    for cpus in ("1", "4", "32"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        confs.append(session.base_confs())
+    assert confs[0] == confs[1] == confs[2]
+    assert confs[0]["spark.sql.shuffle.partitions"] == str(session.SHUFFLE_PARTITIONS)
 
 
 def test_extra_java_options_keep_the_archive_flags(isolated, monkeypatch):
