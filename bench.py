@@ -8,11 +8,10 @@ Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "session_start_s": get_spark's wall time, "class_archive": what the
 session start did with the driver's class-data archive, "mapped",
 "dumping" or "off: <reason>" (see session.get_spark)}.
-The driver records this as BENCH_r{N}.json and grades against
-BASELINE.md (DuckDB on the same parquet is the de facto yardstick, 2x
-envelope). "How to read a contaminated run" is documented in
-BASELINE.md — the spreads + canary series exist so a contended driver
-box can never fake a regression invisibly (BENCH_r12's tail did).
+It is graded against BASELINE.md (DuckDB on the same parquet is the de facto
+yardstick, 2x envelope). "How to read a contaminated run" is documented in
+BASELINE.md — the spreads + canary series exist so a contended driver box can
+never fake a regression invisibly.
 
 Each timed run drains the query with a count-style action (collect on
 aggregates, count on wide outputs) so the whole plan executes; a warmup
@@ -88,11 +87,10 @@ HEADLINE = [
     "x195_tpch_q9",
     "x196_tpch_q11",
     "x197_tpch_q20",
-    # round 9 (VERDICT r08 task 5): the round-8/9 surface — real A/V
-    # byte decoders, the portable IVF twin, the linkage family — so a
-    # perf regression in the newest, heaviest kernels is visible
-    # round-over-round. BASELINE.md notes the set change; totals are
-    # not comparable across differing sets.
+    # the newest, heaviest kernels — real A/V byte decoders, the portable
+    # IVF twin, the linkage family — so a perf regression in them is
+    # visible. BASELINE.md notes the set change; totals are not comparable
+    # across differing sets.
     "x201_ivf_topk_portable",
     "x203_audio_decode",
     "x204_frame_sample_real",
@@ -115,7 +113,7 @@ HEADLINE = [
     # registry query (x216_incremental_ingest_dedup) rebuilds the
     # corpus index in-query for oracle self-containment; in production
     # the index is PERSISTED and each ingest pays only the probe, so
-    # the headline times that path (VERDICT r11 task 4): the index is
+    # the headline times that path: the index is
     # written to parquet once, untimed, and the timed plan reads it.
     "x216_ingest_probe",
     "x217_quality_linear_scorer",
@@ -126,7 +124,7 @@ def _x216_index_dir(sf_dir: str) -> str:
     """Per-scale, per-process index path: two concurrent bench runs (e.g.
     an sf0.1 bench next to an sf1 sweep) must not overwrite/read each
     other's prebuilt index and silently time a probe against the
-    wrong-scale corpus (ADVICE r13)."""
+    wrong-scale corpus."""
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
     return f"/tmp/spark_graft_bench_x216_index_{tag}_{os.getpid()}"
 
@@ -213,14 +211,13 @@ def main() -> None:
         spark.catalog.clearCache()
         return elapsed
 
-    # Contention canary (VERDICT r12 task 1): one fixed cheap query is
+    # Contention canary: one fixed cheap query is
     # re-timed before the loop and again every CANARY_EVERY queries. On a
     # quiet box its series is flat; under sustained steal/contention the
     # later samples inflate, which timestamps WHICH window of the bench
     # loop was contended. Read it next to `runs`: a query whose all-N
     # spread is wide AND whose loop position falls in an inflated canary
-    # window is a contaminated measurement, not a regression
-    # (BENCH_r12's 2-7x tail was exactly this, disproved by re-runs).
+    # window is a contaminated measurement, not a regression.
     canary_name = os.environ.get("BENCH_CANARY", "x41_hash_split")
     canary_every = max(1, int(os.environ.get("BENCH_CANARY_EVERY", "10")))
     canary: list[float] = []
@@ -233,7 +230,7 @@ def main() -> None:
     # phantom 8x regression on x5 from one contended run); the warmup
     # absorbs first-run compilation/page-cache effects and the minimum
     # of three timed runs is the achievable per-query time. Under
-    # SUSTAINED contention even the minimum inflates (BENCH_r12), so the
+    # SUSTAINED contention even the minimum inflates, so the
     # artifact also carries every run's time (`runs`) and the canary
     # series — the evidence needed to tell contention from regression.
     runs = max(3, int(os.environ.get("BENCH_RUNS", "3")))

@@ -91,8 +91,8 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     Guarded on ``df.inputFiles()`` (a driver-side file-index listing) —
     NOT ``df.rdd.getNumPartitions()``, which converts the scan to an RDD
-    on every catalog read (VERDICT r05: a per-read plan conversion on a
-    real cluster). The fixtures are single-file single-row-group parquet,
+    on every catalog read (a per-read plan conversion on a real
+    cluster). The fixtures are single-file single-row-group parquet,
     so file count is the partition count; on a many-file production
     table the guard sees >= parallelism files and this is a no-op. The
     file sizes are re-read on every call (driver-side ``stat`` calls on
@@ -109,8 +109,8 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
         return df
     # A big SPLITTABLE file is not under-split: Spark carves it into
     # ~size/maxPartitionBytes scan partitions, so only reshuffle when the
-    # estimated scan partition count is ALSO below parallelism (ADVICE
-    # r06 — file count alone reshuffled large single-file tables).
+    # estimated scan partition count is ALSO below parallelism (file
+    # count alone would reshuffle large single-file tables).
     try:
         max_bytes = int(
             str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
@@ -164,7 +164,7 @@ def _harden_session(spark: SparkSession) -> None:
     # The NTZ→LTZ fallback cast in _ntz_to_ltz is value-exact ONLY under a
     # UTC session zone; if the conf could not be set, a non-UTC zone would
     # silently shift epoch values away from the oracle's naive-UTC read.
-    # Fail loudly instead of silently diverging (ADVICE r05): wrong
+    # Fail loudly instead of silently diverging: wrong
     # answers are worse than a loud failure in a 226-query sweep.
     try:
         tz = spark.conf.get("spark.sql.session.timeZone")

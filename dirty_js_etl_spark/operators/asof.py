@@ -75,7 +75,7 @@ def asof_join(
     whenever the winning row carried NULL in that column, diverging from
     both ``merge_asof`` and :func:`asof_join_bucketed`'s boundary
     handoff, and let stale per-column values slip past the tolerance
-    filter (ADVICE r04, both items).
+    filter.
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction}")

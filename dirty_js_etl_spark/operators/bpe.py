@@ -142,7 +142,7 @@ def _safe_batch(top: list, want: int, existing: frozenset | set = frozenset()) -
     chain, or the ``</w>`` marker), merge-created occurrences of
     ``(x, a+b)`` combine with the pre-existing pair's count and
     old(≤cutoff) + created(≤cutoff) can exceed the cutoff, silently
-    diverging from batch_size=1 (ADVICE r05). ``existing`` is the exact
+    diverging from batch_size=1. ``existing`` is the exact
     characterization of non-freshness: every vocab symbol is a single
     character, the ``</w>`` marker, or a previously-emitted merge
     output, and ``a+b`` is always ≥2 chars — so the batch ends at the
@@ -194,7 +194,7 @@ def learn_bpe_merges(
     Each round collects the top ``batch_size + 1`` pairs and accepts the
     maximal provably-sequential-equivalent prefix (:func:`_safe_batch`),
     so cluster round-trips are O(n_merges / batch_size) instead of one
-    per merge (VERDICT r04 #6) while the merge table stays bit-identical
+    per merge while the merge table stays bit-identical
     to ``batch_size=1`` (pytest-pinned). ``batch_size=1`` recovers the
     strict one-argmax-per-job trainer.
 
@@ -202,8 +202,8 @@ def learn_bpe_merges(
     words (freq desc, word asc — a distributed TakeOrdered, no full
     sort) before the merge loop: the standard production-scale move for
     a 30k-merge vocabulary, since word frequencies are Zipfian and a
-    few million distinct words cover ≥99.9% of corpus tokens
-    (VERDICT r05 #3). Equivalence bound: dropping tail words removes at
+    few million distinct words cover ≥99.9% of corpus tokens.
+    Equivalence bound: dropping tail words removes at
     most ``D`` = the dropped words' total token mass from every pair
     count, so any merge decided by a count margin > ``D`` over its
     runner-up (and over the tie-break) is unchanged; merges inside that
@@ -346,7 +346,7 @@ def apply_bpe_batched(
     # string methods: F.trim strips only U+0020, and Java-regex \s is the
     # ASCII class [ \t\n\x0B\f\r] (NBSP is a word character to the fold
     # path; Python .strip()/.split() would treat it as whitespace and
-    # silently diverge — ADVICE r06)
+    # silently diverge)
     import re
 
     _ascii_ws = re.compile("[ \t\n\x0b\f\r]+")

@@ -635,7 +635,7 @@ def repeated_span_coverage(
             .cast("long")
             .alias("repeated_chars"),
             # raw integer-count ratio — no decimal re-round (the kmv
-            # discipline, VERDICT r12 task 3; see tools/round_audit.py)
+            # discipline; see tools/round_audit.py)
             (
                 F.coalesce("repeated_chars", F.lit(0)).cast("double")
                 / F.col("n_chars")

@@ -73,7 +73,7 @@ def flatten_hierarchy(
         # LEFT join: a dangling parent id (anc not present in the id
         # column at all) has no hop target — keep the node unchanged
         # instead of silently dropping it while other nodes still
-        # converge (ADVICE r04); the convergence probe already treats
+        # converge; the convergence probe already treats
         # it as resolved (it is not in non_roots)
         state = (
             state.join(hop, state["anc"] == hop["jid"], "left")

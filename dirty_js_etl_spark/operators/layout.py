@@ -66,7 +66,7 @@ def _order_proxy(col: str, dtype: str) -> Column:
     epoch micros, dates → epoch days, numerics pass through. Anything
     else (string, binary, …) has no order-preserving numeric embedding
     bounded by a quantile sketch — fail loudly instead of silently
-    narrowing the clustering contract (ADVICE r03)."""
+    narrowing the clustering contract."""
     if dtype.startswith(_NUMERIC_PREFIXES):
         return F.col(col)
     if dtype.startswith("timestamp"):

@@ -97,7 +97,7 @@ def blocked_link_pairs(
     # probe side pinned to the configured parallelism: the per-row join
     # work here is |block| Levenshteins, so AQE's byte-based coalescing
     # (the value table is a few hundred KB) would fold the quadratic
-    # enumeration to one task (r13 profile). NOTE (ADVICE r13): the pin
+    # enumeration to one task. NOTE: the pin
     # is keyed (blk, rec, id) for uniform spread, which does NOT satisfy
     # the join's blk-alone distribution — it only survives (and
     # parallelizes the Levenshtein work) while the build side stays
@@ -621,8 +621,8 @@ def resolve_entities(
     pairing is suppressed).
 
     NULL-safe: records whose record or block expression is NULL keep a
-    row in the output (ADVICE r09). A NULL RECORD value is a
-    PER-RECORD SINGLETON (ADVICE r10 — missing data is not evidence of
+    row in the output. A NULL RECORD value is a
+    PER-RECORD SINGLETON (missing data is not evidence of
     identity, and a NULL-heavy column must not fuse millions of rows
     into one entity), so such records resolve to their own id. A NULL
     BLOCK with a non-null record still collapses identical record

@@ -81,10 +81,10 @@ def _ascii_only(t):
     ``substring``/``repeat``, and the paired oracles sum codepoints —
     all three agree only while every char is one byte. The fixtures are
     ASCII; a non-ASCII document would silently diverge the declared
-    chunk sizes from the encoded byte counts, so fail loudly instead
-    (ADVICE r08). NULL text passes through (ADVICE r09): the comparison
-    evaluates NULL on NULL input and must not fall into raise_error —
-    downstream builders already degrade NULL payloads to sentinels.
+    chunk sizes from the encoded byte counts, so fail loudly instead.
+    NULL text passes through: the comparison evaluates NULL on NULL
+    input and must not fall into raise_error — downstream builders
+    already degrade NULL payloads to sentinels.
     Real deployments ingest actual binary files and never hit these
     builders."""
     return F.when(
@@ -195,7 +195,7 @@ def decode_image_kernel(
         ids, lens, ws, hs, fmts, sums = [], [], [], [], [], []
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
             # NULL payload (real binary ingestion) degrades to the
-            # UNKNOWN sentinel row via the empty-magic path (ADVICE r08)
+            # UNKNOWN sentinel row via the empty-magic path
             data = bytes(payload) if payload is not None else b""
             ids.append(doc_id)
             lens.append(len(data))
@@ -467,7 +467,7 @@ def decode_audio(df: DataFrame) -> DataFrame:
                 try:
                     # TypeError covers a NULL payload (bytes(None)) from
                     # real binary ingestion — degrade to the -1 sentinel
-                    # row like any other malformed input (ADVICE r08)
+                    # row like any other malformed input
                     rate, ch, bits, ns, ms, ssum = _parse_wav(bytes(payload))
                 except (ValueError, IndexError, TypeError, struct.error):
                     rate, ch, bits, ns, ms, ssum = -1, 0, 0, 0, 0, 0

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 # already gone when the looser patterns run; the FULL 3-3-4 phone form
 # before the 7-digit suffix form, so '555-123-4567' redacts whole
 # rather than leaving its last four digits — the most identifying
-# part — in the "scrubbed" output (ADVICE r10).
+# part — in the "scrubbed" output.
 #
 # These defaults are DEMO-GRADE: they exercise the plumbing and the
 # oracle replay, not a production PII taxonomy (no international formats, no
@@ -101,7 +101,7 @@ def pii_redaction_sql(
     for name, pat, placeholder in pats:
         # escape embedded single quotes so a user-supplied pattern or
         # placeholder can't break (or shift the meaning of) the SQL
-        # string literal (ADVICE r10)
+        # string literal
         p = pat.replace("'", "''")
         ph = placeholder.replace("'", "''")
         counts.append(

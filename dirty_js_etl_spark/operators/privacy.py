@@ -142,10 +142,9 @@ def t_closeness(
     )
     cls = base.groupBy(*keys, "__s").agg(F.count(F.lit(1)).alias("__c"))
     sizes = base.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
-    # NULL-safe grid join via a STRUCT key (ADVICE r10 semantics, r12
-    # spelling): a class whose quasi-identifier key is NULL appears in
-    # sizes AND in cls, but a plain per-column equi-join would never
-    # match the two, zero-filling __c and reporting a spuriously
+    # NULL-safe grid join via a STRUCT key: a class whose quasi-identifier key
+    # is NULL appears in sizes AND in cls, but a plain per-column equi-join
+    # would never match the two, zero-filling __c and reporting a spuriously
     # maximal EMD. Spark struct equality compares fields with
     # NULL == NULL true AND stays a hash-partitionable join KEY —
     # unlike the r11 per-column eqNullSafe conjunction, which the r12

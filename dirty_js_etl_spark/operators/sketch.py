@@ -356,9 +356,9 @@ def hll_portable(
 
 # ---------------------------------------------------------------------------
 # Portable bottom-k samples: the deterministic twins of the native KLL
-# quantile and theta set-op sketches (VERDICT r10 task 2 — every other
-# approximate family already has a bit-exact SQL-replayable twin: x6b
-# MinHash, x192 HLL, x149 CMS, x200 k-means, x201 IVF, x202 streaming).
+# quantile and theta set-op sketches (every other approximate family already
+# has a bit-exact SQL-replayable twin: x6b MinHash, x192 HLL, x149 CMS, x200
+# k-means, x201 IVF, x202 streaming).
 # ---------------------------------------------------------------------------
 
 

@@ -37,7 +37,7 @@ def deep_merge(base: dict, override: dict) -> dict:
     other value (including lists) replaces. Returns a new dict; inputs
     are not mutated.
 
-    DELIBERATE DIVERGENCE from the reference (ADVICE r03): the
+    DELIBERATE DIVERGENCE from the reference: the
     single-object ``BuildConfig(obj)`` path uses SHALLOW
     ``extend(config, obj)`` (``mappr.js:89`` — no ``true`` deep flag),
     so passing ``{modes: {sqlTest: true}}`` there replaces ``modes``

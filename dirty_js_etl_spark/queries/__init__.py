@@ -1,16 +1,14 @@
 """Driver-facing query registry, split into per-domain modules.
 
-Until round 5 this package was a single 8,300-line ``queries.py``; it is
-now a package whose submodules are imported IN THE ORIGINAL FILE ORDER so
-``_REGISTRY`` keeps the exact registration order the driver-window
-rotation (``_shared._window_order``) and ``tests/test_queries.py`` pin.
+The submodules register their queries as they are imported, so import
+order is registration order, and registration order (after the
+sentinels) is the driver window order (``_shared._window_order``).
 Do not reorder the imports below — appending new modules at the end is
 the only safe extension.
 
-Every public name of the old flat module (query callables, the flagship
-``users_mapping``/``users_dest`` fixtures, the registry API) is hoisted
-to the package namespace so ``from dirty_js_etl_spark.queries import
-x85_chunk_documents`` keeps working unchanged.
+Every query callable, the flagship ``users_mapping``/``users_dest``
+fixtures and the registry API are hoisted to the package namespace, so
+``from dirty_js_etl_spark.queries import x85_chunk_documents`` works.
 """
 
 from __future__ import annotations
@@ -22,7 +20,6 @@ from dirty_js_etl_spark.queries._shared import (  # noqa: F401
     RegisteredQuery,
     _REGISTRY,
     _SENTINELS,
-    _driver_green,
     _window_order,
     all_oracles,
     all_queries,
@@ -31,7 +28,7 @@ from dirty_js_etl_spark.queries._shared import (  # noqa: F401
     users_mapping,
 )
 
-# Registration order = import order = original file order.  DO NOT REORDER.
+# Import order is the driver window order.  DO NOT REORDER.
 from dirty_js_etl_spark.queries import (  # noqa: E402
     q01_combinators,
     q02_tsql,
@@ -53,8 +50,8 @@ from dirty_js_etl_spark.queries import (  # noqa: E402
     q18_portable_sketches,
 )
 
-# Hoist every query callable / helper defined by the domain modules so the
-# package exposes the same flat namespace the original queries.py did.
+# Hoist every query callable / helper defined by the domain modules into
+# the package namespace.
 _pkg = _sys.modules[__name__]
 for _mod in (
     q01_combinators,

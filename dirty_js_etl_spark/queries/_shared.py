@@ -76,106 +76,32 @@ def register(name: str, oracle: str | None):
 
 
 # ---------------------------------------------------------------------------
-# Driver CORRECTNESS window rotation — MECHANICAL since round 4.
+# Driver window: the driver verifies the first ~51 entries of queries(), so
+# the order is a contract. _SENTINELS lead it, then every other query in
+# registration order (the import order in queries/__init__.py). A query that
+# must be in the window goes into _SENTINELS.
 #
-# The driver verifies the FIRST ~51 entries of queries() each round; with
-# 170+ registered queries a static order leaves most of the surface
-# driver-unverified forever (round 2 proved the cost: a fixture drift
-# broke 10 queries behind a green CORRECTNESS file). Rounds 1–3 rotated a
-# hand-pinned _WINDOW list; this round the rotation derives itself from
-# the committed driver artifacts: every query WITHOUT a green row in any
-# CORRECTNESS_r*.json sorts to the front (in registration order), so each
-# new round's window automatically covers the oldest unverified band and
-# advances when the driver commits its results — no per-round editing,
-# nothing to forget (ADVICE r03).
-#
-# _SENTINELS stay at the very front every round: the flagship merge
-# pipeline (exercises C7/C2/C13/C8/C3/C12 + T5 in one query — the §2
-# regression canary) plus queries whose implementation changed THIS
-# round and must re-appear green even though they were verified before.
+# The sentinels: the flagship merge pipeline (C7/C2/C13/C8/C3/C12 + T5 in
+# one query, the §2 regression canary), then the graph, linkage and MinHash
+# queries whose plans depend most on shuffle partitioning and spread.
 # ---------------------------------------------------------------------------
 _SENTINELS: list[str] = [
-    # evergreen §2 canary
     "t5_merge_full",
-    # round 14 (VERDICT r13 task 5): these queries' physical plans changed
-    # in r13 (pagerank two-exchange iterations + collect_set co-purchase
-    # pairs; blocked/weighted enumeration spreads; both-sided minhash band
-    # spread) AFTER they rotated out of the r12/r13 driver windows, so the
-    # driver has confirmed only their OLD spellings end-to-end. They are
-    # locally green at sf0.01/sf0.1/sf1 (CORRECTNESS_LOCAL_sf1_r13changed)
-    # but must lead the r14 window for driver re-confirmation:
     "x143_pagerank",
     "x141_triangle_count",
     "x205_link_pairs",
     "x210_weighted_link_pairs",
-    "x6_minhash_lsh_pairs",  # rows-only (approximate), VERDICT r13 task 4
-    # r13 spread companions whose enumeration plans also changed while
-    # outside the window (blocked_link_pairs feeds x206/x209 too):
+    "x6_minhash_lsh_pairs",
     "x206_entity_resolution",
     "x209_multi_pass_resolution",
 ]
-
-
-def _driver_green() -> set[str]:
-    """Query names with at least one green row across every committed
-    driver artifact (``CORRECTNESS_r*.json`` at the repo root). Green =
-    no error and matching row counts (hash-checked queries also match
-    hashes before the driver sets rows_match; rows-only checks have no
-    hash to match)."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            hash_green = (
-                row.get("err") is None
-                and row.get("rows_match")
-                and row.get("hash_match") is not False
-            )
-            # approximate ops have no oracle; the driver records the
-            # weaker rows-only check as err='no_oracle' + a row count
-            rows_only_green = (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if hash_green or rows_only_green:
-                green.add(name)
-    return green
 
 
 def _window_order() -> list[str]:
     missing = [n for n in _SENTINELS if n not in _REGISTRY]
     if missing:
         raise ValueError(f"_SENTINELS names not registered: {missing}")
-    green = _driver_green()
-    head = list(_SENTINELS)
-    # oracle-able pending queries first: a driver window slot spent on an
-    # oracle-less query only buys a rows-only check, so those sort behind
-    # every pending hash-checkable query (VERDICT r04 #4)
-    pending_oracle = [
-        n
-        for n in _REGISTRY
-        if n not in green and n not in head and _REGISTRY[n].oracle
-    ]
-    pending_rows_only = [
-        n
-        for n in _REGISTRY
-        if n not in green and n not in head and not _REGISTRY[n].oracle
-    ]
-    verified = [n for n in _REGISTRY if n in green and n not in head]
-    return head + pending_oracle + pending_rows_only + verified
+    return list(_SENTINELS) + [n for n in _REGISTRY if n not in _SENTINELS]
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -500,7 +500,7 @@ def t15_pipeline_run(spark, sf_dir):
     # run() call, and the per-table TableRunResult map comes back as an
     # observable run-summary relation — rows after the run plus audit
     # action counts per destination — so the runner surface is
-    # driver-hash-checked rather than pytest-only (VERDICT r05 #8).
+    # driver-hash-checked rather than pytest-only.
     # dim_nation appends the full nation table into an empty seed
     # (T7 path, all-INSERT audit); users is the flagship merge (T5
     # path, odd custkeys INSERT / even custkeys UPDATE by fixture
@@ -574,7 +574,7 @@ def t13_temp_qualified(spark, sf_dir):
     # passthrough — [bracketed] identifiers, ISNULL, LEN (trailing-space
     # rule), CHARINDEX (argument order preserved: DuckDB strpos swaps) —
     # so the lexical shim's output is driver-hash-checked, not
-    # pytest-only (VERDICT r05 #8).
+    # pytest-only.
     cat = _cat(spark, sf_dir)
     cat.register(
         "#staging", cat.read("customer").filter(F.col("c_custkey") <= 500)

@@ -97,7 +97,7 @@ def x3_text_quality(spark, sf_dir):
     return docs.select(
         "doc_id",
         # raw integer-count ratios, no decimal re-round (kmv
-        # discipline, VERDICT r12 task 3; quality keeps its round --
+        # discipline; quality keeps its round --
         # the weighted sum's decimal literals differ across engines)
         s["alpha_ratio"].alias("alpha_ratio"),
         s["stopword_ratio"].alias("stopword_ratio"),
@@ -360,8 +360,8 @@ def _x7_oracle_sql(
     """DuckDB recomputation of the FULL simhash pipeline — signatures
     (portable 60-bit md5 token hash, per-bit +1/-1 votes), pigeonhole
     chunk join, the hot-bucket cap, and exact hamming — so x7 is
-    hash-checked end to end (VERDICT r05 #4: the banding IS
-    SQL-expressible once the token hash is engine-portable)."""
+    hash-checked end to end (the banding IS SQL-expressible once the
+    token hash is engine-portable)."""
     votes = ",\n         ".join(
         f"sum(CASE WHEN (h >> {c * chunk_bits + i}) & 1 = 1 "
         f"THEN 1 ELSE -1 END) AS v_{c}_{i}"
@@ -744,12 +744,11 @@ FROM events GROUP BY event_type
 """,
 )
 def x35_sketches(spark, sf_dir):
-    # sketch aggregations per event type, now DETERMINISTICALLY oracled
-    # (VERDICT r04 #5): the exact per-group counts hash-check against
-    # DuckDB directly, and the HLL++/KLL estimates are emitted as
-    # in-error-bound BOOLEANS computed against the exact answers inside
-    # the same aggregate (|hll - exact| <= 5% of exact at rsd=0.02;
-    # each approx quantile inside the exact [q-0.01, q+0.01] quantile
+    # sketch aggregations per event type, DETERMINISTICALLY oracled: the exact
+    # per-group counts hash-check against DuckDB directly, and the HLL++/KLL
+    # estimates are emitted as in-error-bound BOOLEANS computed against the
+    # exact answers inside the same aggregate (|hll - exact| <= 5% of exact at
+    # rsd=0.02; each approx quantile inside the exact [q-0.01, q+0.01] quantile
     # envelope at accuracy=10000) — the oracle asserts TRUE. The raw
     # estimate magnitudes stay covered by tests/test_sketches.py; the
     # rows-only estimate surface lives on in x35b_sketch_estimates.

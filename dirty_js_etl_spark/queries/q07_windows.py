@@ -57,8 +57,8 @@ def x61_moving_avg_range(spark, sf_dir):
 
     events = _cat(spark, sf_dir).read("events")
     # cast("timestamp") is a no-op on LTZ input and rescues NTZ input
-    # (driver sessions without the catalog's conf protections) — the
-    # x61/x139 driver-red root cause of round 4 (VERDICT r04 #1).
+    # (driver sessions without the catalog's conf protections), which
+    # once made x61/x139 fail under the driver.
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.unix_micros(F.col("ts").cast("timestamp")))

@@ -627,7 +627,7 @@ def x139_asof_nearest(spark, sf_dir):
     # the SAME partitioned sort (no composed second asof_join — round
     # 3's double-pass spelling re-read the same parquet relation through
     # two union branches and tripped a plan-id-sensitive analyzer flake
-    # under the driver, VERDICT r03 #1).  Candidate picks are struct
+    # under the driver).  Candidate picks are struct
     # argmin/argmax so equal-timestamp purchases resolve by event_id
     # exactly like the oracle's ORDER BY abs(dt), ts, event_id.
     from pyspark.sql import Window
@@ -685,7 +685,7 @@ def x139_asof_nearest(spark, sf_dir):
         F.min(f_cand).over(wf).alias("f"),
     ).filter(F.col("side") == 0)
     # microsecond-exact distances via unix_micros (no float); the casts
-    # are no-ops on LTZ and rescue NTZ driver sessions (VERDICT r04 #2)
+    # are no-ops on LTZ and rescue NTZ driver sessions
     back_d = F.unix_micros(F.col("t").cast("timestamp")) - F.unix_micros(
         F.col("b.ts").cast("timestamp")
     )

@@ -520,8 +520,8 @@ def x156_bpe_vocab(spark, sf_dir):
 
 
 def _x163_oracle_sql(cap: int = 1000, maxham: int = 3) -> str:
-    """DuckDB recomputation of the FULL perceptual-hash pipeline
-    (VERDICT r05 #4): payload bytes (= UTF-8 text — the fixture
+    """DuckDB recomputation of the FULL perceptual-hash pipeline:
+    payload bytes (= UTF-8 text — the fixture
     payloads are ASCII, so ``ord`` per char IS the byte), numpy
     ``array_split``'s first-r-cells-get-the-extra-byte layout, cell
     mean vs global mean bits (integer byte sums ≤ a few hundred values

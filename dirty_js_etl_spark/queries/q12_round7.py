@@ -67,16 +67,14 @@ FROM events WHERE event_type = 'purchase'
 """,
 )
 def x202_running_totals_batch(spark, sf_dir):
-    # The transformWithState-free portable twin of x191 (VERDICT r07
-    # task 7): the stateful operator emits, per purchase event, the
-    # user's running total so far; the batch spelling is a cumulative
-    # window over the same (ts, event_id) total order with the same
-    # integer-cents rounding, so EVERY intermediate emission — not just
-    # the drained final state — is hash-checked here even on boxes
-    # where the protobuf-gated streaming API cannot start (this
-    # sandbox: no google.protobuf, no package index to install one —
-    # probed 2026-08-15). Scale: one user-keyed shuffle + sort, the
-    # same partitioning the state store itself would use.
+    # The transformWithState-free portable twin of x191: the stateful operator
+    # emits, per purchase event, the user's running total so far; the batch
+    # spelling is a cumulative window over the same (ts, event_id) total order
+    # with the same integer-cents rounding, so EVERY intermediate emission —
+    # not just the drained final state — is hash-checked here even on boxes
+    # where the protobuf-gated streaming API cannot start (no google.protobuf
+    # installed). Scale: one user-keyed shuffle + sort, the same partitioning
+    # the state store itself would use.
     from pyspark.sql import Window
 
     ev = _cat(spark, sf_dir).read("events")

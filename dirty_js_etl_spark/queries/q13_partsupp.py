@@ -118,11 +118,11 @@ def _derived_partsupp(cat, part=None):
     dim-sized by definition (TPC-H: 0.01% of lineitem), so the collect
     is bounded, while an unpartitioned window moves the frame to one
     partition and fires ``WindowExec: No Partition Defined`` on every
-    Q2/Q9/Q11/Q20 run (VERDICT r07 task 6). The collect also makes
+    Q2/Q9/Q11/Q20 run. The collect also makes
     ``s_cnt`` a plan literal, so the pmod needs no 1-row count join.
     The four si offsets are deduped map-side via ``array_distinct`` so
     the (ps_partkey, ps_suppkey) primary-key invariant holds even when
-    the supplier count divides 7, 14, or 21 (ADVICE r07) — at fixture
+    the supplier count divides 7, 14, or 21 — at fixture
     scales the offsets are already distinct and results are unchanged.
     """
     supplier = cat.read("supplier")

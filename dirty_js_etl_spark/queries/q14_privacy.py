@@ -110,7 +110,7 @@ WITH base AS (
 ), grid AS (
   SELECT z.k1, z.k2, z.n, g.s, g.gc, coalesce(c.c, 0) AS c, t.tn, t.m
   FROM sizes z CROSS JOIN g CROSS JOIN tot t
-  -- IS NOT DISTINCT FROM per quasi-identifier key (ADVICE r10): a
+  -- IS NOT DISTINCT FROM per quasi-identifier key: a
   -- NULL-keyed class must match its own cls rows, mirroring the
   -- engine's eqNullSafe grid join
   LEFT JOIN cls c ON c.k1 IS NOT DISTINCT FROM z.k1

@@ -137,7 +137,7 @@ nodes AS (
 ), clusters AS (
   SELECT id, min(label) AS entity_id FROM walk GROUP BY id
 ), reps AS (
-  -- NULL-rec records are per-record singletons (ADVICE r10): the
+  -- NULL-rec records are per-record singletons: the
   -- representative map covers non-null record values only, and the
   -- re-attach coalesces to the record's own id
   SELECT min(p_partkey) AS p_partkey, rec, blk FROM c0
@@ -155,7 +155,7 @@ def x206_entity_resolution(spark, sf_dir):
     # (min-label pointer jumping — dup_clusters), every record then
     # inheriting its (rec, blk) representative's entity via one
     # null-safe value-keyed join (eqNullSafe / IS NOT DISTINCT FROM —
-    # ADVICE r09: NULL-valued records must keep a row; identical
+    # NULL-valued records must keep a row; identical
     # partition to record-level resolution for uncapped blocks — see
     # resolve_entities). Components run on the pair graph only;
     # singletons keep their representative's id.
@@ -345,7 +345,7 @@ WITH RECURSIVE r0 AS (
 ), recs AS (
   SELECT min(id) AS id, rec FROM r0 GROUP BY rec
 ), {_lsh_pair_ctes("recs")}, reps2 AS (
-  -- NULL-rec records are per-record singletons (ADVICE r10)
+  -- NULL-rec records are per-record singletons
   SELECT min(id) AS id, rec FROM r0 WHERE rec IS NOT NULL GROUP BY rec
 ), m AS (
   SELECT r0.id, COALESCE(reps2.id, r0.id) AS rep
@@ -387,15 +387,14 @@ def x209_multi_pass_resolution(spark, sf_dir):
     # typos in the sort prefix), LSH char-gram bands (catches both) —
     # canonicalize pair endpoints to record-value representatives, and
     # resolve one entity per record over the union match graph.
-    # Value-level throughout, with SHARED materializations (VERDICT r10
-    # task 1): the (id, rec, blocks) projection localCheckpoints ONCE
-    # and feeds all three generators (no per-pass re-projection), and
-    # the rec-level rep table is computed ONCE — it IS the LSH
-    # generator's value-dedup (fed via dedup_values=False; identical by
-    # construction since lsh_link_pairs' own dedup is the same
+    # Value-level throughout, with SHARED materializations: the (id, rec,
+    # blocks) projection localCheckpoints ONCE and feeds all three generators
+    # (no per-pass re-projection), and the rec-level rep table is computed ONCE
+    # — it IS the LSH generator's value-dedup (fed via dedup_values=False;
+    # identical by construction since lsh_link_pairs' own dedup is the same
     # min-id-per-rec groupBy) AND multi_pass_resolve's rep map.
-    # Canonicalization stays candidate-cardinality, components run on
-    # the pair graph only, the final re-attach is null-safe.
+    # Canonicalization stays candidate-cardinality, components run on the pair
+    # graph only, the final re-attach is null-safe.
     from dirty_js_etl_spark.operators.dedup import portable_token_hash60
     from dirty_js_etl_spark.operators.linkage import (
         blocked_link_pairs,

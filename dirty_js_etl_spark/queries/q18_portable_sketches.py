@@ -1,4 +1,4 @@
-"""Portable twins of the native DataSketches demos (VERDICT r10 task 2).
+"""Portable twins of the native DataSketches demos.
 
 x182 (KLL quantile rollup) and x183 (theta set ops) were the last
 approximate family still rows-only WITHOUT a bit-exact SQL-replayable

@@ -116,10 +116,10 @@ def _finish_dump() -> None:
 def base_confs() -> dict[str, str]:
     """The session config dict, factored out so tools (profilers, plan
     dumpers) build sessions with EXACTLY the production configs instead
-    of hand-copied subsets that drift (ADVICE r13: the r13 profiler
-    omitted the join configs and profiled SMJ plans that production
-    never runs). ``SPARK_GRAFT_EXTRA_CONF`` overrides are applied last,
-    here, so every consumer honors the deployment hook."""
+    of hand-copied subsets that drift (a profiler that omits the join configs
+    profiles SMJ plans that production never runs). ``SPARK_GRAFT_EXTRA_CONF``
+    overrides are applied last, here, so every consumer honors the deployment
+    hook."""
     confs = {
         "spark.sql.shuffle.partitions": str(SHUFFLE_PARTITIONS),
         "spark.sql.adaptive.enabled": "true",
@@ -201,9 +201,9 @@ def get_spark(app_name: str = "dirty_js_etl_spark", master: str | None = None) -
     #       pick SHJ from size ESTIMATES (canBuildLocalHashMap). Estimates
     #       can be badly wrong after filters/explodes at cluster scale, and
     #       an SHJ build side does not spill — a misestimate can OOM an
-    #       executor where SMJ would have spilled (ADVICE r13). Kept
-    #       because the r13/r14 A/Bs measured a real win on top of (a)
-    #       (r13 join subset 20.7→15.9 s; x194 2.5→0.94 s); deployments
+    #       executor where SMJ would have spilled. Kept because A/Bs
+    #       measured a real win on top of (a) (a join-heavy bench subset
+    #       20.7→15.9 s; x194 2.5→0.94 s); deployments
     #       joining skew-prone or estimate-hostile inputs should flip it
     #       back via SPARK_GRAFT_EXTRA_CONF=
     #       "spark.sql.join.preferSortMergeJoin=true" and keep leg (a).

@@ -32,7 +32,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a true TIMESTAMP(NANOS) fixture the probe itself throws without it
     # (previously this only worked if catalog.fixture_catalog's events
     # loader had already set the conf in the same session — a hidden
-    # ordering dependency, ADVICE r03)
+    # ordering dependency)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     probed = spark.read.parquet(f"{sf_dir}/events.parquet")
     # legacy nanos fixtures surface as bigint nanos under the nanosAsLong

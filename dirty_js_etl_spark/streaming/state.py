@@ -61,7 +61,7 @@ class RunningTotalProcessor(StatefulProcessor):
     pick the LAST emission — not the max total, which only coincides
     with the final state while every input is non-negative (refunds /
     negative corrections would otherwise silently return an
-    intermediate peak — ADVICE r05)."""
+    intermediate peak)."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._total = handle.getValueState("total", "cents bigint, seq bigint")
@@ -135,10 +135,10 @@ def run_stream_running_totals(
                 "spark.sql.streaming.stateStore.providerClass", old
             )
     # update-mode emits one row per (user, batch); the FINAL state is the
-    # emission with the highest per-key sequence number the processor
-    # stamps — correct even when a batch shrinks the total (refunds),
-    # where the rounds-1–5 max(total_cents) would return an intermediate
-    # peak (ADVICE r05). max_by on the monotone per-key seq is exact.
+    # emission with the highest per-key sequence number the processor stamps —
+    # correct even when a batch shrinks the total (refunds), where
+    # max(total_cents) would return an intermediate peak. max_by on the
+    # monotone per-key seq is exact.
     return (
         spark.table(query_name)
         .groupBy("user_id")

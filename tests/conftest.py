@@ -27,7 +27,7 @@ def duck():
     # keep DuckDB spill outside the worktree (default is cwd-relative .tmp/)
     # per-process spill dir: DuckDB's spill file names are not
     # process-unique, so concurrent sweeps/test runs would clobber
-    # each other's files under a shared path (ADVICE r13)
+    # each other's files under a shared path
     con.execute(
         f"SET temp_directory='/tmp/duckdb_oracle_tmp_{os.getpid()}'"
     )

@@ -116,10 +116,9 @@ def test_forward_asof_picks_next_at_or_after(spark):
 
 def test_tiebreak_resolves_equal_timestamps(spark):
     """Two right rows sharing (key, ts): the one with the smallest
-    tiebreak column wins in BOTH directions — the semantics of the
-    oracles' ``ORDER BY ts, event_id LIMIT 1`` (VERDICT r03 #2: without
-    the tiebreaker the running fill picks whichever row the shuffle
-    ordered last)."""
+    tiebreak column wins in BOTH directions — the semantics of the oracles'
+    ``ORDER BY ts, event_id LIMIT 1`` (without the tiebreaker the running fill
+    picks whichever row the shuffle ordered last)."""
     left = spark.createDataFrame(
         [(1, 10), (1, 30)], "k long, t long"
     )
@@ -255,7 +254,7 @@ def test_null_payload_matched_wholesale(spark):
     # the winning right row is matched as a ROW: a NULL payload column in
     # it stays NULL (pandas merge_asof semantics) instead of falling back
     # to an older right row's value — and therefore agrees with the
-    # bucketed variant's boundary handoff (ADVICE r04, both items)
+    # bucketed variant's boundary handoff
     from dirty_js_etl_spark.operators.asof import asof_join, asof_join_bucketed
 
     right = spark.createDataFrame(
@@ -280,7 +279,7 @@ def test_null_payload_matched_wholesale(spark):
 def test_tolerance_and_payload_from_same_row(spark):
     # staleness is measured on the SAME right row that supplies the
     # payload: a fresh-but-NULL newer row must not let an older stale
-    # row's value slip past the tolerance filter (ADVICE r04)
+    # row's value slip past the tolerance filter
     from dirty_js_etl_spark.operators.asof import asof_join
 
     right = spark.createDataFrame(

@@ -76,7 +76,7 @@ def test_batched_trainer_equals_sequential(spark):
     # the safe-batch acceptance rule must be invisible in the output:
     # bit-identical merge tables at batch sizes 1 (strict sequential),
     # 4, and 8 — including on a corpus with count ties and overlapping
-    # candidate pairs (VERDICT r04 #6)
+    # candidate pairs
     docs = spark.createDataFrame(
         [
             (1, "low low low lower lower newest newest newest newest widest"),
@@ -136,7 +136,7 @@ def test_batched_trainer_uses_fewer_jobs(spark):
 def test_safe_batch_ends_at_colliding_merge():
     # the created-pair bound assumes each accepted merge's output symbol
     # is fresh; a candidate whose a+b matches a previously-emitted merge
-    # (or </w>) must end the batch (ADVICE r05)
+    # (or </w>) must end the batch
     from dirty_js_etl_spark.operators.bpe import _safe_batch
 
     top = [

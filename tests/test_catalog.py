@@ -33,7 +33,7 @@ def test_spread_repartitions_small_single_file(spark, tmp_path):
 
 
 def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
-    """ADVICE r06: a large single-file splittable parquet that Spark
+    """A large single-file splittable parquet that Spark
     already carves into >= parallelism scan partitions must NOT be
     round-tripped through a repartition shuffle. Simulated by shrinking
     maxPartitionBytes below the file size / parallelism ratio."""
@@ -58,7 +58,7 @@ def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
 
 
 def test_harden_session_raises_when_tz_unsettable(spark, monkeypatch):
-    """VERDICT r06: a warn in a 226-query sweep is easy to miss — when the
+    """A warn in a 226-query sweep is easy to miss — when the
     session timezone cannot be pinned to UTC, raise."""
     real_set = spark.conf.set
 

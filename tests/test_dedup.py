@@ -178,7 +178,7 @@ def test_dup_clusters_both_physical_paths_agree(spark):
 
 
 def test_dup_clusters_single_task_failure_falls_back(spark):
-    """VERDICT r12 task 5: a task failure inside the single-task
+    """A task failure inside the single-task
     union-find (forced here via an injected in-task raise, which fails
     the job through Spark's real task-failure path) must NOT fail the
     query — dup_clusters falls back to the distributed min-label loop
@@ -424,12 +424,9 @@ def _ref_pairs(word_lists, threshold=0.5, cap=1000):
     """Brute-force O(n²) reference replicating ngram_jaccard_pairs
     semantics on plain Python sets: distinct word 3-grams (short docs
     collapse to one whole-doc shingle), df-capped intersections,
-    uncapped sizes, RAW integer-ratio jaccard (the VERDICT r12 task 3
-    kmv discipline — the pipeline stopped rounding to 6 decimals in
-    r13, but this reference kept its round-6 until hypothesis finally
-    generated a non-terminating ratio, 1/3, in r14 and exposed the
-    stale spelling; both sides are one IEEE division of the same
-    integers, so they are bit-identical)."""
+    uncapped sizes, RAW integer-ratio jaccard (the kmv discipline: both
+    sides are one IEEE division of the same integers, so they are
+    bit-identical)."""
     def shingles(ws):
         if len(ws) < 3:
             return {" ".join(ws)}  # split('') -> [''] gives {''} for empty
@@ -474,9 +471,9 @@ def test_prefix_filter_is_lossless_vs_brute_force(spark, corpus, threshold, cap)
     the (df, hash) prefix order, duplicate docs, and the small-pair
     α=1 edge where the ≥2 prefix-count filter must relax — the exact
     regimes where a buggy prefix scheme silently drops pairs. The
-    small caps make max_shingle_df BIND on duplicate-heavy corpora
-    (ADVICE r10): document frequency must stay RECORD-level under
-    dedup_values, so both modes cap the same shingles."""
+    small caps make max_shingle_df BIND on duplicate-heavy corpora:
+    document frequency must stay RECORD-level under dedup_values, so both
+    modes cap the same shingles."""
     df = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
         "doc_id bigint, text string",
@@ -610,7 +607,7 @@ def test_probe_from_persisted_index_identical(spark, tmp_path):
 
 
 def test_probe_candidate_cap_keeps_argmax(spark):
-    """VERDICT r12 task 2: the opt-in per-probe candidate cap bounds
+    """The opt-in per-probe candidate cap bounds
     verify cost in duplicate-dense corpora WITHOUT changing the argmax
     decision. skew_docs' whale bucket holds 200 identical corpus docs;
     an ingest doc probing it draws 200 candidates uncapped. With

@@ -70,8 +70,8 @@ def test_two_dim_predicate_prunes_file_subset(spark, catalog, tmp_path):
 
 
 def test_timestamp_cluster_column_supported(spark, catalog, tmp_path):
-    """Timestamps cluster via an order-preserving epoch proxy (ADVICE
-    r03: approxQuantile is numeric-only, which used to throw): bucket
+    """Timestamps cluster via an order-preserving epoch proxy
+    (approxQuantile is numeric-only, which used to throw): bucket
     ranks must be monotone in event time."""
     ev = catalog.read("events").select("event_id", "ts", "user_id")
     ranked = ev.select(

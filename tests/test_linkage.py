@@ -60,14 +60,13 @@ def test_resolution_is_transitive_and_keeps_singletons(spark):
 
 
 def test_resolution_keeps_null_valued_records(spark):
-    # ADVICE r09: a record whose record or block expression is NULL can
-    # never pair (NULL == NULL is NULL in the block join) but it must
-    # still get a row in the output. ADVICE r10 sharpens the NULL-REC
-    # case: missing data is not evidence of identity, so NULL-rec
-    # records are PER-RECORD singletons — they must NOT fuse with each
-    # other (a NULL-heavy column would otherwise silently merge
-    # millions of rows into one entity). A NULL BLOCK with a non-null
-    # record still collapses identical record values.
+    # A record whose record or block expression is NULL can never pair (NULL ==
+    # NULL is NULL in the block join) but it must still get a row in the
+    # output. The NULL-REC case: missing data is not evidence of identity, so
+    # NULL-rec records are PER-RECORD singletons — they must NOT fuse with each
+    # other (a NULL-heavy column would otherwise silently merge millions of
+    # rows into one entity). A NULL BLOCK with a non-null record still
+    # collapses identical record values.
     df = spark.createDataFrame(
         [
             (1, "acme corp", "a"),
@@ -94,7 +93,7 @@ def test_resolution_keeps_null_valued_records(spark):
 
 
 def test_multi_pass_null_recs_stay_singletons(spark):
-    # ADVICE r10: multi_pass_resolve must not collapse all NULL-rec
+    # multi_pass_resolve must not collapse all NULL-rec
     # records into one entity — each keeps its own id unless a pair
     # names it directly.
     from dirty_js_etl_spark.operators.linkage import multi_pass_resolve
@@ -212,7 +211,7 @@ def test_multi_pass_union_strictly_dominates_each_single_pass(catalog):
 
 
 def test_weighted_single_field_degenerates_to_blocked_pairs(catalog):
-    # VERDICT r09 task 7 property: with one field and weight 1.0 the
+    # Property: with one field and weight 1.0 the
     # weighted scorer IS blocked_link_pairs (score == distance), so the
     # prefilters (length-diff + thresholded levenshtein) are provably
     # lossless on the fixture too.
@@ -266,7 +265,7 @@ def test_weighted_fields_price_brand_disagreement(spark):
 
 
 def test_lsh_pass_catches_blocking_token_typos(spark):
-    """Recall case for the third pass (VERDICT r08 task 6): a typo in
+    """Recall case for the third pass: a typo in
     the BLOCKING token itself escapes the exact-key block entirely —
     the two records land in different blocks — but LSH bands over the
     whole record still bucket them together, and Levenshtein confirms.

@@ -213,7 +213,7 @@ def test_merge_into_sql_goldens():
 
 
 # ---------------------------------------------------------------------------
-# Gated Delta execution parity (VERDICT r10 task 4, the x191 gate idiom)
+# Gated Delta execution parity (the x191 gate idiom)
 # ---------------------------------------------------------------------------
 
 

@@ -308,7 +308,7 @@ def test_phash_signature_deterministic(spark, catalog):
 
 def test_null_payload_degrades_not_fails(spark):
     # real binary ingestion can carry NULL payloads; every kernel must
-    # degrade (sentinel row / zero rows), never fail the task (ADVICE r08)
+    # degrade (sentinel row / zero rows), never fail the task
     from dirty_js_etl_spark.operators.multimodal import (
         decode_audio,
         decode_images,
@@ -328,7 +328,7 @@ def test_null_payload_degrades_not_fails(spark):
 def test_payload_builders_reject_non_ascii_text(spark):
     # the synthetic builders size by octet_length but slice by chars;
     # a multi-byte char would silently diverge payload bytes from the
-    # arithmetic oracles, so the builders raise instead (ADVICE r08)
+    # arithmetic oracles, so the builders raise instead
     import pytest
     from py4j.protocol import Py4JJavaError
     from dirty_js_etl_spark.operators.multimodal import (
@@ -345,7 +345,7 @@ def test_payload_builders_reject_non_ascii_text(spark):
 
 
 def test_payload_builders_pass_null_text_through(spark):
-    # ADVICE r09: octet_length(NULL) == length(NULL) evaluates NULL, so
+    # octet_length(NULL) == length(NULL) evaluates NULL, so
     # without an explicit isNull branch the guard's otherwise() fell into
     # raise_error and a single NULL text row failed the whole job with a
     # misleading "requires ASCII" error. NULL must flow through to a NULL

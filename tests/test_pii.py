@@ -40,7 +40,7 @@ def test_counts_and_placeholders(spark):
     assert got[1].redacted == "mail <EMAIL> and <EMAIL> now"
     assert got[2].n_ipv4 == 1
     assert got[2].redacted == "server at <IP> port 80"
-    # the full 3-3-4 number redacts WHOLE (ADVICE r10 — the suffix-only
+    # the full 3-3-4 number redacts WHOLE (the suffix-only
     # pattern used to leave '-4567' in the scrubbed output); 555-0042
     # still matches the 7-digit suffix form
     assert got[3].n_phone_full == 1 and got[3].n_phone == 1
@@ -67,7 +67,7 @@ def test_counts_follow_replacement_order(spark):
 
 
 def test_redaction_sql_escapes_quotes():
-    # ADVICE r10: a pattern/placeholder containing a single quote must
+    # A pattern/placeholder containing a single quote must
     # produce a syntactically valid oracle string (doubled quotes)
     import duckdb
 

@@ -42,7 +42,7 @@ def test_k_anonymity_conserves_every_record(catalog):
 
 def test_k_anonymity_unmapped_geo_key_is_conserved(catalog, spark):
     # A geo key absent from the hierarchy must not vanish from the
-    # report (ADVICE r07): it cannot merge with siblings, so it stays
+    # report: it cannot merge with siblings, so it stays
     # under its own key and reports as 'suppressed'.
     cust = catalog.read("customer").withColumn(
         "c_nationkey",
@@ -154,7 +154,7 @@ def test_t_closeness_hand_computed(spark):
 
 
 def test_t_closeness_null_keyed_class(spark):
-    # ADVICE r10: a NULL quasi-identifier key forms its own class and
+    # A NULL quasi-identifier key forms its own class and
     # must match its cls rows through the null-safe grid join — before
     # the fix __c zero-filled and the class reported the maximal EMD.
     # Global: s=0 x2, s=1 x2 (N=4, m=2). NULL class = {0, 1}: exactly

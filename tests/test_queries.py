@@ -40,35 +40,24 @@ def test_every_query_has_callable_and_name_parity():
     assert len(qs) >= 20
 
 
-def test_window_rotation_is_mechanical():
-    """The driver-verification window derives itself from the committed
-    CORRECTNESS_r*.json artifacts: sentinels lead, never-driver-green
-    queries come next (registration order), already-green queries trail.
-    Guards the round-4 rotation contract (ADVICE r03: rotation must not
-    depend on per-round manual edits)."""
-    from dirty_js_etl_spark.queries import (
-        _SENTINELS,
-        _driver_green,
-        _window_order,
-    )
+def test_window_is_sentinels_then_registration_order():
+    """The driver verifies the first ~51 entries of queries(): sentinels
+    lead, then every other query in registration order."""
+    from dirty_js_etl_spark.queries import _SENTINELS, _window_order
 
     order = _window_order()
     assert order[: len(_SENTINELS)] == _SENTINELS
     assert sorted(order) == sorted(_REGISTRY)  # a permutation, no loss
-    green = _driver_green()
-    tail = order[len(_SENTINELS):]
-    # three strictly-ordered bands after the sentinels: pending+oracle,
-    # pending rows-only (window slots buy hash checks first, VERDICT r04
-    # #4), then already-green
-    def band(n):
-        if n in green:
-            return 2
-        return 0 if _REGISTRY[n].oracle else 1
+    assert order[len(_SENTINELS):] == [
+        n for n in _REGISTRY if n not in _SENTINELS
+    ]
 
-    bands = [band(n) for n in tail]
-    assert bands == sorted(bands), "window bands out of order"
-    # rows 1-3 artifacts are committed, so the green set is non-trivial;
-    # full driver coverage (green == registry) is the steady state once
-    # every query has been verified at least once (reached round 6) —
-    # the rotation then simply cycles already-green queries
-    assert green
+
+def test_unregistered_sentinel_raises(monkeypatch):
+    from dirty_js_etl_spark.queries import _shared
+
+    monkeypatch.setattr(
+        _shared, "_SENTINELS", [*_shared._SENTINELS, "no_such_query"]
+    )
+    with pytest.raises(ValueError, match="no_such_query"):
+        _shared._window_order()

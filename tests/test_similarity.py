@@ -115,7 +115,7 @@ def _recall(exact_df, approx_df):
 
 
 def test_lsh_recall_clustered_defaults(spark, clustered):
-    """Second operating point (VERDICT r06 #6): on a clustered corpus the
+    """Second operating point: on a clustered corpus the
     DEFAULT table shape (16 x 4 bits) must recover >=90% of brute-force
     top-10 — P(bucket collision) per table ~0.5 at within-cluster
     angles, so 16 tables push miss probability below 1e-5."""

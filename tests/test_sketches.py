@@ -131,7 +131,7 @@ def test_theta_overlap_error_bound_vs_exact(spark, catalog):
 
 
 def test_portable_quantile_twin_tracks_exact_and_native(spark, catalog):
-    # VERDICT r10 task 2: the x214 bottom-k twin must (a) sit inside the
+    # The x214 bottom-k twin must (a) sit inside the
     # same value-space bands as the exact percentiles and (b) agree with
     # the native KLL rollup (x182) closely enough that the twin really
     # is a stand-in for the sketch it replays.

@@ -64,7 +64,7 @@ def test_two_phase_count_distinct(spark, skewed):
 
 
 # ---------------------------------------------------------------------------
-# Planted-whale-key stress (VERDICT r06 #7): a key holding ~30% of the
+# Planted-whale-key stress: a key holding ~30% of the
 # sf0.1 events must not pin ~30% of rows to one reducer under the
 # skew-proof layouts x30 (salted join) and x171 (bucketed as-of) use.
 # Group sizes are the right proxy on a shared box: every row of a key
@@ -152,7 +152,7 @@ def test_whale_key_bucketed_asof_equals_plain(spark):
 
 
 # ---------------------------------------------------------------------------
-# Adversarial-skew fixture (VERDICT r10 task 3, tools/make_skew_fixture.py):
+# Adversarial-skew fixture (tools/make_skew_fixture.py):
 # one blocking key / join key holding ~10% of the corpus. These pin the
 # two claims SCALE.md makes about hot keys: the linkage hot-block caps
 # BIND before the quadratic, and AQE's skew-join split actually fires.
@@ -274,7 +274,7 @@ def test_salted_join_equals_plain_on_skew_fixture(catalog):
 
 
 def test_hot_band_bucket_cap_binds_on_skew_docs(spark):
-    # the MinHash analog of the whale-block pin (VERDICT r11 task 5):
+    # the MinHash analog of the whale-block pin:
     # skew_docs plants ONE degenerate band bucket — 10% of docs share a
     # boilerplate text, so their signatures (hence (band, bucket) rows
     # in EVERY band) are identical. The cap must drop exactly that
@@ -282,7 +282,7 @@ def test_hot_band_bucket_cap_binds_on_skew_docs(spark):
     # twin buckets still pair. Measured at 30k docs (3k-doc whale):
     # uncapped 11.5 s / 4,498,800 pairs vs capped 2.9 s / 300 pairs —
     # the output delta is exactly the whale's 3000·2999/2 in-bucket
-    # quadratic plus nothing (SCALE.md r12).
+    # quadratic plus nothing (SCALE.md, "Band-index hot-bucket pin").
     from dirty_js_etl_spark.operators.dedup import minhash_lsh_pairs
     from tools.make_skew_fixture import skew_docs
 
@@ -309,19 +309,18 @@ def test_hot_band_bucket_cap_binds_on_skew_docs(spark):
 
 
 def test_hot_band_bucket_cap_binds_on_lsh_link_pairs(spark):
-    # the linkage-LSH analog of the whale-bucket pin (VERDICT r12 task
-    # 6): skew_link_records plants ~10% of records as DISTINCT values
-    # sharing a 61-char boilerplate (one unique trailing char each) —
-    # the shape lsh_link_pairs's value-dedup CANNOT collapse, yet their
-    # char-gram minhash signatures agree with (59/60)²≈0.97 probability
-    # per band, so one bucket per band holds ~97% of the whale. The cap
-    # must drop exactly those hot buckets: whale pairs (levenshtein 1,
-    # within max_distance) vanish, while the planted size-2 twin
-    # buckets still pair. A whale outside the hot bucket sits in a
-    # deterministic SINGLETON bucket (its signature carries its own
-    # final gram, shared with nothing), so capped == uncapped minus
-    # in-whale pairs exactly. Measured at 20k records / 2k-whale
-    # (record-level spelling, dedup_values=False): see SCALE.md r13.
+    # the linkage-LSH analog of the whale-bucket pin: skew_link_records plants
+    # ~10% of records as DISTINCT values sharing a 61-char boilerplate (one
+    # unique trailing char each) — the shape lsh_link_pairs's value-dedup
+    # CANNOT collapse, yet their char-gram minhash signatures agree with
+    # (59/60)²≈0.97 probability per band, so one bucket per band holds ~97% of
+    # the whale. The cap must drop exactly those hot buckets: whale pairs
+    # (levenshtein 1, within max_distance) vanish, while the planted size-2
+    # twin buckets still pair. A whale outside the hot bucket sits in a
+    # deterministic SINGLETON bucket (its signature carries its own final gram,
+    # shared with nothing), so capped == uncapped minus in-whale pairs exactly.
+    # Measured at 20k records / 2k-whale (record-level spelling,
+    # dedup_values=False): see SCALE.md, "Linkage-LSH whale-bucket pin".
     from dirty_js_etl_spark.operators.linkage import lsh_link_pairs
     from tools.make_skew_fixture import skew_link_records
 

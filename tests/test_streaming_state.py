@@ -30,7 +30,7 @@ def test_processor_wiring_importable(spark):
     )
 
     # emit_seq: per-key emission sequence so the consumer can take the
-    # LAST emission (exact under refunds/negative cents — ADVICE r05)
+    # LAST emission (exact under refunds/negative cents)
     assert OUTPUT_SCHEMA == "user_id bigint, total_cents bigint, emit_seq bigint"
     assert hasattr(RunningTotalProcessor, "handleInputRows")
     # building the (unstarted) streaming plan must succeed

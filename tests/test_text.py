@@ -123,7 +123,7 @@ class TestCompressionRatio:
 
 
 def test_x135_golden_table_sf0001(spark):
-    """Golden pin for x135 (VERDICT r08 task 4): the full sf0.001 output
+    """Golden pin for x135: the full sf0.001 output
     table, digested. x135 is rows-only (a SQL oracle can't reproduce
     zlib), so this pin is its verification story: the digest freezes
     every (doc_id, ratio) pair the query emits on the committed fixture.

@@ -6,12 +6,11 @@ an order-insensitive value hash (columns sorted by name, rows sorted,
 values stringified with float rounding). Not the driver's exact hash — a
 fast feedback loop with the same shape.
 
-Float normalization is 12 significant digits (rounds 1–3 used 6g, which
-could mask a driver-red low-bit mismatch behind local green — VERDICT
-r03 #6). 12g is strictly harder than any plausible driver rounding while
-still absorbing the one legitimate cross-engine artifact the queries
-already guard (±0.0 after round(); collapsed here as well). Every query
-that is hash-green at 12g was also hash-green under the driver in rounds
+Float normalization is 12 significant digits (6g could mask a driver-red
+low-bit mismatch behind local green). 12g is strictly harder than any plausible
+driver rounding while still absorbing the one legitimate cross-engine artifact
+the queries already guard (±0.0 after round(); collapsed here as well). Every
+query that is hash-green at 12g was also hash-green under the driver in rounds
 1–3 where the windows overlap — the 82 worked examples agree.
 
 Usage: python tools/check_oracle.py [--json OUT.json] [--bare-session]
@@ -22,7 +21,7 @@ Usage: python tools/check_oracle.py [--json OUT.json] [--bare-session]
 full-registry verification (all queries, not just the driver's window)
 is on the record each round.
 
-``--bare-session`` is the DRIVER-PARITY mode (VERDICT r04 #2): it builds
+``--bare-session`` is the DRIVER-PARITY mode: it builds
 a SparkSession with none of ``session.get_spark``'s protections — no
 ``inferTimestampNTZ=false``, no pre-set ``nanosAsLong``, no builder-time
 UTC timezone — exactly the class of session the driver hands to
@@ -47,9 +46,8 @@ from dirty_js_etl_spark.session import get_spark  # noqa: E402
 
 def _run_meta() -> dict:
     """Self-dating metadata: every committed artifact should say which
-    head and instant it describes (VERDICT r12: sweeps whose rows did
-    not change are byte-identical, so mtime/git alone cannot prove
-    freshness)."""
+    head and instant it describes (sweeps whose rows did not change are
+    byte-identical, so mtime/git alone cannot prove freshness)."""
     import datetime
     import subprocess
 
@@ -108,8 +106,8 @@ def normalize(df_pandas):
 
 
 def main() -> int:
-    # order-insensitive flag parsing (ADVICE r05: the old positional
-    # consumption silently ate '--json' as sf_dir when flags were swapped)
+    # order-insensitive flag parsing (positional consumption would
+    # silently eat '--json' as sf_dir when flags are swapped)
     args = sys.argv[1:]
     json_out = None
     bare = False
@@ -145,7 +143,7 @@ def main() -> int:
     # (.tmp/), and a large sweep once committed a 2.1 GB spill file into git.
     # per-process spill dir: DuckDB's spill file names are not
     # process-unique, so concurrent sweeps/test runs would clobber
-    # each other's files under a shared path (ADVICE r13)
+    # each other's files under a shared path
     con.execute(
         f"SET temp_directory='/tmp/duckdb_oracle_tmp_{os.getpid()}'"
     )

@@ -48,9 +48,8 @@ HOSTILE = {
 
 def _run_meta() -> dict:
     """Self-dating metadata: every committed artifact should say which
-    head and instant it describes (VERDICT r12: sweeps whose rows did
-    not change are byte-identical, so mtime/git alone cannot prove
-    freshness)."""
+    head and instant it describes (sweeps whose rows did not change are
+    byte-identical, so mtime/git alone cannot prove freshness)."""
     import datetime
     import subprocess
 

@@ -1,5 +1,5 @@
 """Generate a one-off sf1 validation dataset (10x sf0.1) for the
-scale-stress sweep (VERDICT r06 #3).
+scale-stress sweep.
 
 NOT driver test data — the driver's correctness artifacts still run on
 /root/testdata. This harness replicates sf0.1 ten times with
@@ -77,7 +77,7 @@ def main(out_dir: str, reps: int = REPS) -> None:
     # keep DuckDB spill outside the worktree (default is cwd-relative .tmp/)
     # per-process spill dir: DuckDB's spill file names are not
     # process-unique, so concurrent sweeps/test runs would clobber
-    # each other's files under a shared path (ADVICE r13)
+    # each other's files under a shared path
     con.execute(
         f"SET temp_directory='/tmp/duckdb_oracle_tmp_{os.getpid()}'"
     )

@@ -1,9 +1,8 @@
-"""Adversarially SKEWED variants of the driver fixtures (VERDICT r10
-task 3): the uniform 10×-replica scale audit (`tools/scale_audit.py`)
-catches super-linear growth, but nothing exercised a genuinely hot key —
-one merge/join key, linkage block, or band bucket holding ~10% of the
-corpus. These transforms plant exactly that, deterministically, so the
-hot-key guards can be asserted rather than assumed:
+"""Adversarially SKEWED variants of the driver fixtures: the uniform
+10×-replica scale audit (`tools/scale_audit.py`) catches super-linear growth,
+but nothing exercised a genuinely hot key — one merge/join key, linkage block,
+or band bucket holding ~10% of the corpus. These transforms plant exactly that,
+deterministically, so the hot-key guards can be asserted rather than assumed:
 
 - ``skew_part``: ~10% of ``part`` rows get the SAME linkage blocking
   key (the p_name noun every block key derives from is rewritten to a
@@ -81,13 +80,13 @@ def skew_records(spark, n_rows: int = 50_000) -> DataFrame:
 
 
 def skew_docs(spark, n_rows: int = 20_000) -> DataFrame:
-    """A document corpus with a DEGENERATE LSH band bucket (VERDICT r11
-    task 5): ~10% of docs share one normalized text (the web-boilerplate
-    shape — identical ToS/footer pages are the real-world cause), so
-    their minhash signatures — hence their (band, bucket) rows in EVERY
-    band — are identical and one bucket holds ~10% of the corpus. The
-    uncapped candidate self-join pays that bucket's quadratic term;
-    ``max_bucket_size`` must drop exactly that bucket and nothing else.
+    """A document corpus with a DEGENERATE LSH band bucket: ~10% of docs
+    share one normalized text (the web-boilerplate shape — identical
+    ToS/footer pages are the real-world cause), so their minhash signatures
+    — hence their (band, bucket) rows in EVERY band — are identical and one
+    bucket holds ~10% of the corpus. The uncapped candidate self-join pays
+    that bucket's quadratic term; ``max_bucket_size`` must drop exactly that
+    bucket and nothing else.
     The other 90% of docs are unique 6-word texts whose every shingle
     embeds the doc id, so they collide with nothing — EXCEPT a planted
     TWIN per 100-block (`id % 100 == 57` carries id−1's text, and 56 is
@@ -118,7 +117,7 @@ def skew_docs(spark, n_rows: int = 20_000) -> DataFrame:
 
 def skew_link_records(spark, n_rows: int = 600) -> DataFrame:
     """A linkage catalog with a DEGENERATE CHAR-GRAM BAND BUCKET of
-    DISTINCT record values (VERDICT r12 task 6) — the one hot-key shape
+    DISTINCT record values — the one hot-key shape
     ``lsh_link_pairs``'s value-dedup cannot collapse: ~10% of records
     share a 61-char boilerplate and differ only in ONE trailing char
     (a distinct normalization-stable codepoint per whale, so values are

@@ -33,10 +33,10 @@ def main() -> None:
     from dirty_js_etl_spark.session import base_confs
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # EXACTLY the production session configs (ADVICE r13: the hand-copied
-    # subset here omitted the r13 join configs, so profiles showed SMJ
-    # plans production never runs), plus event logging. base_confs()
-    # applies SPARK_GRAFT_EXTRA_CONF last, the one override hook.
+    # EXACTLY the production session configs (a hand-copied subset that
+    # omits the join configs profiles SMJ plans production never runs),
+    # plus event logging. base_confs() applies SPARK_GRAFT_EXTRA_CONF
+    # last, the one override hook.
     builder = (
         SparkSession.builder.appName("r13_profile")
         .master(f"local[{cpus}]")
@@ -78,7 +78,7 @@ def main() -> None:
             # isFinalPlan=false. PROFILE_COLLECT=1 executes df's own
             # QueryExecution (collect) first, making this the true
             # post-AQE final plan (AQEShuffleRead, runtime join
-            # rewrites) — the artifact VERDICT r13 task 3 asks for.
+            # rewrites).
             if os.environ.get("PROFILE_COLLECT"):
                 df.collect()
                 print("--- AQE final plan (post-execution, collect) ---")

@@ -1,4 +1,4 @@
-"""One-shot audit of cross-engine decimal rounding (VERDICT r12 task 3).
+"""One-shot audit of cross-engine decimal rounding.
 
 The class: Spark's ``F.round(x, N)`` on DOUBLE rounds the value's
 SHORTEST DECIMAL REPR (Java ``BigDecimal.valueOf`` goes through
@@ -6,7 +6,7 @@ SHORTEST DECIMAL REPR (Java ``BigDecimal.valueOf`` goes through
 BINARY double (scaled multiply + half-away-from-zero). The two disagree
 on doubles whose shortest repr terminates at digit N+1 with a '5' (a
 decimal midpoint) while the binary value sits on the other side — the
-exact divergence ADVICE r12 caught on kmv_estimate's 3-decimal
+exact divergence once found in kmv_estimate's 3-decimal
 re-round, fixed there by returning the raw correctly-rounded division
 (operators/sketch.py kmv_estimate).
 

@@ -1,6 +1,5 @@
 """Scale audit: bench the headline queries at two fixture scales and
-flag super-linear growth (VERDICT r06 #3's "no query showing
-super-linear blowup", as a standing per-round artifact).
+flag super-linear growth, as a standing artifact.
 
 Runs ``bench.py`` twice via subprocess (each gets a fresh JVM so the
 two scales don't share cache state), then reports per-query
