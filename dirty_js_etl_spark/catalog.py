@@ -110,15 +110,11 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     # A big SPLITTABLE file is not under-split: Spark carves it into
     # ~size/maxPartitionBytes scan partitions, so only reshuffle when the
     # estimated scan partition count is ALSO below parallelism (file
-    # count alone would reshuffle large single-file tables).
-    try:
-        max_bytes = int(
-            str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-            .lower()
-            .removesuffix("b")
-        )
-    except ValueError:
-        max_bytes = 134217728
+    # count alone would reshuffle large single-file tables). The size
+    # comes from the JVM's parsed conf, so a unit-suffixed setting
+    # ("2m", "64MB") reads as the scan planner reads it.
+    sql_conf = spark._jsparkSession.sessionState().conf()
+    max_bytes = sql_conf.filesMaxPartitionBytes()
     paths = [uri.removeprefix("file:") for uri in files]
     if not all(os.path.exists(p) for p in paths):
         return df  # remote storage: trust Spark's own split planning

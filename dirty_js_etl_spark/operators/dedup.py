@@ -266,18 +266,11 @@ def _cap(banded: DataFrame, max_bucket_size: int) -> DataFrame:
 
 
 def _band_candidates(
-    left: DataFrame,
-    right: DataFrame | None = None,
-    top_m: int | None = None,
+    left: DataFrame, right: DataFrame | None = None
 ) -> DataFrame:
     """Distinct ``(id_a, id_b)`` pairs that share a (band, bucket): the
     self-join of ``left`` (``id_a < id_b``) or ``left`` probing
-    ``right`` (``id_a`` from left, ``id_b`` from right).
-
-    ``top_m`` keeps, per ``id_a``, only the ``top_m`` partners that
-    co-bucket in the most bands (ties → min ``id_b``) — same pair-keyed
-    shuffle as the distinct, plus a per-``id_a`` window bounded by
-    bands × bucket cap."""
+    ``right`` (``id_a`` from left, ``id_b`` from right)."""
     l = left.alias("l")
     r = (left if right is None else right).alias("r")
     cond = (F.col("l.band") == F.col("r.band")) & (
@@ -285,20 +278,10 @@ def _band_candidates(
     )
     if right is None:
         cond = cond & (F.col("l.id") < F.col("r.id"))
-    pairs = l.join(r, cond).select(
-        F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b")
-    )
-    if top_m is None:
-        return pairs.distinct()
-    w = Window.partitionBy("id_a").orderBy(
-        F.col("__bands").desc(), F.col("id_b")
-    )
     return (
-        pairs.groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("__bands"))
-        .withColumn("__crn", F.row_number().over(w))
-        .filter(F.col("__crn") <= top_m)
-        .select("id_a", "id_b")
+        l.join(r, cond)
+        .select(F.col("l.id").alias("id_a"), F.col("r.id").alias("id_b"))
+        .distinct()
     )
 
 
@@ -432,7 +415,6 @@ def ngram_jaccard_pairs(
     jaccard_threshold: float = 0.5,
     max_shingle_df: int = 1000,
     prefix_l: int = 3,
-    dedup_values: bool = False,
 ) -> DataFrame:
     """Exact n-gram-Jaccard near-dup pairs (no MinHash).
 
@@ -462,126 +444,18 @@ def ngram_jaccard_pairs(
     - survivors verify by ``array_intersect`` on the capped per-doc
       arrays, built in the same groupBy that forms the prefixes.
 
-    ``dedup_values`` (default False) is the dedup-then-pair option for
-    EXACT-duplicate-heavy corpora, where record-level pairing is
-    O(clique²). Identical normalized texts collapse to a min-id
-    representative (md5 value key; text never shuffles), the pipeline
-    runs on DISTINCT values, and pairs re-expand through the clique map
-    at output cardinality. Cross-value member pairs inherit the value
-    pair's jaccard; same-value member pairs get J = szc/(2·sz − szc),
-    exactly the record-level result under the capped-intersection /
-    uncapped-size contract (no pair when szc = 0). The representative
-    carries its clique size as a df weight, so the cap counts RECORDS
-    and the emitted pair set is IDENTICAL either way
-    (hypothesis-tested with a binding cap). Default OFF: on a
-    low-exact-dup corpus (sf1 documents are 99.8% distinct texts) the
-    extra materializations and expansion joins cost ~2× at sf0.1.
+    Pairs are RECORD-level: identical texts pair with each other. A
+    dedup-then-pair spelling (pair distinct texts, then expand the
+    cliques to the same pair set) cost ~2× at sf0.1 on a corpus whose
+    texts are 99.8% distinct (sf1), so it is not a mode here (SCALE.md).
     """
-    from pyspark.sql import Window
-
-    from dirty_js_etl_spark.operators.text import normalize_text
-
-    tau = jaccard_threshold
-    if dedup_values:
-        # narrow clique shuffle: only (id, 128-bit value key) rows move;
-        # the representative's TEXT is fetched by one id-keyed join
-        # (AQE broadcasts the value table when small), never shuffled
-        # for the whole corpus. members / reps / mem are each consumed
-        # by several expansion joins, so they materialize once
-        # (GC-scoped eager localCheckpoints of narrow tables).
-        members = df.select(
-            F.col(id_col).alias("id"),
-            F.md5(normalize_text(F.col(text_col))).alias("vk"),
-        ).localCheckpoint(eager=True)
-        reps = (
-            members.groupBy("vk")
-            .agg(F.min("id").alias("rep"), F.count(F.lit(1)).alias("__c"))
-            .localCheckpoint(eager=True)
-        )
-        # the representative carries its clique size __c so the df cap
-        # stays RECORD-level: a shingle's document frequency must count
-        # every record (sum of clique sizes), not distinct values —
-        # otherwise the two modes would cap different shingles and emit
-        # different pairs
-        rep_docs = df.select(
-            F.col(id_col).alias("id"),
-            normalize_text(F.col(text_col)).alias("nt"),
-        ).join(reps.select(F.col("rep").alias("id"), "__c"), "id")
-        vpairs, sizes = _ngram_pairs_core(
-            rep_docs, "id", "nt", shingle_k, tau, max_shingle_df, prefix_l,
-            weight_col="__c",
-        )
-        repmap = reps.select("rep", "vk", "__c")
-        mem = (
-            members.join(reps.select("vk", "rep"), "vk")
-            .select("id", "rep")
-            .localCheckpoint(eager=True)
-        )
-        ma = mem.select(F.col("rep").alias("id_a"), F.col("id").alias("__ia"))
-        mb = mem.select(F.col("rep").alias("id_b"), F.col("id").alias("__ib"))
-        cross = (
-            vpairs.join(ma, "id_a")
-            .join(mb, "id_b")
-            .select(
-                F.least("__ia", "__ib").alias("id_a"),
-                F.greatest("__ia", "__ib").alias("id_b"),
-                "jaccard",
-            )
-        )
-        intra_q = (
-            repmap.filter(F.col("__c") > 1)
-            .join(sizes, "rep")
-            .filter(F.col("szc") > 0)
-            .withColumn(
-                "jaccard", _jaccard(F.col("szc"), F.col("sz"), F.col("sz"))
-            )
-            .filter(F.col("jaccard") >= tau)
-            .select("vk", "jaccard")
-        )
-        intra = (
-            intra_q.join(
-                members.select("vk", F.col("id").alias("id_a")), "vk"
-            )
-            .join(members.select("vk", F.col("id").alias("id_b")), "vk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "jaccard")
-        )
-        return cross.unionByName(intra)
-    pairs, _ = _ngram_pairs_core(
-        df, id_col, text_col, shingle_k, tau, max_shingle_df, prefix_l
-    )
-    return pairs
-
-
-def _ngram_pairs_core(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int,
-    jaccard_threshold: float,
-    max_shingle_df: int,
-    prefix_l: int,
-    weight_col: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The record-level prefix-filtered pipeline. Returns
-    (pairs (id_a, id_b, jaccard), sizes (rep, sz, szc)) — sizes come
-    off the already-checkpointed array table for the value-level
-    wrapper's intra-clique jaccard. ``weight_col`` (a long column on
-    ``df``, default 1/row) weights each doc's contribution to the
-    per-shingle document frequency — the value-level wrapper passes
-    clique sizes so the df cap binds on RECORD-level counts."""
-    from pyspark.sql import Window
-
-    w_expr = F.col(weight_col) if weight_col else F.lit(1)
     base = df.select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), shingle_k).alias("sh"),
-        w_expr.cast("long").alias("__w"),
     )
     exploded = base.select(
         "id",
         F.size("sh").alias("sz"),  # shingles are array_distinct → set size
-        "__w",
         F.explode(F.transform("sh", lambda s: F.xxhash64(s))).alias("g"),
     )
     # document frequency per shingle as ONE window over the posting
@@ -591,7 +465,7 @@ def _ngram_pairs_core(
     # buffers at most one shingle's posting list, the rows the cap is
     # about to bound.
     capped = exploded.withColumn(
-        "__df", F.sum("__w").over(Window.partitionBy("g"))
+        "__df", F.count(F.lit(1)).over(Window.partitionBy("g"))
     ).filter(F.col("__df") <= max_shingle_df)
     # one shuffle by id builds both the global-order arrays (verify
     # side) and the prefixes (candidate side); sort_array on
@@ -693,7 +567,7 @@ def _ngram_pairs_core(
             "__inter", F.size(F.array_intersect("__gaa", "__gab"))
         )
     )
-    pairs = (
+    return (
         verified.withColumn(
             "jaccard",
             _jaccard(F.col("__inter"), F.col("__sza"), F.col("__szb")),
@@ -701,10 +575,6 @@ def _ngram_pairs_core(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    sizes = arr.select(
-        F.col("id").alias("rep"), "sz", F.size("ga").alias("szc")
-    )
-    return pairs, sizes
 
 
 # ---------------------------------------------------------------------------
@@ -1313,7 +1183,6 @@ def probe_near_dup_index(
     seed: int = 42,
     hash_fn: Callable[[Column], Column] | None = None,
     portable_bands: bool = False,
-    max_candidates_per_probe: int | None = None,
 ) -> DataFrame:
     """The PER-INGEST half of :func:`incremental_near_dup`: band the new
     batch with the same seeded signature family, probe the persisted
@@ -1323,18 +1192,15 @@ def probe_near_dup_index(
     (shingle_k/num_perm/bands/seed/hash_fn/portable_bands) MUST match
     the index build.
 
-    ``max_candidates_per_probe`` (opt-in) bounds the verify cost per
-    ingest doc in duplicate-dense corpora: only the top-m candidates by
-    BAND-AGREEMENT COUNT (bands in which the pair co-bucketed, a
-    monotone proxy for Jaccard; ties → min old_id) are verified. The
-    argmax survives whenever the true best co-buckets in at least as
-    many bands as the m-th candidate — ALL bands for an exact or
-    near-exact dup (``test_probe_candidate_cap_keeps_argmax``)."""
+    Every candidate is verified: a whale bucket of c identical corpus
+    docs costs c verified pairs per probing ingest doc, bounded by the
+    index's bucket cap. A top-m-by-band-agreement probe cap kept the
+    argmax on the skew fixture but no query or bench ran it, so it is
+    not a mode here (SCALE.md, "x216 probe-candidate growth")."""
     new_posts = _postings(new_docs, id_col, text_col, shingle_k, hash_fn)
     cands = _band_candidates(
         _band_table(new_posts, num_perm, bands, seed, portable_bands),
         index.band_index.withColumnRenamed("old_id", "id"),
-        top_m=max_candidates_per_probe,
     )
     scored = _count_based_verify(
         cands,

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -65,31 +65,28 @@ def blocked_link_pairs(
     block_col: str | Column,
     max_distance: int = 2,
     max_block_size: int = 10_000,
-    dedup_values: bool = True,
 ) -> DataFrame:
     """Within-block record pairs with Levenshtein distance ≤
     ``max_distance``. Returns (id_a, id_b, distance), id_a < id_b.
 
-    ``dedup_values`` (default True) collapses identical (record, block)
-    VALUES to their min-id representative before pairing — the
-    dedup-then-link discipline: on a duplicate-heavy catalog a c-member
-    identical-value clique otherwise costs O(c²) join rows AND O(c²)
-    output pairs carrying no information beyond the value pair (the
-    10×-replica sf1 fixture made the record-level spelling emit 4.57M
-    pairs in 283 s; value-level is ~100× smaller). Identity linking
-    (same value ⇒ same entity) belongs to the exact-dedup pass /
-    :func:`resolve_entities`'s representative mapping. The hot-block
-    cap then counts distinct VALUES per block. ``dedup_values=False``
-    restores raw record-pair enumeration."""
+    Pairs are VALUE-level: identical (record, block) values collapse to
+    their min-id representative before pairing (dedup-then-link), so an
+    identical-value clique emits no intra-clique pair and appears once,
+    under its min id. On a duplicate-heavy catalog a c-member clique
+    would otherwise cost O(c²) join rows and O(c²) output pairs carrying
+    no information beyond the value pair (the 10×-replica sf1 fixture
+    made record-level pairing emit 4.57M pairs in 283 s; value-level is
+    ~100× smaller). Identity linking (same value ⇒ same entity) belongs
+    to the exact-dedup pass / :func:`resolve_entities`'s representative
+    mapping. The hot-block cap counts distinct VALUES per block."""
     rec = F.col(record_col) if isinstance(record_col, str) else record_col
     blk = F.col(block_col) if isinstance(block_col, str) else block_col
     recs = df.select(
         F.col(id_col).alias("id"), rec.alias("rec"), blk.alias("blk")
     )
-    if dedup_values:
-        # one value-keyed shuffle (map-side combined min); later stages
-        # work on distinct (rec, blk) values, never clique members
-        recs = recs.groupBy("rec", "blk").agg(F.min("id").alias("id"))
+    # one value-keyed shuffle (map-side combined min); later stages
+    # work on distinct (rec, blk) values, never clique members
+    recs = recs.groupBy("rec", "blk").agg(F.min("id").alias("id"))
     sizes = recs.groupBy("blk").agg(F.count(F.lit(1)).alias("__n"))
     recs = (
         recs.join(sizes, "blk").filter(F.col("__n") <= max_block_size).drop("__n")
@@ -101,11 +98,11 @@ def blocked_link_pairs(
     # is keyed (blk, rec, id) for uniform spread, which does NOT satisfy
     # the join's blk-alone distribution — it only survives (and
     # parallelizes the Levenshtein work) while the build side stays
-    # under the broadcast threshold, which holds exactly when
-    # dedup_values keeps the value table dimension-sized. If the value
-    # table outgrows the threshold at cluster scale, the planner inserts
-    # its own blk exchange above this one (correct, but the pin becomes
-    # a wasted shuffle of the few-hundred-KB value table — harmless).
+    # under the broadcast threshold, which holds exactly while the value
+    # table stays dimension-sized. If the value table outgrows the
+    # threshold at cluster scale, the planner inserts its own blk
+    # exchange above this one (correct, but the pin becomes a wasted
+    # shuffle of the few-hundred-KB value table — harmless).
     # No broadcast hint on the build side on purpose: a hint would turn
     # a mis-sized value table into an executor OOM instead of a silent
     # fallback to the shuffle join.
@@ -135,7 +132,6 @@ def sorted_neighborhood_pairs(
     sort_key: str | Column | None = None,
     window: int = 4,
     max_distance: int = 2,
-    dedup_values: bool = True,
 ) -> DataFrame:
     """Blocked sorted-neighborhood candidate pairs (the OTHER classic
     linkage generator): within each block, records sort by
@@ -152,18 +148,15 @@ def sorted_neighborhood_pairs(
     SNM is the pass of choice for blocks too hot to pair exhaustively).
     Returns (id_a, id_b, distance), id_a < id_b.
 
-    ``dedup_values`` (default True) collapses identical
-    (record, block, key) VALUES to their min-id representative before
-    ranking — the same dedup-then-link discipline as
-    :func:`blocked_link_pairs`, and here it also IMPROVES recall: a
-    c-member identical-value clique otherwise occupies c consecutive
-    ranks and crowds genuinely-near distinct values out of the
+    Identical (record, block, key) VALUES collapse to their min-id
+    representative before ranking — the same dedup-then-link discipline
+    as :func:`blocked_link_pairs`, and here it also IMPROVES recall: a
+    c-member identical-value clique would otherwise occupy c consecutive
+    ranks and crowd genuinely-near distinct values out of the
     neighborhood window, while emitting c·(window−1) no-information
     clique pairs (17.4 s at sf1 on the 10×-replica fixture; value
     level is sub-second and window slots go to distinct values).
     """
-    from pyspark.sql import Window
-
     rec = F.col(record_col) if isinstance(record_col, str) else record_col
     blk = F.col(block_col) if isinstance(block_col, str) else block_col
     if sort_key is None:
@@ -174,8 +167,7 @@ def sorted_neighborhood_pairs(
         F.col(id_col).alias("id"), rec.alias("rec"), blk.alias("blk"),
         key.alias("key"),
     )
-    if dedup_values:
-        recs = recs.groupBy("rec", "blk", "key").agg(F.min("id").alias("id"))
+    recs = recs.groupBy("rec", "blk", "key").agg(F.min("id").alias("id"))
     w = Window.partitionBy("blk").orderBy("key", "id")
     ranked = recs.withColumn("rn", F.row_number().over(w))
     l, r = ranked.alias("l"), ranked.alias("r")
@@ -276,107 +268,6 @@ def lsh_link_pairs(
     )
 
 
-def _chunk_candidates(
-    recs: DataFrame, field: str, d: int
-) -> DataFrame:
-    """Lossless PassJoin-style candidate pairs (Li, Deng, Feng 2011 —
-    partition-based signatures for edit-distance joins): every pair
-    with ``levenshtein(field_a, field_b) <= d`` must share a chunk —
-    split a's field into ``d+1`` contiguous chunks; since ≤ d edits
-    cannot destroy all d+1 chunks (pigeonhole), at least one occurs
-    VERBATIM in b, and ≤ d edits shift its position by at most d. So
-    the candidate join is an EQUI-join on (block, chunk index, partner
-    length, chunk text): a emits its d+1 chunks keyed by its own
-    length; b emits, for every assumed partner length within ±d of its
-    own and every shift in [−d, d], the substring at the chunk's
-    shifted position. Returns distinct (id_a, id_b), id_a < id_b, same
-    block by construction.
-
-    Scale: signature explosion is (d+1)·(2d+1)² rows per record on the
-    probe side (75 at d=2) and d+1 on the anchor side — linear in the
-    corpus, narrow rows — and the join is equi-keyed (one shuffle), so
-    the quadratic within-block enumeration never happens; output is
-    candidate-cardinality. NULL fields compare as '' (the caller's
-    missing-as-empty contract)."""
-    nch = d + 1
-    fld = F.coalesce(F.col(field), F.lit(""))
-    base = recs.select(
-        "id", "blk", fld.alias("__s"), F.length(fld).alias("__n")
-    )
-
-    def start(j: int, nexpr: str) -> str:
-        return f"(({j} * {nexpr}) DIV {nch}) + 1"
-
-    def clen(j: int, nexpr: str) -> str:
-        return (
-            f"((({j + 1}) * {nexpr}) DIV {nch})"
-            f" - (({j} * {nexpr}) DIV {nch})"
-        )
-
-    anchor_arr = F.array(*[
-        F.struct(
-            F.lit(j).alias("j"),
-            F.expr(start(j, "__n")).cast("int").alias("p"),
-            F.expr(clen(j, "__n")).cast("int").alias("ln"),
-        )
-        for j in range(nch)
-    ])
-    anchors = (
-        base.select("id", "blk", "__s", "__n", F.explode(anchor_arr).alias("c"))
-        .select(
-            "id",
-            "blk",
-            F.col("__n").alias("alen"),
-            F.col("c.j").alias("j"),
-            F.col("__s").substr(F.col("c.p"), F.col("c.ln")).alias("sub"),
-        )
-    )
-    probe_arr = F.array(*[
-        F.struct(
-            F.lit(j).alias("j"),
-            F.expr(f"__n + {off}").cast("int").alias("alen"),
-            F.expr(f"({start(j, f'(__n + {off})')}) + {shift}")
-            .cast("int")
-            .alias("p"),
-            F.expr(clen(j, f"(__n + {off})")).cast("int").alias("ln"),
-        )
-        for off in range(-d, d + 1)
-        for j in range(nch)
-        for shift in range(-d, d + 1)
-    ])
-    probes = (
-        base.select("id", "blk", "__s", "__n", F.explode(probe_arr).alias("c"))
-        .filter(
-            (F.col("c.alen") >= 0)
-            & (F.col("c.p") >= 1)
-            & (F.col("c.p") + F.col("c.ln") - 1 <= F.col("__n"))
-        )
-        .select(
-            "id",
-            "blk",
-            F.col("c.alen").alias("alen"),
-            F.col("c.j").alias("j"),
-            F.col("__s").substr(F.col("c.p"), F.col("c.ln")).alias("sub"),
-        )
-    )
-    a, b = anchors.alias("a"), probes.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.j") == F.col("b.j"))
-            & (F.col("a.alen") == F.col("b.alen"))
-            & (F.col("a.sub") == F.col("b.sub"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-
-
 def weighted_link_pairs(
     df: DataFrame,
     id_col: str,
@@ -385,9 +276,6 @@ def weighted_link_pairs(
     block_col: str | Column,
     max_score: float,
     max_block_size: int = 10_000,
-    dedup_values: bool = True,
-    prefilter: bool = True,
-    chunk_field: int | None = None,
 ) -> DataFrame:
     """Weighted multi-field record pairs (Fellegi–Sunter-lite): within
     each block, pairs whose score = Σ wᵢ · levenshtein(fieldᵢ_a,
@@ -407,21 +295,14 @@ def weighted_link_pairs(
     bound, so an ANSI-SQL oracle replays the plain inequality; weights
     chosen as binary-exact doubles keep the score sum bit-stable.
 
-    ``chunk_field`` switches candidate GENERATION from the quadratic
-    within-block enumeration to the lossless PassJoin chunk-signature
-    equi-join on that field (:func:`_chunk_candidates`, with the
-    per-field cap dᵢ = ⌊S/wᵢ⌋); the full score verifies after, so the
-    output is IDENTICAL (hypothesis-tested). Pick the longest, most
-    selective capped field; at sf0.1 the x210 shape drops from 4.4M
-    enumerated block pairs to candidate-cardinality, ~2× faster."""
+    Without the two prefilters x210 took 7.8–8.2 s against 4.7–5.1 s
+    at sf0.1; PassJoin chunk-signature candidate generation took 11.7 s
+    against 4.4–4.8 s for the block enumeration (SCALE.md), so neither
+    is a mode of this function."""
     if len(fields) != len(weights):
         raise ValueError("fields and weights must align")
     if any(w < 0 for w in weights):
         raise ValueError("weights must be non-negative")
-    if chunk_field is not None and not (
-        0 <= chunk_field < len(weights) and weights[chunk_field] > 0
-    ):
-        raise ValueError("chunk_field must index a positive-weight field")
     blk = F.col(block_col) if isinstance(block_col, str) else block_col
     cols = [
         (F.col(f) if isinstance(f, str) else f).alias(f"f{i}")
@@ -429,8 +310,7 @@ def weighted_link_pairs(
     ]
     recs = df.select(F.col(id_col).alias("id"), *cols, blk.alias("blk"))
     fnames = [f"f{i}" for i in range(len(fields))]
-    if dedup_values:
-        recs = recs.groupBy(*fnames, "blk").agg(F.min("id").alias("id"))
+    recs = recs.groupBy(*fnames, "blk").agg(F.min("id").alias("id"))
     sizes = recs.groupBy("blk").agg(F.count(F.lit(1)).alias("__n"))
     recs = (
         recs.join(sizes, "blk").filter(F.col("__n") <= max_block_size).drop("__n")
@@ -469,50 +349,27 @@ def weighted_link_pairs(
     # guard order: all length-diff bounds first (two length() calls),
     # then banded levenshteins smallest-cap-first — the tightest cap is
     # both the cheapest DP band and usually the most selective conjunct
-    # (short-circuit AND kills most pairs on it). ``prefilter=False``
-    # drops both lossless guards (the A/B spelling — identical output,
-    # every pair pays the full DP score).
-    if prefilter:
-        guarded = sorted(
-            (
-                (int(max_score // w), fl, fr, ll, lr)
-                for (w, fl, fr), (ll, lr) in zip(pairs, lens)
-                if w > 0
-            ),
-            key=lambda t: t[0],
-        )
-        # lossless prefilter pass 1: length-difference lower bound per
-        # field, over the precomputed per-record lengths
-        for cap, _fl, _fr, ll, lr in guarded:
-            cond = cond & (F.abs(ll - lr) <= F.lit(cap))
-        # lossless prefilter pass 2: banded thresholded levenshtein per
-        # field (returns -1 above the threshold — never runs the full DP)
-        for cap, fl, fr, _ll, _lr in guarded:
-            cond = cond & (F.levenshtein(fl, fr, cap) >= 0)
+    # (short-circuit AND kills most pairs on it).
+    guarded = sorted(
+        (
+            (int(max_score // w), fl, fr, ll, lr)
+            for (w, fl, fr), (ll, lr) in zip(pairs, lens)
+            if w > 0
+        ),
+        key=lambda t: t[0],
+    )
+    # lossless prefilter pass 1: length-difference lower bound per
+    # field, over the precomputed per-record lengths
+    for cap, _fl, _fr, ll, lr in guarded:
+        cond = cond & (F.abs(ll - lr) <= F.lit(cap))
+    # lossless prefilter pass 2: banded thresholded levenshtein per
+    # field (returns -1 above the threshold — never runs the full DP)
+    for cap, fl, fr, _ll, _lr in guarded:
+        cond = cond & (F.levenshtein(fl, fr, cap) >= 0)
     score = None
     for w, fl, fr in pairs:
         term = F.lit(w) * F.levenshtein(fl, fr)
         score = term if score is None else score + term
-    if chunk_field is not None:
-        # PassJoin path: equi-join chunk signatures generate the
-        # candidates; the ORIGINAL full condition (block, order,
-        # guards, exact score) verifies them — so the output set is
-        # the same, only the enumeration strategy changed. Candidates
-        # are (least, greatest)-normalized, so id_a < id_b holds and
-        # cond's l.id < r.id conjunct is satisfied by joining l on
-        # id_a / r on id_b.
-        d = int(max_score // weights[chunk_field])
-        cands = _chunk_candidates(recs, fnames[chunk_field], d)
-        return (
-            cands.join(l, F.col("id_a") == F.col("l.id"))
-            .join(r, F.col("id_b") == F.col("r.id"))
-            .filter(cond & (score <= max_score))
-            .select(
-                "id_a",
-                "id_b",
-                score.cast("double").alias("score"),
-            )
-        )
     return (
         l.join(r, cond & (score <= max_score))
         .select(
@@ -604,8 +461,7 @@ def resolve_entities(
     match pairs (entity_id = min member id), singletons keep their own
     id. Returns (id, entity_id).
 
-    Pairs are VALUE-level (see :func:`blocked_link_pairs`
-    ``dedup_values``): components run over distinct (record, block)
+    Pairs are VALUE-level (see :func:`blocked_link_pairs`): components run over distinct (record, block)
     value representatives — clique-size-independent — and every record
     then inherits its representative's entity through one value-keyed
     join. For UNCAPPED blocks the resulting partition is identical to

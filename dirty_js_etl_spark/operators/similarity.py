@@ -645,8 +645,8 @@ def kmeans_portable(
     """Lloyd's k-means whose EVERY arithmetic step is cross-engine
     exact, so a static SQL oracle can replay data-derived centroids
     bit-for-bit — the determinism twin of :func:`kmeans_lloyd` (x132,
-    which keeps float centroids, k-means++-style seeding and an
-    inertia-based stop as the production path).
+    the production path: float centroids seeded from the first ``k``
+    vectors in id order).
 
     The three moves that make it portable:
 

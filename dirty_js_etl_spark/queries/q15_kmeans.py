@@ -1,15 +1,13 @@
 """Engine-portable k-means (``operators/similarity.py::kmeans_portable``).
 
-Until this round the k-means family (x132/x148/x18) was rows-only on
-the grounds that "centroids are data-derived, which a static oracle
-string cannot replay". This query disproves that for a quantized
-variant: with integer vector quantization (exact centroid sums, one
-correctly-rounded division per coordinate), sequential array folds for
-distances, md5-rank seeding, and struct-min tie-breaks, TWO full Lloyd
-iterations replay in DuckDB bit-for-bit — the same portable-twin move
-as x192 (HLL) and x149 (CMS). x132 remains the production path
-(float centroids, sampled k-means++ seeding); this is the auditable
-spelling.
+Data-derived centroids can be replayed by a static oracle string when
+every arithmetic step is exact: with integer vector quantization (exact
+centroid sums, one correctly-rounded division per coordinate),
+sequential array folds for distances, md5-rank seeding, and struct-min
+tie-breaks, TWO full Lloyd iterations replay in DuckDB bit-for-bit —
+the same portable-twin move as x192 (HLL) and x149 (CMS). x132 is the
+production path (float centroids seeded from the first k vectors in id
+order); this is the auditable spelling.
 """
 
 from __future__ import annotations

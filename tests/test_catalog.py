@@ -32,11 +32,10 @@ def test_spread_repartitions_small_single_file(spark, tmp_path):
     assert _n_scan_partitions(spread) == par
 
 
-def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
-    """A large single-file splittable parquet that Spark
-    already carves into >= parallelism scan partitions must NOT be
-    round-tripped through a repartition shuffle. Simulated by shrinking
-    maxPartitionBytes below the file size / parallelism ratio."""
+def _assert_big_file_left_alone(spark, tmp_path, spell):
+    """Write a single-file splittable parquet, set maxPartitionBytes to
+    ``spell(n)`` for an ``n`` under file size / (2 * parallelism), and
+    check that ``_spread`` inserts no Exchange above the scan."""
     path = str(tmp_path / "big.parquet")
     spark.range(200_000).selectExpr("id", "repeat('x', 64) AS pad").coalesce(
         1
@@ -47,14 +46,32 @@ def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
     size = os.path.getsize(os.path.join(path, datafile))
     par = spark.sparkContext.defaultParallelism
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(1, size // (par * 2))))
+    spark.conf.set("spark.sql.files.maxPartitionBytes", spell(size // (par * 2)))
     try:
         df = spark.read.parquet(path)
+        assert _n_scan_partitions(df) >= par  # precondition: Spark splits it
         spread = _spread(spark, df)
         # identity: no Exchange was inserted on top of the scan
         assert "Exchange" not in spread._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_spread_leaves_big_splittable_file_alone(spark, tmp_path):
+    """A large single-file splittable parquet that Spark
+    already carves into >= parallelism scan partitions must NOT be
+    round-tripped through a repartition shuffle. Simulated by shrinking
+    maxPartitionBytes below the file size / parallelism ratio."""
+    _assert_big_file_left_alone(spark, tmp_path, lambda n: str(max(1, n)))
+
+
+def test_spread_reads_unit_suffixed_max_partition_bytes(spark, tmp_path):
+    """``spark.sql.files.maxPartitionBytes`` accepts byte strings
+    ("2k", "64MB"); Spark's scan splits the file by the parsed value, so
+    ``_spread`` must read the same value and leave the scan alone."""
+    _assert_big_file_left_alone(
+        spark, tmp_path, lambda n: f"{max(1, n // 1024)}k"
+    )
 
 
 def test_harden_session_raises_when_tz_unsettable(spark, monkeypatch):

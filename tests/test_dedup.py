@@ -471,30 +471,23 @@ def test_prefix_filter_is_lossless_vs_brute_force(spark, corpus, threshold, cap)
     the (df, hash) prefix order, duplicate docs, and the small-pair
     α=1 edge where the ≥2 prefix-count filter must relax — the exact
     regimes where a buggy prefix scheme silently drops pairs. The
-    small caps make max_shingle_df BIND on duplicate-heavy corpora:
-    document frequency must stay RECORD-level under dedup_values, so both
-    modes cap the same shingles."""
+    small caps make max_shingle_df BIND on duplicate-heavy corpora,
+    where identical docs must still pair with each other."""
     df = spark.createDataFrame(
         [(i, " ".join(ws)) for i, ws in enumerate(corpus)],
         "doc_id bigint, text string",
     )
     exp = _ref_pairs(corpus, threshold, cap=cap)
-    # both spellings must equal the brute force: the record-level path
-    # AND the value-level dedup-then-pair path (r10 — whose cross/intra
-    # expansion must reproduce identical-doc pairs, szc=0 drops, and
-    # the exact raw-ratio jaccard; random tiny corpora are duplicate-rich)
-    for dedup_values in (False, True):
-        got = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", "text", shingle_k=3,
-                jaccard_threshold=threshold, max_shingle_df=cap,
-                dedup_values=dedup_values,
-            ).collect()
-        }
-        assert set(got) == set(exp), (dedup_values, cap)
-        for k in exp:
-            assert abs(got[k] - exp[k]) < 1e-9
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", "text", shingle_k=3,
+            jaccard_threshold=threshold, max_shingle_df=cap,
+        ).collect()
+    }
+    assert set(got) == set(exp), cap
+    for k in exp:
+        assert abs(got[k] - exp[k]) < 1e-9
 
 
 def test_incremental_ingest_matches_and_skips(spark):
@@ -606,15 +599,11 @@ def test_probe_from_persisted_index_identical(spark, tmp_path):
     assert probed == composed and len(probed) > 0
 
 
-def test_probe_candidate_cap_keeps_argmax(spark):
-    """The opt-in per-probe candidate cap bounds
-    verify cost in duplicate-dense corpora WITHOUT changing the argmax
-    decision. skew_docs' whale bucket holds 200 identical corpus docs;
-    an ingest doc probing it draws 200 candidates uncapped. With
-    max_candidates_per_probe=5 only the top-5 by band-agreement
-    survive — all whales agree in all 8 bands, so the tie breaks to the
-    min old_ids, which include the uncapped argmax (min old_id at max
-    jaccard). Output must be identical to uncapped, on every probe."""
+def test_probe_whale_bucket_keeps_min_id_argmax(spark):
+    """A probe into a live whale bucket verifies every candidate and
+    still emits one decision per ingest doc. skew_docs' whale bucket
+    holds 200 identical corpus docs, so an ingest copy of one draws 200
+    candidates at jaccard 1.0; the tie breaks to the min old_id."""
     from dirty_js_etl_spark.operators.dedup import (
         build_near_dup_index,
         probe_near_dup_index,
@@ -634,23 +623,13 @@ def test_probe_candidate_cap_keeps_argmax(spark):
     )
     kw = dict(num_perm=32, bands=8)
     # uncapped INDEX (max_bucket_size high) so the whale bucket is live
-    # and the probe-side cap is what bounds the verify
     idx = build_near_dup_index(
         corpus, "doc_id", "text", max_bucket_size=10_000, **kw
     )
-
-    def run(**probe_kw):
-        return {
-            r.new_id: (r.dup_of, r.jaccard)
-            for r in probe_near_dup_index(
-                ingest, idx, "doc_id", "text",
-                jaccard_threshold=0.5, **kw, **probe_kw,
-            ).collect()
-        }
-
-    uncapped = run()
-    assert uncapped == {100_000: (0, 1.0), 100_001: (56, 1.0)}
-    assert run(max_candidates_per_probe=5) == uncapped
-    # even m=1 keeps the argmax here: band-agreement ties break to the
-    # min old_id, which is also the jaccard-tie winner
-    assert run(max_candidates_per_probe=1) == uncapped
+    got = {
+        r.new_id: (r.dup_of, r.jaccard)
+        for r in probe_near_dup_index(
+            ingest, idx, "doc_id", "text", jaccard_threshold=0.5, **kw
+        ).collect()
+    }
+    assert got == {100_000: (0, 1.0), 100_001: (56, 1.0)}

@@ -328,6 +328,53 @@ def test_lsh_pass_collapses_identical_values_by_default(spark):
     assert pairs == {(10, 50): 1}  # min-id rep of the clique, once
 
 
+def _clique_records(spark):
+    # a 4-member identical-value clique whose min id (10) is not the
+    # first row, a distance-1 variant on each side of it in sort order,
+    # and a copy of the clique value in another block
+    return spark.createDataFrame(
+        [
+            (12, "acme corp", "a"),
+            (10, "acme corp", "a"),
+            (14, "acme corp", "a"),
+            (11, "acme corp", "a"),
+            (20, "acme c0rp", "a"),
+            (30, "acme corps", "a"),
+            (5, "acme corp", "b"),
+        ],
+        "id bigint, rec string, blk string",
+    )
+
+
+def test_blocked_pairs_collapse_identical_values(spark):
+    # no intra-clique pair; the clique pairs once, under its min id
+    pairs = {
+        (r.id_a, r.id_b): r.distance
+        for r in blocked_link_pairs(
+            _clique_records(spark), "id", "rec", "blk", max_distance=2
+        ).collect()
+    }
+    assert pairs == {(10, 20): 1, (10, 30): 1, (20, 30): 2}
+
+
+def test_sorted_neighborhood_collapses_identical_values(spark):
+    # window=2 pairs sort-adjacent values only: record-level ranking
+    # would put the four clique members between the two variants and
+    # emit clique pairs instead of (10, 30)
+    from dirty_js_etl_spark.operators.linkage import (
+        sorted_neighborhood_pairs,
+    )
+
+    pairs = {
+        (r.id_a, r.id_b): r.distance
+        for r in sorted_neighborhood_pairs(
+            _clique_records(spark), "id", "rec", "blk", window=2,
+            max_distance=2,
+        ).collect()
+    }
+    assert pairs == {(10, 20): 1, (10, 30): 1}
+
+
 # ---------------------------------------------------------------------------
 # hypothesis properties vs brute-force references (the x5 idiom)
 # ---------------------------------------------------------------------------
@@ -382,17 +429,6 @@ def test_weighted_pairs_equal_brute_force(spark, rows):
             df, "id", ["f0", "f1"], [1.0, 2.0], "blk", max_score=2.0
         ).collect()
     }
-    # the PassJoin chunk-signature strategy must emit the IDENTICAL set
-    # (r11): tiny strings force empty chunks, zero-length fields, and
-    # maximal shift windows — the edge regimes of the signature scheme
-    chunked = {
-        (r.id_a, r.id_b): r.score
-        for r in weighted_link_pairs(
-            df, "id", ["f0", "f1"], [1.0, 2.0], "blk", max_score=2.0,
-            chunk_field=0,
-        ).collect()
-    }
-    assert got == chunked
     # reference: value-dedup to min-id reps, then all rep pairs in-block
     reps = {}
     for i, t in enumerate(rows):
