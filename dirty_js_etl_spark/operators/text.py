@@ -44,13 +44,6 @@ def token_count(col: Column) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column) -> Column:
-    """A BPE-ish proxy: split on word boundaries AND punctuation so
-    'don't' counts 3 — the regex analog of byte-pair pre-tokenization."""
-    toks = F.split(F.trim(col), r"[\s\p{Punct}]+")
-    return F.size(F.filter(toks, lambda t: F.length(t) > 0))
-
-
 def _count_matching(col: Column, char_set: str) -> Column:
     """#chars in a character set = length after deleting everything else.
 
@@ -127,32 +120,6 @@ def fingerprint_md5(col: Column) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
     Exact-dup detection key; oracle-friendly (md5 agrees across engines)."""
     return F.md5(normalize_text(col))
-
-
-def fingerprint_rolling(col: Column, window: int = 8) -> Column:
-    """Rolling-hash fingerprint: min of xxhash64 over character
-    ``window``-grams of the normalized text (a 1-perm minhash — the
-    winnowing-style content fingerprint). Pure array expressions."""
-    norm = normalize_text(col)
-    n = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    grams = F.transform(idx, lambda i: F.xxhash64(norm.substr(i, F.lit(window))))
-    return F.array_min(grams)
-
-
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature bundle — the one-call entry point."""
-    col = F.col(text_col)
-    s = text_stats(col)
-    return (
-        df.withColumn("n_tokens", s["n_tokens"])
-        # raw integer-count ratios, no decimal re-round (kmv discipline)
-        .withColumn("alpha_ratio", s["alpha_ratio"])
-        .withColumn("stopword_ratio", s["stopword_ratio"])
-        .withColumn("quality", quality_score(col))
-        .withColumn("lang_pred", lang_id(col))
-        .withColumn("fingerprint", fingerprint_md5(col))
-    )
 
 
 def tfidf_topk(

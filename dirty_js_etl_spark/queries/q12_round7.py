@@ -1,59 +1,11 @@
-"""Round-7 additions: environment-gated registrations.
-
-``x191_running_totals`` drives the ``transformWithStateInPandas``
-running-total operator (``streaming/state.py``) as a driver query —
-but ONLY where it can actually execute: the API's Python state server
-speaks protobuf, and a container without ``google.protobuf`` fails at
-stream start with ``STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE``.
-The gate probes the import at module load; on boxes without protobuf
-(this sandbox) the query is simply absent from the registry and the
-stateful-streaming surface the driver verifies remains the
-``applyInPandasWithState`` sessionizer (x17). On a normal cluster
-image the query registers and is oracle-checked: a drained finite
-stream's final per-user total must equal the batch aggregate, with
-cents spelled ``floor(value*100 + 0.5)`` — exact on identical doubles
-in every engine (the x127 spelling).
-"""
+"""Round-7 additions: batch running totals (x202), a portable HyperLogLog
+(x192) and TPC-H Q4 (x193)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from dirty_js_etl_spark.queries._shared import _cat, register
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-HAS_PROTOBUF = _has_protobuf()
-
-if HAS_PROTOBUF:
-
-    @register(
-        "x191_running_totals",
-        """
-SELECT user_id,
-       CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-         AS total_cents
-FROM events WHERE event_type = 'purchase' GROUP BY user_id
-""",
-    )
-    def x191_running_totals(spark, sf_dir):
-        # transformWithState running purchase totals: ValueState of one
-        # (cents, seq) pair per user, RocksDB-backed; the drained
-        # stream's last emission per key equals the batch sum exactly
-        # (integer cents, floor(x*100+0.5) portable rounding).
-        from dirty_js_etl_spark.streaming.state import (
-            run_stream_running_totals,
-        )
-
-        return run_stream_running_totals(spark, sf_dir)
 
 
 @register(
@@ -67,14 +19,11 @@ FROM events WHERE event_type = 'purchase'
 """,
 )
 def x202_running_totals_batch(spark, sf_dir):
-    # The transformWithState-free portable twin of x191: the stateful operator
-    # emits, per purchase event, the user's running total so far; the batch
-    # spelling is a cumulative window over the same (ts, event_id) total order
-    # with the same integer-cents rounding, so EVERY intermediate emission —
-    # not just the drained final state — is hash-checked here even on boxes
-    # where the protobuf-gated streaming API cannot start (no google.protobuf
-    # installed). Scale: one user-keyed shuffle + sort, the same partitioning
-    # the state store itself would use.
+    # Per purchase event, the user's running total so far: a cumulative
+    # window over the (ts, event_id) total order with integer cents spelled
+    # floor(value*100 + 0.5) -- exact on identical doubles in every engine
+    # (the x127 spelling), so every intermediate total is hash-checked.
+    # Scale: one user-keyed shuffle + sort.
     from pyspark.sql import Window
 
     ev = _cat(spark, sf_dir).read("events")

@@ -1,8 +1,14 @@
-"""Shared oracle-comparison helpers (used by tools/check_oracle.py and tests).
+"""The one oracle comparator, shared by tools/check_oracle.py,
+tools/determinism_audit.py and the pytest mirror (tests/test_queries.py).
 
 Mirrors the driver's t2 gate shape: row count + column names +
 order-insensitive value comparison (columns sorted by name, rows sorted,
-floats canonicalized to 6 significant digits).
+floats canonicalized to 12 significant digits).
+
+12 digits, not 6: 6g could mask a driver-red low-bit mismatch behind
+local green. 12g is strictly harder than any plausible driver rounding
+while still absorbing the one legitimate cross-engine artifact the
+queries already guard (±0.0 after round(), collapsed here as well).
 """
 
 from __future__ import annotations
@@ -17,7 +23,9 @@ def normalize_pdf(pdf) -> list[tuple[str, ...]]:
         if v is None or v != v:  # None / NaN
             return "NULL"
         if isinstance(v, float):
-            return f"{v:.6g}"
+            if v == 0.0:
+                v = 0.0  # collapse IEEE -0.0 vs +0.0
+            return f"{v:.12g}"
         if isinstance(v, pd.Timestamp):
             return v.isoformat()
         return str(v)

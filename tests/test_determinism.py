@@ -18,8 +18,8 @@ from __future__ import annotations
 
 import pytest
 
+from dirty_js_etl_spark.testing import normalize_pdf
 from tests.conftest import SF_DIR
-from tools.check_oracle import normalize
 
 HOSTILE = {
     "spark.sql.shuffle.partitions": "7",
@@ -54,13 +54,13 @@ def test_query_invariant_under_hostile_partitioning(spark, registry, name):
     if name not in registry:
         pytest.fail(f"representative {name} no longer registered")
     fn = registry[name]
-    baseline = normalize(fn(spark, SF_DIR).toPandas())
+    baseline = normalize_pdf(fn(spark, SF_DIR).toPandas())
     spark.catalog.clearCache()
     saved = {k: spark.conf.get(k, None) for k in HOSTILE}
     try:
         for k, v in HOSTILE.items():
             spark.conf.set(k, v)
-        hostile = normalize(fn(spark, SF_DIR).toPandas())
+        hostile = normalize_pdf(fn(spark, SF_DIR).toPandas())
     finally:
         for k, v in saved.items():
             if v is None:

@@ -213,7 +213,7 @@ def test_merge_into_sql_goldens():
 
 
 # ---------------------------------------------------------------------------
-# Gated Delta execution parity (the x191 gate idiom)
+# Delta execution parity, skipped where delta-spark does not import
 # ---------------------------------------------------------------------------
 
 

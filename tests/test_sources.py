@@ -1,100 +1,7 @@
-"""Source/sink registry: format round-trips, schema policy, partitioned
-writes (partition pruning visible in the reader's plan)."""
+"""Python data sources (sources/pyds.py): the parallel date-spine batch
+source and the tick-replay stream reader's recovery path."""
 
 from __future__ import annotations
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from dirty_js_etl_spark.sources.registry import (
-    SourceSpec,
-    read_source,
-    write_sink,
-)
-
-
-@pytest.fixture(scope="module")
-def small(spark):
-    return spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5), (3, "a", 3.5)],
-        "id bigint, tag string, v double",
-    )
-
-
-def test_parquet_round_trip(spark, small, tmp_path):
-    p = os.path.join(tmp_path, "p")
-    write_sink(small, p)
-    back = read_source(spark, SourceSpec(path=p))
-    assert sorted(tuple(r) for r in back.collect()) == sorted(
-        tuple(r) for r in small.collect()
-    )
-
-
-def test_csv_requires_schema(spark, small, tmp_path):
-    p = os.path.join(tmp_path, "c")
-    write_sink(small, p, fmt="csv", compression="none")
-    with pytest.raises(ValueError, match="explicit schema"):
-        read_source(spark, SourceSpec(path=p, fmt="csv"))
-    back = read_source(
-        spark,
-        SourceSpec(path=p, fmt="csv", schema="id bigint, tag string, v double"),
-    )
-    assert back.count() == 3
-    assert dict(back.dtypes) == {"id": "bigint", "tag": "string", "v": "double"}
-
-
-def test_json_round_trip_with_schema(spark, small, tmp_path):
-    p = os.path.join(tmp_path, "j")
-    write_sink(small, p, fmt="json", compression="none")
-    back = read_source(
-        spark,
-        SourceSpec(path=p, fmt="json", schema="id bigint, tag string, v double"),
-    )
-    assert sorted(r["id"] for r in back.collect()) == [1, 2, 3]
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    """Two tables bucketed on the same key/count join without Exchange —
-    the pay-once co-location contract of write_bucketed_table."""
-    from dirty_js_etl_spark.sources.registry import write_bucketed_table
-
-    facts = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
-    )
-    dims = spark.range(0, 100).select(
-        F.col("id").alias("k"), F.concat(F.lit("d"), F.col("id")).alias("name")
-    )
-    write_bucketed_table(facts, "t_bkt_facts", ["k"], 4,
-                         path=os.path.join(tmp_path, "f"))
-    write_bucketed_table(dims, "t_bkt_dims", ["k"], 4,
-                         path=os.path.join(tmp_path, "d"))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_bkt_facts").join(spark.table("t_bkt_dims"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # buckets pair off directly
-        assert joined.count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS t_bkt_facts")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_dims")
-
-
-def test_partitioned_write_prunes(spark, small, tmp_path):
-    p = os.path.join(tmp_path, "part")
-    write_sink(small, p, partition_by=["tag"])
-    # physical layout: one dir per tag value
-    assert sorted(
-        d for d in os.listdir(p) if d.startswith("tag=")
-    ) == ["tag=a", "tag=b"]
-    back = read_source(spark, SourceSpec(path=p)).filter(F.col("tag") == "a")
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    # partition filter reaches the scan: only the tag=a directory is read
-    assert back.count() == 2
-    assert "PartitionFilters" in plan and "tag" in plan
 
 
 class TestDateSpineDataSource:

@@ -1,0 +1,81 @@
+"""Spark-free checks over the source tree.
+
+- Reach: every module of the engine package is imported, directly or
+  transitively, from the driver surface (``__spark_entry__.py``,
+  ``bench.py``, ``examples/*.py``, ``tools/*.py``). Function-local
+  imports count. A module that only tests import is code the driver
+  never runs: route it through a caller or delete it.
+- Round audit: every ``F.round(`` site is classified, and the committed
+  ``ROUND_AUDIT.json`` inventory is the current one.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import json
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "dirty_js_etl_spark"
+
+
+def _package_modules() -> dict[str, str]:
+    """Dotted module name -> file, for every module under the package."""
+    mods = {}
+    for root, _, files in os.walk(os.path.join(REPO, PKG)):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                name = os.path.relpath(path, REPO)[:-3].replace(os.sep, ".")
+                mods[name.removesuffix(".__init__")] = path
+    return mods
+
+
+def _imported_names(path: str) -> set[str]:
+    """Every dotted name an import in ``path`` may load: the module
+    itself, and ``module.name`` for each ``from module import name``
+    (it may be a submodule). The tree has no relative imports; a module
+    reached only through one would be reported unreached."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    names: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return names
+
+
+def _reached(mods: dict[str, str], roots: list[str]) -> set[str]:
+    reached: set[str] = set()
+    todo = list(roots)
+    while todo:
+        for name in _imported_names(todo.pop()):
+            parts = name.split(".")
+            # importing a.b.c also runs a/__init__ and a/b/__init__
+            for i in range(1, len(parts) + 1):
+                prefix = ".".join(parts[:i])
+                if prefix in mods and prefix not in reached:
+                    reached.add(prefix)
+                    todo.append(mods[prefix])
+    return reached
+
+
+def test_every_engine_module_reached_from_driver_surface():
+    roots = [os.path.join(REPO, "__spark_entry__.py"), os.path.join(REPO, "bench.py")]
+    roots += sorted(glob.glob(os.path.join(REPO, "examples", "*.py")))
+    roots += sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
+    mods = _package_modules()
+    assert sorted(set(mods) - _reached(mods, roots)) == []
+
+
+def test_round_audit_sites_classified_and_committed():
+    from tools.round_audit import sites
+
+    inv = sites()
+    assert [s for s in inv if s["class"] == "UNCLASSIFIED"] == []
+    with open(os.path.join(REPO, "ROUND_AUDIT.json")) as fh:
+        assert inv == json.load(fh)["sites"]

@@ -7,15 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from dirty_js_etl_spark.operators.text import (
-    bpe_ish_token_count,
     fingerprint_md5,
-    fingerprint_rolling,
     lang_id,
     normalize_text,
     quality_score,
     text_stats,
     token_count,
-    with_text_features,
 )
 
 
@@ -32,11 +29,6 @@ def test_normalize(spark):
 
 def test_token_count(spark):
     assert _one(spark, token_count(F.col("text")), "a b  c") == 3
-
-
-def test_bpe_ish_token_count(spark):
-    # punctuation splits: "don't stop!" -> don / t / stop
-    assert _one(spark, bpe_ish_token_count(F.col("text")), "don't stop!") == 3
 
 
 def test_text_stats_ratios(spark):
@@ -67,17 +59,6 @@ def test_fingerprints_stable_under_whitespace(spark):
     a = _one(spark, fingerprint_md5(F.col("text")), "Hello   World")
     b = _one(spark, fingerprint_md5(F.col("text")), " hello world ")
     assert a == b
-    ra = _one(spark, fingerprint_rolling(F.col("text")), "Hello   World")
-    rb = _one(spark, fingerprint_rolling(F.col("text")), " hello world ")
-    assert ra == rb
-
-
-def test_with_text_features_bundle(spark, catalog):
-    docs = catalog.read("documents").limit(20)
-    out = with_text_features(docs)
-    assert {"n_tokens", "alpha_ratio", "stopword_ratio", "quality", "lang_pred",
-            "fingerprint"} <= set(out.columns)
-    assert out.count() == 20
 
 
 class TestCompressionRatio:

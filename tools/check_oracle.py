@@ -6,12 +6,11 @@ an order-insensitive value hash (columns sorted by name, rows sorted,
 values stringified with float rounding). Not the driver's exact hash — a
 fast feedback loop with the same shape.
 
-Float normalization is 12 significant digits (6g could mask a driver-red
-low-bit mismatch behind local green). 12g is strictly harder than any plausible
-driver rounding while still absorbing the one legitimate cross-engine artifact
-the queries already guard (±0.0 after round(); collapsed here as well). Every
-query that is hash-green at 12g was also hash-green under the driver in rounds
-1–3 where the windows overlap — the 82 worked examples agree.
+The comparison is ``dirty_js_etl_spark.testing.compare_frames`` (floats
+to 12 significant digits, ±0.0 collapsed), the same rule the pytest mirror
+applies. Every query that is hash-green at 12g was also hash-green under
+the driver in rounds 1–3 where the windows overlap — the 82 worked
+examples agree.
 
 Usage: python tools/check_oracle.py [--json OUT.json] [--bare-session]
                                     [sf_dir] [query ...]
@@ -38,10 +37,11 @@ import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dirty_js_etl_spark.catalog import FIXTURE_TABLES  # noqa: E402
 from dirty_js_etl_spark.session import get_spark  # noqa: E402
+from dirty_js_etl_spark.testing import compare_frames  # noqa: E402
 
 
 def _run_meta() -> dict:
@@ -70,8 +70,6 @@ def _run_meta() -> dict:
 def get_bare_spark():
     """A deliberately unprotected session — Spark defaults only, like the
     driver's. (UI off and a local master are environmental, not semantic.)"""
-    import os
-
     from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -83,26 +81,6 @@ def get_bare_spark():
     )
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def normalize(df_pandas):
-    import pandas as pd
-
-    pdf = df_pandas.reindex(sorted(df_pandas.columns), axis=1)
-
-    def canon(v):
-        if v is None or v != v:  # NaN/None
-            return "NULL"
-        if isinstance(v, float):
-            if v == 0.0:
-                v = 0.0  # collapse IEEE -0.0 vs +0.0
-            return f"{v:.12g}"
-        if isinstance(v, pd.Timestamp):
-            return v.isoformat()
-        return str(v)
-
-    rows = sorted(tuple(canon(v) for v in row) for row in pdf.itertuples(index=False))
-    return rows
 
 
 def main() -> int:
@@ -175,20 +153,7 @@ def main() -> int:
             failed.append(name)
             record[name] = {"status": "fail", "err": f"duckdb: {e}"[:300]}
             continue
-        problems = []
-        if len(spark_pdf) != len(duck_pdf):
-            problems.append(f"rowcount {len(spark_pdf)} != {len(duck_pdf)}")
-        if sorted(spark_pdf.columns) != sorted(duck_pdf.columns):
-            problems.append(
-                f"columns {sorted(spark_pdf.columns)} != {sorted(duck_pdf.columns)}"
-            )
-        if not problems:
-            a, b = normalize(spark_pdf), normalize(duck_pdf)
-            if a != b:
-                diff = [
-                    (x, y) for x, y in zip(a, b) if x != y
-                ][:3]
-                problems.append(f"values differ, first diffs: {diff}")
+        problems = compare_frames(spark_pdf, duck_pdf)
         if problems:
             print(f"FAIL {name}: {'; '.join(problems)}")
             failed.append(name)

@@ -17,7 +17,7 @@ twice on the SAME session —
   fans out to many input splits), AQE off (no runtime coalescing to
   accidentally re-merge what we split).
 
-and the two outputs are compared with ``check_oracle.normalize`` (column
+and the two outputs are compared with ``testing.normalize_pdf`` (column
 sort, row sort, 12-significant-digit floats). A hash-checked query that
 differs between passes is a latent driver flake — a must-fix. A
 rows-only query may be legitimately sensitive (float k-means: centroid
@@ -35,7 +35,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.check_oracle import normalize  # noqa: E402
+from dirty_js_etl_spark.testing import normalize_pdf  # noqa: E402
+from tools.check_oracle import _run_meta  # noqa: E402
 
 # pass-B overrides: every knob here is runtime-settable via spark.conf
 HOSTILE = {
@@ -46,32 +47,9 @@ HOSTILE = {
 }
 
 
-def _run_meta() -> dict:
-    """Self-dating metadata: every committed artifact should say which
-    head and instant it describes (sweeps whose rows did not change are
-    byte-identical, so mtime/git alone cannot prove freshness)."""
-    import datetime
-    import subprocess
-
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:  # noqa: BLE001
-        head = None
-    return {
-        "git_head": head,
-        "generated_utc": datetime.datetime.now(
-            datetime.timezone.utc
-        ).isoformat(timespec="seconds"),
-    }
-
-
 def _run(fn, spark, sf_dir):
     df = fn(spark, sf_dir)
-    return normalize(df.toPandas())
+    return normalize_pdf(df.toPandas())
 
 
 def main() -> int:

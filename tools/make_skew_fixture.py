@@ -26,6 +26,7 @@ exists for ad-hoc benching at other scales.
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import DataFrame
@@ -190,7 +191,7 @@ def skew_orders(orders: DataFrame) -> DataFrame:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from dirty_js_etl_spark.session import get_spark
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"

@@ -25,8 +25,10 @@ This tool makes the latent class measurable and the repo's remaining
     against a live Spark session on every divergent-reachable value.
 
 ``python tools/round_audit.py sites``
-    Inventories every ``F.round(`` site in the package and asserts each
-    matches a classification rule below; writes ROUND_AUDIT.json.
+    Inventories every ``F.round(`` site in the package (keyed by
+    ``path::function`` and the rounded expression, not by line) and
+    asserts each matches a classification rule below; writes
+    ROUND_AUDIT.json.
 
 Classification (the discipline applied in round 13):
 
@@ -57,6 +59,7 @@ Classification (the discipline applied in round 13):
 
 from __future__ import annotations
 
+import ast
 import json
 import math
 import os
@@ -197,7 +200,30 @@ def scan(check_spark: bool = True) -> dict:
     return out
 
 
+def _round_calls(tree: ast.AST, scope: str = ""):
+    """Yield ``(function, call)`` for every ``F.round(...)`` call, with
+    ``function`` the dotted name of the enclosing def (``<module>`` at
+    module level)."""
+    for node in ast.iter_child_nodes(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            yield from _round_calls(node, f"{scope}.{node.name}".lstrip("."))
+            continue
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "round"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        ):
+            yield scope or "<module>", node
+        yield from _round_calls(node, scope)
+
+
 def sites() -> list[dict]:
+    """Every ``F.round(`` call in the package, keyed by ``path::function``
+    and the call's own source text (whitespace collapsed), so an edit that
+    only shifts lines leaves the inventory unchanged. Classification reads
+    the lines around the call against ``RULES``."""
     inv = []
     for root, _, files in os.walk(PKG):
         for fn in files:
@@ -206,10 +232,10 @@ def sites() -> list[dict]:
             path = os.path.join(root, fn)
             rel = os.path.relpath(path, REPO)
             with open(path) as fh:
-                lines = fh.readlines()
-            for i, line in enumerate(lines, 1):
-                if "F.round(" not in line:
-                    continue
+                src = fh.read()
+            lines = src.splitlines(keepends=True)
+            for func, call in _round_calls(ast.parse(src)):
+                i = call.lineno
                 ctx = "".join(lines[max(0, i - 9): i + 6])
                 match = None
                 for suffix, rx, cls, reason in RULES:
@@ -218,12 +244,13 @@ def sites() -> list[dict]:
                         break
                 inv.append(
                     {
-                        "site": f"{rel}:{i}",
+                        "site": f"{rel}::{func}",
+                        "expr": " ".join(ast.get_source_segment(src, call).split()),
                         "class": match[0] if match else "UNCLASSIFIED",
                         "reason": match[1] if match else None,
                     }
                 )
-    return inv
+    return sorted(inv, key=lambda s: (s["site"], s["expr"]))
 
 
 def main() -> int:
