@@ -1,37 +1,22 @@
-"""Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark harness: the headline queries, timed by the runner's bench
+mode (``tools/runner.py``; see ``runner.bench`` for the record).
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: best_sec}, "runs": {name: [all N run secs]},
-"canary": {"query": ..., "every": K, "series": [...]}, "sf": ...,
-"compiles": {name: classes compiled during its timed runs},
-"session_start_s": get_spark's wall time, "class_archive": what the
-session start did with the driver's class-data archive, "mapped",
-"dumping" or "off: <reason>" (see session.get_spark)}.
-It is graded against BASELINE.md (DuckDB on the same parquet is the de facto
-yardstick, 2x envelope). "How to read a contaminated run" is documented in
-BASELINE.md — the spreads + canary series exist so a contended driver box can
-never fake a regression invisibly.
+    python bench.py [sf_dir] [query ...]
 
-Each timed run drains the query with a count-style action (collect on
-aggregates, count on wide outputs) so the whole plan executes; a warmup
-pass primes the JVM/codegen caches first. A warm query whose plan repeats
-compiles no new classes, so a nonzero ``compiles`` entry means the query
-generates different code per run or the codegen class cache is too
-small for the working set (see session.CODEGEN_CACHE_ENTRIES).
+The fixture dir defaults to ``$SPARK_GRAFT_SF_DIR``, else
+/root/testdata/sf0.1; the queries default to ``HEADLINE``. Prints ONE
+JSON line on stdout (Spark noise goes to stderr): {"metric", "value":
+total_sec, "unit", "queries": {name: best_sec}, "runs", "canary", "sf",
+"compiles", "session_start_s", "class_archive", "stamp"}. It is graded
+against BASELINE.md (DuckDB on the same parquet is the de facto
+yardstick, 2x envelope); "How to read a contaminated run" there explains
+how the spreads and the canary series keep a contended box from faking a
+regression.
 """
 
 from __future__ import annotations
 
-import json
-import os
 import sys
-import time
-
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from dirty_js_etl_spark import session  # noqa: E402
-from dirty_js_etl_spark.queries import all_queries  # noqa: E402
 
 # headline set: the merge pipeline (shuffle join + audit), grouped agg,
 # broadcast FK join, distinct, idempotent re-merge — plus the
@@ -120,163 +105,7 @@ HEADLINE = [
 ]
 
 
-def _x216_index_dir(sf_dir: str) -> str:
-    """Per-scale, per-process index path: two concurrent bench runs (e.g.
-    an sf0.1 bench next to an sf1 sweep) must not overwrite/read each
-    other's prebuilt index and silently time a probe against the
-    wrong-scale corpus."""
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return f"/tmp/spark_graft_bench_x216_index_{tag}_{os.getpid()}"
-
-
-def _prep_x216_index(spark, sf_dir: str, index_dir: str) -> None:
-    """Fixture prep for x216_ingest_probe: build the corpus near-dup
-    index ONCE (exactly x216's parameters) and persist it as parquet —
-    the table layout a production pipeline keeps between ingests."""
-    from pyspark.sql import functions as F
-
-    from dirty_js_etl_spark.operators.dedup import (
-        build_near_dup_index,
-        portable_token_hash60,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    idx = build_near_dup_index(
-        corpus, "doc_id", "text", num_perm=32, bands=8,
-        hash_fn=portable_token_hash60, portable_bands=True,
-    )
-    idx.band_index.write.mode("overwrite").parquet(f"{index_dir}/band_index")
-    idx.hashed.write.mode("overwrite").parquet(f"{index_dir}/hashed")
-    idx.sizes.write.mode("overwrite").parquet(f"{index_dir}/sizes")
-
-
-def _x216_ingest_probe(spark, sf_dir: str):
-    """Probe-only x216: band the ingest batch and probe the PREBUILT
-    parquet index (written by :func:`_prep_x216_index`) — per-ingest
-    cost as production pays it. Same output as the registry query."""
-    from pyspark.sql import functions as F
-
-    from dirty_js_etl_spark.operators.dedup import (
-        NearDupIndex,
-        portable_token_hash60,
-        probe_near_dup_index,
-    )
-
-    index_dir = _x216_index_dir(sf_dir)
-    index = NearDupIndex(
-        band_index=spark.read.parquet(f"{index_dir}/band_index"),
-        hashed=spark.read.parquet(f"{index_dir}/hashed"),
-        sizes=spark.read.parquet(f"{index_dir}/sizes"),
-    )
-    ingest = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(
-        F.col("doc_id") % 5 == 0
-    )
-    return probe_near_dup_index(
-        ingest, index, "doc_id", "text", num_perm=32, bands=8,
-        jaccard_threshold=0.5, hash_fn=portable_token_hash60,
-        portable_bands=True,
-    )
-
-
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # "sf0.1" -> "0.1"; ".sf1_testdata" -> "1" (numeric prefix only)
-    raw = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf = raw[: next((i for i, c in enumerate(raw) if c not in "0123456789."), len(raw))]
-    t0 = time.perf_counter()
-    spark = session.get_spark("bench")
-    session_start_s = time.perf_counter() - t0
-    class_archive = session.class_archive
-    qs = dict(all_queries())
-    qs["x216_ingest_probe"] = _x216_ingest_probe
-    names = [n for n in HEADLINE if n in qs]
-    extra = os.environ.get("BENCH_QUERIES")
-    if extra:
-        names = [n for n in extra.split(",") if n in qs]
-    if "x216_ingest_probe" in names:
-        # untimed: production builds once
-        _prep_x216_index(spark, sf_dir, _x216_index_dir(sf_dir))
-
-    # warmup: prime JVM, codegen, parquet footers
-    for n in names[:1]:
-        qs[n](spark, sf_dir).count()
-
-    def timed_run(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        # drop frames persisted inside operators (dedup shingle tables)
-        # so measurements stay isolated across queries
-        spark.catalog.clearCache()
-        return elapsed
-
-    # Contention canary: one fixed cheap query is
-    # re-timed before the loop and again every CANARY_EVERY queries. On a
-    # quiet box its series is flat; under sustained steal/contention the
-    # later samples inflate, which timestamps WHICH window of the bench
-    # loop was contended. Read it next to `runs`: a query whose all-N
-    # spread is wide AND whose loop position falls in an inflated canary
-    # window is a contaminated measurement, not a regression.
-    canary_name = os.environ.get("BENCH_CANARY", "x41_hash_split")
-    canary_every = max(1, int(os.environ.get("BENCH_CANARY_EVERY", "10")))
-    canary: list[float] = []
-    if canary_name in qs:
-        timed_run(canary_name)  # its own warmup
-        canary.append(round(timed_run(canary_name), 4))
-
-    # per-query untimed warmup + best-of-N (default 3): the host VM
-    # shows heavy run-to-run steal/JIT variance (round 2 recorded a
-    # phantom 8x regression on x5 from one contended run); the warmup
-    # absorbs first-run compilation/page-cache effects and the minimum
-    # of three timed runs is the achievable per-query time. Under
-    # SUSTAINED contention even the minimum inflates, so the
-    # artifact also carries every run's time (`runs`) and the canary
-    # series — the evidence needed to tell contention from regression.
-    runs = max(3, int(os.environ.get("BENCH_RUNS", "3")))
-    timings: dict[str, float] = {}
-    all_runs: dict[str, list[float]] = {}
-    compiles: dict[str, int] = {}
-    # Spark's count of generated classes compiled (cache misses) in this JVM
-    compiled = (
-        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME().getCount
-    )
-    for qi, n in enumerate(names):
-        samples: list[float] = []
-        timed_run(n)  # untimed warmup
-        c0 = compiled()
-        for _ in range(runs):
-            samples.append(round(timed_run(n), 4))
-        compiles[n] = compiled() - c0
-        timings[n] = min(samples)
-        all_runs[n] = samples
-        if canary and (qi + 1) % canary_every == 0:
-            canary.append(round(timed_run(canary_name), 4))
-    if canary:  # closing sample so the tail window is always covered
-        canary.append(round(timed_run(canary_name), 4))
-
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": round(sum(timings.values()), 4),
-                "unit": "sec",
-                "queries": timings,
-                "runs": all_runs,
-                "canary": {
-                    "query": canary_name,
-                    "every": canary_every,
-                    "series": canary,
-                },
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "compiles": compiles,
-                "session_start_s": round(session_start_s, 4),
-                "class_archive": class_archive,
-            }
-        )
-    )
-
-
 if __name__ == "__main__":
-    main()
+    from tools import runner
+
+    raise SystemExit(runner.main(["bench", *sys.argv[1:]]))

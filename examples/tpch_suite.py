@@ -6,7 +6,8 @@ the deterministically DERIVED partsupp dimension
 (``dirty_js_etl_spark/queries/q13_partsupp.py``), so the full suite is
 self-contained on the shipped parquet. Every query here is also
 hash-checked against a DuckDB oracle in the standing sweeps
-(``CORRECTNESS_LOCAL_*.json``).
+(``python tools/runner.py oracle``, committed as
+``CORRECTNESS_LOCAL_sf<sf>.json``).
 
 Usage: python examples/tpch_suite.py [sf_dir]   (default sf0.1)
 """

@@ -1,32 +1,20 @@
-"""Partitioning-invariance guards — the continuous twin of
-``tools/determinism_audit.py``.
+"""Partitioning-invariance guards — the continuous twin of the sweep
+``python tools/runner.py determinism``.
 
-The full audit (DETERMINISM_AUDIT.json: 250/251 invariant, the one
-sensitivity a rows-only KLL sketch by design) runs per-round over the
-whole registry; these tests pin the property continuously for one
-representative query per family, so a change that introduces an
-arrival-order dependence (an unordered ``first()``, a float-sum
-tie-break, a ``limit`` without a sort) fails at commit time, not at the
-next round's audit.
-
-The hostile config mirrors the audit: few shuffle partitions, 1 MiB scan
-splits with zero open cost (so even sf0.001 parquet fans out), AQE off
-so runtime coalescing can't undo the split.
+The sweep (the ``hostile`` session of ``CORRECTNESS_LOCAL_sf0.01.json``)
+re-runs the whole registry under ``testing.HOSTILE``; these tests pin
+the property continuously for one representative query per family, so a
+change that introduces an arrival-order dependence (an unordered
+``first()``, a float-sum tie-break, a ``limit`` without a sort) fails at
+commit time, not at the next sweep.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from dirty_js_etl_spark.testing import normalize_pdf
+from dirty_js_etl_spark.testing import hostile, normalize_pdf
 from tests.conftest import SF_DIR
-
-HOSTILE = {
-    "spark.sql.shuffle.partitions": "7",
-    "spark.sql.files.maxPartitionBytes": str(1024 * 1024),
-    "spark.sql.files.openCostInBytes": "0",
-    "spark.sql.adaptive.enabled": "false",
-}
 
 # one per family: merge lifecycle, near-dup pairs, LSH portable twin,
 # connected components, mergeable-sketch rollup, ANN top-k, window
@@ -55,20 +43,9 @@ def test_query_invariant_under_hostile_partitioning(spark, registry, name):
         pytest.fail(f"representative {name} no longer registered")
     fn = registry[name]
     baseline = normalize_pdf(fn(spark, SF_DIR).toPandas())
-    spark.catalog.clearCache()
-    saved = {k: spark.conf.get(k, None) for k in HOSTILE}
-    try:
-        for k, v in HOSTILE.items():
-            spark.conf.set(k, v)
-        hostile = normalize_pdf(fn(spark, SF_DIR).toPandas())
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-        spark.catalog.clearCache()
-    assert baseline == hostile, (
+    with hostile(spark):
+        got = normalize_pdf(fn(spark, SF_DIR).toPandas())
+    assert baseline == got, (
         f"{name} output depends on physical partitioning; first diffs: "
-        f"{[(a, b) for a, b in zip(baseline, hostile) if a != b][:3]}"
+        f"{[(a, b) for a, b in zip(baseline, got) if a != b][:3]}"
     )

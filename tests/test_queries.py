@@ -1,6 +1,6 @@
 """End-to-end oracle parity at sf0.001 for every registered query — the
 local mirror of the driver's t2 gate (fast; the full sf0.01 sweep runs via
-tools/check_oracle.py)."""
+``python tools/runner.py oracle``)."""
 
 from __future__ import annotations
 

@@ -7,6 +7,8 @@
   never runs: route it through a caller or delete it.
 - Round audit: every ``F.round(`` site is classified, and the committed
   ``ROUND_AUDIT.json`` inventory is the current one.
+- Stamps: every artifact ``tools/runner.py`` committed carries the
+  runner's full stamp, and the stamp's command names a runner mode.
 """
 
 from __future__ import annotations
@@ -15,6 +17,8 @@ import ast
 import glob
 import json
 import os
+import re
+import shlex
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "dirty_js_etl_spark"
@@ -79,3 +83,36 @@ def test_round_audit_sites_classified_and_committed():
     assert [s for s in inv if s["class"] == "UNCLASSIFIED"] == []
     with open(os.path.join(REPO, "ROUND_AUDIT.json")) as fh:
         assert inv == json.load(fh)["sites"]
+
+
+# the artifacts tools/runner.py writes and the repo commits
+RUNNER_ARTIFACTS = ("CORRECTNESS_LOCAL_sf0.01.json", "CORRECTNESS_LOCAL_sf0.1.json", "PLANS.md")
+STAMP_KEYS = {
+    "git_head", "dirty", "nproc", "mem_total_mb", "spark", "jdk", "python",
+    "duckdb", "sf", "command",
+}
+
+
+def _stamps(path: str) -> list[dict]:
+    with open(path) as fh:
+        text = fh.read()
+    if path.endswith(".md"):
+        return [json.loads(s) for s in re.findall(r"^Stamp: `(.*)`$", text, re.M)]
+    record = json.loads(text)
+    if "sessions" in record:
+        return [s["stamp"] for s in record["sessions"].values()]
+    return [record["stamp"]]
+
+
+def test_runner_artifacts_carry_the_stamp():
+    from tools.runner import MODES
+
+    for name in RUNNER_ARTIFACTS:
+        stamps = _stamps(os.path.join(REPO, name))
+        assert stamps, name
+        for st in stamps:
+            assert set(st) >= STAMP_KEYS, (name, STAMP_KEYS - set(st))
+            argv = shlex.split(st["command"])
+            i = next(i for i, a in enumerate(argv) if a.endswith(("runner.py", "bench.py")))
+            mode = "bench" if argv[i].endswith("bench.py") else argv[i + 1]
+            assert mode in MODES, (name, st["command"])

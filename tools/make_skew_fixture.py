@@ -1,5 +1,5 @@
 """Adversarially SKEWED variants of the driver fixtures: the uniform
-10×-replica scale audit (`tools/scale_audit.py`) catches super-linear growth,
+10×-replica scale audit (`tools/runner.py scale`) catches super-linear growth,
 but nothing exercised a genuinely hot key — one merge/join key, linkage block,
 or band bucket holding ~10% of the corpus. These transforms plant exactly that,
 deterministically, so the hot-key guards can be asserted rather than assumed:
