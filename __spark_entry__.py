@@ -21,8 +21,9 @@ def entry(spark: SparkSession) -> DataFrame:
     (``mappings/users.js`` transposed, SURVEY.md §7.2) — merge-upsert the
     full ``customer`` relation over a stale derived snapshot with an FK
     broadcast-lookup into ``nation``, via the join-based MERGE operator."""
-    from dirty_js_etl_spark.queries import t5_merge_full
+    from dirty_js_etl_spark.queries import all_queries
 
+    t5_merge_full = all_queries()["t5_merge_full"]
     return t5_merge_full(spark, "/root/testdata/sf0.001")
 
 

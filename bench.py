@@ -60,41 +60,43 @@ HEADLINE = [
     "x89_session_window_native",
     "x90_ngram_corpus_dedup",
     "x97_token_search",
-    # round 4: sub-doc dedup, containment decontamination, deep TPC-H
+    # text: sub-document dedup and containment decontamination;
+    # tpch: the Q8/Q21 analogs
     "x152_paragraph_dedup",
     "x153_containment_decontaminate",
     "x161_tpch_q8",
     "x162_tpch_q21",
-    # round 7: the final TPC-H shapes (Q4 semi-join; Q2/Q9/Q11/Q20 on
-    # the derived partsupp dimension)
+    # tpch: Q4 as a semi-join; Q2/Q9/Q11/Q20 on the derived partsupp
+    # dimension
     "x193_tpch_q4",
     "x194_tpch_q2",
     "x195_tpch_q9",
     "x196_tpch_q11",
     "x197_tpch_q20",
-    # the newest, heaviest kernels — real A/V byte decoders, the portable
-    # IVF twin, the linkage family — so a perf regression in them is
-    # visible. BASELINE.md notes the set change; totals are not comparable
-    # across differing sets.
+    # the heaviest kernels, so a perf regression in them is visible —
+    # similarity: the portable IVF twin; multimodal: the real A/V byte
+    # decoders; linkage: blocking, resolution and LSH blocking.
+    # Totals are not comparable across differing sets (BASELINE.md).
     "x201_ivf_topk_portable",
     "x203_audio_decode",
     "x204_frame_sample_real",
     "x205_link_pairs",
     "x206_entity_resolution",
     "x208_lsh_link_pairs",
-    # round 10: the composed multi-pass resolution (x209) — the full
-    # three-generator linkage pipeline, the heaviest linkage query
+    # linkage: the composed multi-pass resolution (x209) — the full
+    # three-generator pipeline, the heaviest linkage query — and weighted
+    # pairs; then privacy (PII scrub), graph (PageRank), privacy
+    # (t-closeness)
     "x209_multi_pass_resolution",
     "x210_weighted_link_pairs",
     "x211_pii_redact",
     "x143_pagerank",
     "x213_t_closeness",
-    # round 11: the portable sketch twins (bottom-k quantile rollup,
-    # KMV set ops) — cheap, but their rank-window shapes belong in the
-    # profile now that every approximate family has a twin
+    # sketch: the portable twins (bottom-k quantile rollup, KMV set
+    # ops) — cheap, but their rank-window shapes belong in the profile
     "x214_quantile_rollup_portable",
     "x215_theta_overlap_portable",
-    # round 11/12: the daily-ingest index-probe path. The driver's
+    # dedup: the daily-ingest index-probe path. The driver's
     # registry query (x216_incremental_ingest_dedup) rebuilds the
     # corpus index in-query for oracle self-containment; in production
     # the index is PERSISTED and each ingest pays only the probe, so

@@ -57,11 +57,6 @@ class Catalog:
         assert self.root is not None
         return os.path.join(self.root, f"{name}.parquet")
 
-    def register_all_views(self, tables: list[str]) -> None:
-        """createOrReplaceTempView for each table so Spark SQL can see them."""
-        for t in tables:
-            self.read(t).createOrReplaceTempView(t)
-
 
 FIXTURE_TABLES = [
     "region",

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import Column
@@ -92,7 +92,7 @@ class FkLookup:
     parent_table: str
     parent_column: str
     import_column: str
-    source_column: str = ""
+    source_column: str
     filter_column: str | None = None
     filter_value: Any = None
 
@@ -104,9 +104,7 @@ class FkLookup:
         n = f"get_{self.parent_table}_{self.parent_column}_by_{self.import_column}"
         if self.filter_column is not None:
             n += f"_f_{self.filter_column}_{_ident_slug(self.filter_value)}"
-        if self.source_column:
-            n += f"_from_{self.source_column}"
-        return n
+        return n + f"_from_{self.source_column}"
 
     @property
     def output_column(self) -> str:
@@ -139,9 +137,6 @@ class ColumnSpec:
     aggregate: str | None = None  # agg fn name (C11); excluded from keys
     merge_on: MergeOnSpec | None = None
     lookups: tuple[FkLookup, ...] = ()
-
-    def with_merge_on(self, spec: MergeOnSpec) -> "ColumnSpec":
-        return replace(self, merge_on=spec)
 
 
 def _col_spec(expr: Column, *cols: str, **kw: Any) -> ColumnSpec:

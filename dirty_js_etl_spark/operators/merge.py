@@ -28,14 +28,6 @@ Scale notes (100 TB):
 
 - The join shuffles both sides by the merge keys once per computation
   of the tagged frame. AQE splits skewed keys at runtime.
-- When the source is a small delta against a huge destination, pass
-  ``broadcast_source=True``: dest is never shuffled. Spark cannot
-  broadcast a FULL OUTER hash join (the hint would be silently ignored
-  and dest would shuffle anyway), so the full merge decomposes into a
-  broadcast LEFT OUTER join over dest (matched + dest-only rows) plus a
-  broadcast-anti-joined INSERT branch for unmatched source rows — two
-  map-only passes over dest, zero shuffles. ``update_only`` is a plain
-  broadcast left-outer join (one pass).
 - Duplicate source keys are an *error* in T-SQL MERGE but silently
   multiply rows in a join; ``validate_keys=True`` adds one cheap
   map-side-combined aggregation to detect them (on by default in tests,
@@ -52,6 +44,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dirty_js_etl_spark.functions.combinators import _render_raw
 
 _S_PREFIX = "__s_"
 _D_PRESENT = "__d_present"
@@ -102,7 +96,6 @@ def merge_upsert(
     update_only: bool = False,
     merge_pk: tuple[str, ...] = (),
     validate_keys: bool = False,
-    broadcast_source: bool = False,
 ) -> MergeResult:
     """Upsert ``source`` (already projected to destination column names)
     into ``dest``; returns the new table contents and the audit stream.
@@ -136,37 +129,12 @@ def merge_upsert(
         *[F.col(c).alias(_S_PREFIX + c) for c in source.columns],
         F.lit(True).alias(_S_PRESENT),
     )
-    if broadcast_source:
-        s = F.broadcast(s)
     d = dest.withColumn(_D_PRESENT, F.lit(True))
 
     cond = _join_condition(keys)
     # update_only drops source-only rows -> a dest-left join is enough and
     # avoids materializing the unmatched source side.
-    join_type = "left_outer" if update_only else "full_outer"
-    if broadcast_source and join_type == "full_outer" and key_cols:
-        # Spark has no broadcast full-outer hash join — decompose so the
-        # huge dest side stays map-only (see module docstring).
-        left = d.join(s, cond, "left_outer")
-        # dest rows that matched a source row, projected to the column-kind
-        # key values: at most ~|source| rows, broadcastable.
-        matched_keys = (
-            d.join(s, cond, "left_semi").select(*key_cols).distinct()
-        )
-        anti_cond = None
-        for c in key_cols:
-            term = F.col(_S_PREFIX + c) == matched_keys[c]
-            anti_cond = term if anti_cond is None else (anti_cond & term)
-        unmatched_s = s.join(F.broadcast(matched_keys), anti_cond, "left_anti")
-        pad = unmatched_s.select(
-            *[F.lit(None).cast(dest.schema[c].dataType).alias(c) for c in dest.columns],
-            F.lit(None).cast("boolean").alias(_D_PRESENT),
-            *[F.col(_S_PREFIX + c) for c in source.columns],
-            F.col(_S_PRESENT),
-        )
-        joined = left.unionByName(pad)
-    else:
-        joined = d.join(s, cond, join_type)
+    joined = d.join(s, cond, "left_outer" if update_only else "full_outer")
 
     matched = F.col(_D_PRESENT).isNotNull() & F.col(_S_PRESENT).isNotNull()
     inserted = F.col(_D_PRESENT).isNull() & F.col(_S_PRESENT).isNotNull()
@@ -174,9 +142,8 @@ def merge_upsert(
     mapped = set(source.columns)
     out_cols: list[Column] = []
     for c in dest.columns:
-        # plain name reference: dest columns keep their names, source
-        # columns are _S_PREFIX'd, so this stays unambiguous and survives
-        # the broadcast decomposition's unionByName.
+        # plain name reference: dest columns keep their names and source
+        # columns are _S_PREFIX'd, so this stays unambiguous.
         d_val = F.col(c)
         s_val = F.col(_S_PREFIX + c) if c in mapped else F.lit(None)
         if c in mapped and not insert_only and c not in merge_pk:
@@ -248,8 +215,7 @@ def merge_into_sql(
         if k.kind == "column":
             on_terms.append(f"D.`{k.dest_column}` = S.`{k.dest_column}`")
         elif k.kind == "value":
-            v = f"'{k.value}'" if isinstance(k.value, str) else str(k.value)
-            on_terms.append(f"D.`{k.dest_column}` = {v}")
+            on_terms.append(f"D.`{k.dest_column}` = {_render_raw(k.value)}")
         else:
             on_terms.append(f"D.`{k.dest_column}` IS NULL")
     upd_cols = [c for c in columns if c not in merge_pk]

@@ -70,8 +70,7 @@ class MappingSpec:
     setup: tuple[str, ...] = ()
     teardown: tuple[str, ...] = ()
     message: str | None = None
-    # scale knobs (no reference analog — cluster tuning)
-    broadcast_source: bool = False
+    # scale knob (no reference analog): opt-in duplicate-key check
     validate_merge_keys: bool = False
 
     def __post_init__(self) -> None:
@@ -158,13 +157,11 @@ def prepare_source(spec: MappingSpec, catalog: Catalog) -> DataFrame:
             df = df.distinct()
 
     for lk in spec.fk_lookups():
-        df = _apply_fk_join(df, lk, spec, catalog)
+        df = _apply_fk_join(df, lk, catalog)
     return df
 
 
-def _apply_fk_join(
-    df: DataFrame, lk: FkLookup, spec: MappingSpec, catalog: Catalog
-) -> DataFrame:
+def _apply_fk_join(df: DataFrame, lk: FkLookup, catalog: Catalog) -> DataFrame:
     """C13 as a left-outer equi-join (SURVEY.md §2 C13).
 
     The parent is deduplicated on the import key so cardinality matches
@@ -188,26 +185,12 @@ def _apply_fk_join(
             F.col(lk.parent_column).alias(lk.output_column),
         )
     )
-    src_col = _fk_source_column(lk, spec)
     joined = df.join(
         parent,
-        F.col(src_col) == F.col(f"__fkk_{lk.name}"),
+        F.col(lk.source_column) == F.col(f"__fkk_{lk.name}"),
         "left_outer",
     )
     return joined.drop(f"__fkk_{lk.name}")
-
-
-def _fk_source_column(lk: FkLookup, spec: MappingSpec) -> str:
-    # FkLookup identity now carries its own source column (the reference
-    # passes sourceColumn per invocation, mappr.js:298-304), so two FK
-    # columns with different fact-side sources get distinct joins.
-    if lk.source_column:
-        return lk.source_column
-    for s in spec.columns.values():
-        for cand in s.lookups:
-            if cand.name == lk.name:
-                return s.source_columns[0]
-    raise KeyError(lk.name)
 
 
 @dataclass
@@ -252,7 +235,6 @@ def run_mapping(
             update_only=spec.update_only,
             merge_pk=spec.merge_pk,
             validate_keys=spec.validate_merge_keys,
-            broadcast_source=spec.broadcast_source,
         )
 
     proj = compiled.projected

@@ -1,81 +1,39 @@
-"""Driver-facing query registry, split into per-domain modules.
+"""Driver-facing query registry, one module per operator family.
 
-The submodules register their queries as they are imported, so import
-order is registration order, and registration order (after the
-sentinels) is the driver window order (``_shared._window_order``).
-Do not reorder the imports below — appending new modules at the end is
-the only safe extension.
+Importing a family module registers its queries. ``all_queries()``
+returns ``_shared.WINDOW`` (the names the driver verifies, pinned in
+order) and then every other registered query in sorted name order, so
+the module a query lives in changes nothing the driver sees.
 
-Every query callable, the flagship ``users_mapping``/``users_dest``
-fixtures and the registry API are hoisted to the package namespace, so
-``from dirty_js_etl_spark.queries import x85_chunk_documents`` works.
+Families: ``mapping`` (C1–C15, T2–T17 and the flagship users merge),
+``tpch``, ``analytics``, ``dedup``, ``linkage`` (with graph),
+``similarity``, ``sketch``, ``text`` (with corpus and BPE), ``events``
+(with sessions, as-of, time series, ranges, SCD, streaming and Python
+data sources), ``multimodal`` and ``privacy`` (with PII). A helper used
+by one family lives in its module; a helper used by several lives in
+``_shared``.
 """
 
 from __future__ import annotations
 
-import sys as _sys
-
-from dirty_js_etl_spark.queries._shared import (  # noqa: F401
-    QueryFn,
-    RegisteredQuery,
+from dirty_js_etl_spark.queries import (  # noqa: F401  (registers the queries)
+    analytics,
+    dedup,
+    events,
+    linkage,
+    mapping,
+    multimodal,
+    privacy,
+    similarity,
+    sketch,
+    text,
+    tpch,
+)
+from dirty_js_etl_spark.queries._shared import (
     _REGISTRY,
-    _SENTINELS,
-    _window_order,
+    WINDOW,
     all_oracles,
     all_queries,
-    register,
-    users_dest,
-    users_mapping,
 )
 
-# Import order is the driver window order.  DO NOT REORDER.
-from dirty_js_etl_spark.queries import (  # noqa: E402
-    q01_combinators,
-    q02_tsql,
-    q03_analytics,
-    q04_corpus,
-    q05_tpch,
-    q06_timeseries,
-    q07_windows,
-    q08_features,
-    q09_graph_sketch,
-    q10_round4,
-    q11_round5,
-    q12_round7,
-    q13_partsupp,
-    q14_privacy,
-    q15_kmeans,
-    q16_linkage,
-    q17_pii,
-    q18_portable_sketches,
-)
-
-# Hoist every query callable / helper defined by the domain modules into
-# the package namespace.
-_pkg = _sys.modules[__name__]
-for _mod in (
-    q01_combinators,
-    q02_tsql,
-    q03_analytics,
-    q04_corpus,
-    q05_tpch,
-    q06_timeseries,
-    q07_windows,
-    q08_features,
-    q09_graph_sketch,
-    q10_round4,
-    q11_round5,
-    q12_round7,
-    q13_partsupp,
-    q14_privacy,
-    q15_kmeans,
-    q16_linkage,
-    q17_pii,
-    q18_portable_sketches,
-):
-    for _name, _val in vars(_mod).items():
-        if _name.startswith("__"):
-            continue
-        if not hasattr(_pkg, _name):
-            setattr(_pkg, _name, _val)
-del _pkg, _mod, _name, _val, _sys
+__all__ = ["WINDOW", "_REGISTRY", "all_oracles", "all_queries"]

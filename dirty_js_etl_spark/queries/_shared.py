@@ -34,25 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dirty_js_etl_spark.catalog import Catalog, fixture_catalog
-from dirty_js_etl_spark.functions.combinators import (
-    AggregateColumn,
-    CaseMap,
-    CastAs,
-    ConcatColumns,
-    CopyOrClear,
-    CopyOrDefault,
-    DirectCopy,
-    ForeignKey,
-    InvertBit,
-    MergeOn,
-    RawValue,
-    Sql,
-    SqlFunction,
-    StaticHash,
-    TruncateString,
-)
-from dirty_js_etl_spark.plans.mapping import MappingSpec, compile_mapping, run_mapping
-from dirty_js_etl_spark.plans.runner import Pipeline
+
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -76,16 +58,18 @@ def register(name: str, oracle: str | None):
 
 
 # ---------------------------------------------------------------------------
-# Driver window: the driver verifies the first ~51 entries of queries(), so
-# the order is a contract. _SENTINELS lead it, then every other query in
-# registration order (the import order in queries/__init__.py). A query that
-# must be in the window goes into _SENTINELS.
+# Driver window: the driver verifies the first 51 entries of queries(), so
+# that order is a contract, pinned here by name. WINDOW leads queries();
+# every other registered query follows in sorted name order, so the module
+# a query lives in decides nothing.
 #
-# The sentinels: the flagship merge pipeline (C7/C2/C13/C8/C3/C12 + T5 in
-# one query, the §2 regression canary), then the graph, linkage and MinHash
-# queries whose plans depend most on shuffle partitioning and spread.
+# The window opens with the flagship merge pipeline (C7/C2/C13/C8/C3/C12 +
+# T5 in one query, the §2 regression canary), then the graph, linkage and
+# MinHash queries whose plans depend most on shuffle partitioning and
+# spread, then the C1–C15 / T2–T17 mapping surface and the first
+# analytics, TPC-H and dedup queries.
 # ---------------------------------------------------------------------------
-_SENTINELS: list[str] = [
+WINDOW: tuple[str, ...] = (
     "t5_merge_full",
     "x143_pagerank",
     "x141_triangle_count",
@@ -94,115 +78,83 @@ _SENTINELS: list[str] = [
     "x6_minhash_lsh_pairs",
     "x206_entity_resolution",
     "x209_multi_pass_resolution",
-]
+    "c1_direct_copy",
+    "c2_cast_as",
+    "c3_raw_value",
+    "c4_case_map",
+    "c5_invert_bit",
+    "c6_truncate_string",
+    "c7_concat_columns",
+    "c8_copy_or_default",
+    "c9_copy_or_clear",
+    "c10_static_hash",
+    "c11_t4_grouping",
+    "c13_foreign_key",
+    "c13_foreign_key_filtered",
+    "c14_sql_function",
+    "c15_sql_expr",
+    "t2_source_filter",
+    "t3_force_distinct",
+    "t5_merge_insert_only",
+    "t5_merge_update_only",
+    "t5_merge_pk",
+    "c12_merge_on_value",
+    "c12_merge_on_null",
+    "t6_audit",
+    "t7_insert_select",
+    "t8_truncate",
+    "t9_kill_where",
+    "t11_idempotent_merge",
+    "t16_registry_fk_chain",
+    "t10_setup_hooks",
+    "t12_dry_run_invariance",
+    "t15_pipeline_run",
+    "t13_temp_qualified",
+    "t14_print_messages",
+    "t17_config_modes",
+    "x22_topn_orders",
+    "x23_set_ops",
+    "x24_window_functions",
+    "x25_date_functions",
+    "x26_math_functions",
+    "x32_tpch_q1",
+    "x33_tpch_q3",
+    "x34_tpch_q5",
+    "x1_dedup_exact",
+)
 
 
-def _window_order() -> list[str]:
-    missing = [n for n in _SENTINELS if n not in _REGISTRY]
+def _order() -> list[str]:
+    missing = [n for n in WINDOW if n not in _REGISTRY]
     if missing:
-        raise ValueError(f"_SENTINELS names not registered: {missing}")
-    return list(_SENTINELS) + [n for n in _REGISTRY if n not in _SENTINELS]
+        raise ValueError(f"WINDOW names not registered: {missing}")
+    return [*WINDOW, *sorted(set(_REGISTRY).difference(WINDOW))]
 
 
 def all_queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name].fn for name in _window_order()}
+    return {name: _REGISTRY[name].fn for name in _order()}
 
 
 def all_oracles() -> dict[str, str]:
     return {
         name: _REGISTRY[name].oracle
-        for name in _window_order()
+        for name in _order()
         if _REGISTRY[name].oracle
     }
-
-
-# ---------------------------------------------------------------------------
-# Flagship fixture: the reference's users-merge scenario (FIXTURES.md §C)
-# transposed onto the driver tables. ``users_dest`` is a deterministic
-# derived snapshot (even custkeys, stale values, one unmapped column) that
-# the merge upserts the full ``customer`` relation over.
-# ---------------------------------------------------------------------------
-
-
-def users_dest(cat: Catalog) -> DataFrame:
-    c = cat.read("customer")
-    return c.filter(F.col("c_custkey") % 2 == 0).select(
-        F.col("c_custkey").alias("orig_id"),
-        F.upper(F.col("c_name")).alias("user_nm"),
-        F.lit(0).alias("acct_i"),
-        F.lit(None).cast("string").alias("nation_nm"),
-        F.lit("STALE").alias("mktseg"),
-        F.lit("D").alias("tag"),
-        F.concat(F.lit("legacy-"), F.col("c_custkey").cast("string")).alias(
-            "legacy_note"
-        ),
-    )
-
-
-def users_mapping(**overrides) -> MappingSpec:
-    """The flagship mapping — reference ``mappings/users.js`` transposed:
-    MergeOn (C12), ConcatColumns (C7), CastAs (C2), ForeignKey (C13),
-    CopyOrDefault (C8), RawValue (C3) into one merge (T5) with audit (T6).
-    """
-    kw = dict(
-        destination="users",
-        source="customer",
-        use_merge=True,
-        columns={
-            "orig_id": MergeOn("c_custkey"),
-            "user_nm": ConcatColumns(["c_name", "c_mktsegment"]),
-            "acct_i": CastAs("c_acctbal", "INT"),
-            "nation_nm": ForeignKey(
-                "c_nationkey", "nation", "n_name", "n_nationkey"
-            ),
-            "mktseg": CopyOrDefault("c_mktsegment", "UNKNOWN"),
-            "tag": RawValue("S"),
-        },
-    )
-    kw.update(overrides)
-    return MappingSpec(**kw)
-
-
-# Shared oracle CTEs mirroring users_dest / users_mapping exactly.
-_USERS_CTE = """
-WITH dest AS (
-  SELECT c_custkey AS orig_id,
-         upper(c_name) AS user_nm,
-         0 AS acct_i,
-         CAST(NULL AS VARCHAR) AS nation_nm,
-         'STALE' AS mktseg,
-         'D' AS tag,
-         'legacy-' || CAST(c_custkey AS VARCHAR) AS legacy_note
-  FROM customer WHERE c_custkey % 2 = 0
-),
-src AS (
-  SELECT c.c_custkey AS orig_id,
-         trim(coalesce(c.c_name, '') || ' ' || coalesce(c.c_mktsegment, '')) AS user_nm,
-         CAST(trunc(c.c_acctbal) AS INT) AS acct_i,
-         n.n_name AS nation_nm,
-         CASE WHEN c.c_mktsegment IS NULL OR length(rtrim(c.c_mktsegment)) = 0
-              THEN 'UNKNOWN' ELSE c.c_mktsegment END AS mktseg,
-         'S' AS tag
-  FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-)
-"""
 
 
 def _cat(spark: SparkSession, sf_dir: str) -> Catalog:
     return fixture_catalog(spark, sf_dir)
 
 
-def _users_cat(spark: SparkSession, sf_dir: str) -> Catalog:
-    cat = _cat(spark, sf_dir)
-    cat.register("users", users_dest(cat))
-    return cat
+_DEC = "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))"
 
 
-def _project(spec: MappingSpec, spark: SparkSession, sf_dir: str) -> DataFrame:
-    return compile_mapping(spec, _cat(spark, sf_dir)).projected
+def _disc_price():
+    return F.col("l_extendedprice").cast("decimal(18,2)") * (
+        1 - F.col("l_discount").cast("decimal(18,2)")
+    )
 
 
-def _select_spec(columns: dict, source: str, **kw) -> MappingSpec:
-    return MappingSpec(destination="__out", source=source, columns=columns, **kw)
-
-
+# normalized text, both engines: lower + trim + collapse whitespace
+_NORM_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"

@@ -1,11 +1,12 @@
-"""Entity-resolution queries (``operators/linkage.py``).
+"""Entity-resolution and graph queries (``operators/linkage.py``,
+``operators/graph.py``).
 
 Record linkage over the part catalog: records are the composite
 ``p_name|p_type`` listing strings, the blocking key is the product
 noun + brand (cheap, high-recall — two listings of the same product
 share both), matches are within-block pairs of distinct record VALUES
 (identical values collapse to min-id representatives first —
-dedup-then-link, r9: clique-size-independent where the record-level
+dedup-then-link: clique-size-independent where the record-level
 spelling was O(clique²) on the replica-heavy sf1 fixture), and
 entities are connected components over the value match graph, with
 every record inheriting its representative's entity. All stages are
@@ -15,6 +16,9 @@ generation, the in-join distance pruning, AND the transitive entity
 assignment are all hash-checked. Four passes: exact-key blocking
 (x205), sorted neighborhood (x207), LSH char-gram blocking (x208,
 catches typos in the blocking token itself), assembly (x206).
+
+The graph kernels run on the co-purchase graph of parts: PageRank
+(x143) and degree-oriented triangle counting (x141).
 """
 
 from __future__ import annotations
@@ -22,6 +26,176 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dirty_js_etl_spark.queries._shared import _cat, register
+
+
+def _copurchase_pairs(li):
+    """Distinct co-purchase part pairs appearing in >= 2 orders, WITHOUT
+    the lineitem self-join (r13): the join spelling exchanged lineitem
+    twice, and on the single-row-group fixture scan that map stage was
+    serial (x143 profile: 1.8 s of the 5.3 s wall). collect_set per
+    order shuffles lineitem ONCE; the quadratic within-order expansion
+    (k ≈ 4–7 lines/order) runs parallel above the exchange. collect_set
+    dedups within the order, so one row per (order, pa, pb) and
+    count(*) ≥ 2 is exactly the old countDistinct(l_orderkey) ≥ 2."""
+    grouped = (
+        li.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("ps"))
+    )
+    return (
+        grouped.select(F.explode("ps").alias("pa"), "ps")
+        .select("pa", F.explode("ps").alias("pb"))
+        .filter(F.col("pa") < F.col("pb"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= 2)
+        .select("pa", "pb")
+    )
+
+
+@register(
+    "x141_triangle_count",
+    """
+WITH pairs AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2
+  HAVING count(DISTINCT a.l_orderkey) >= 2
+)
+SELECT CAST((SELECT count(*) FROM pairs) AS BIGINT) AS n_edges,
+       CAST((SELECT count(*)
+             FROM pairs e1
+             JOIN pairs e2 ON e2.pa = e1.pb
+             JOIN pairs e3 ON e3.pa = e1.pa AND e3.pb = e2.pb) AS BIGINT)
+         AS n_triangles
+""",
+)
+def x141_triangle_count(spark, sf_dir):
+    # Triangle counting on the co-purchase graph (parts sharing >= 2
+    # orders): the standard distributed-graph kernel, degree-oriented.
+    # Each undirected edge points from its lower-(degree, id) endpoint
+    # to the higher one — a total order, so every triangle has exactly
+    # one length-2 path u->v->w plus the closing edge u->w, and the
+    # wedge fan-out per vertex is bounded by the out-degree, which
+    # degree orientation caps at O(sqrt(m)) even on hub vertices (the
+    # a<b orientation leaves hubs with huge out-degree and a quadratic
+    # wedge stage).  All joins are plain shuffle equi-joins — the edge
+    # list is corpus-scale on a real graph and must never broadcast;
+    # AQE may still pick a runtime broadcast when it is actually small.
+    li = _cat(spark, sf_dir).read("lineitem")
+    pairs = _copurchase_pairs(li)
+    deg = (
+        pairs.select(F.col("pa").alias("v"))
+        .unionAll(pairs.select(F.col("pb").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    da = deg.select(F.col("v").alias("pa"), F.col("d").alias("da"))
+    db = deg.select(F.col("v").alias("pb"), F.col("d").alias("db"))
+    lower_first = (F.col("da") < F.col("db")) | (
+        (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
+    )
+    directed = (
+        pairs.join(da, "pa")
+        .join(db, "pb")
+        .select(
+            F.when(lower_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
+            F.when(lower_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
+        )
+    )
+    d1, d2, d3 = directed.alias("d1"), directed.alias("d2"), directed.alias("d3")
+    tri = (
+        d1.join(d2, F.col("d2.src") == F.col("d1.dst"))
+        .join(
+            d3,
+            (F.col("d3.src") == F.col("d1.src"))
+            & (F.col("d3.dst") == F.col("d2.dst")),
+        )
+        .agg(F.count(F.lit(1)).alias("n_triangles"))
+    )
+    edges = pairs.agg(F.count(F.lit(1)).alias("n_edges"))
+    return edges.crossJoin(tri)
+
+
+_X143_GRAPH = """
+pairs AS (
+  SELECT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM lineitem a JOIN lineitem b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+  GROUP BY 1, 2
+  HAVING count(DISTINCT a.l_orderkey) >= 2
+),
+edges AS (
+  SELECT pa AS src, pb AS dst FROM pairs
+  UNION ALL
+  SELECT pb AS src, pa AS dst FROM pairs
+),
+deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
+nodes AS (SELECT DISTINCT src AS node FROM edges)
+"""
+
+
+_X143_STEP = """
+s{i} AS (
+  SELECT e.dst AS node, sum(p.r // d.d) AS s
+  FROM pr{prev} p
+  JOIN deg d ON d.src = p.node
+  JOIN edges e ON e.src = p.node
+  GROUP BY e.dst
+),
+pr{i} AS (
+  SELECT n.node,
+         CAST(150000 + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS r
+  FROM nodes n LEFT JOIN s{i} s USING (node)
+)
+"""
+
+
+@register(
+    "x143_pagerank",
+    "WITH "
+    + _X143_GRAPH.strip()
+    + ","
+    + _X143_STEP.format(i=1, prev=0).strip().replace(
+        "pr0 p", "(SELECT node, CAST(1000000 AS BIGINT) AS r FROM nodes) p"
+    )
+    + ","
+    + _X143_STEP.format(i=2, prev=1).strip()
+    + ","
+    + _X143_STEP.format(i=3, prev=2).strip()
+    + """
+SELECT node AS part_key, r AS rank_ppm FROM pr3
+""",
+)
+def x143_pagerank(spark, sf_dir):
+    # PageRank (damping 0.85, 3 iterations) on the undirected
+    # co-purchase graph -- in PURE INTEGER arithmetic: ranks live in
+    # parts-per-million, contributions are floor-divided by degree,
+    # damping is (85*s) DIV 100.  Every engine and every partitioning
+    # produces bit-identical ranks, so the oracle unrolls the same 3
+    # iterations as plain CTEs.  Since r10 the iteration loop lives in
+    # ``operators/graph.py::pagerank_quantized`` (same arithmetic,
+    # extracted as a reusable operator): the edge table is
+    # localCheckpointed ONCE with the out-degree already attached and
+    # src hashing, so the 3 unrolled iterations read a materialized
+    # table instead of replaying the lineitem self-join + degree join
+    # each round — the x5 single-materialization idiom applied to an
+    # iterative algorithm.
+    from dirty_js_etl_spark.operators.graph import pagerank_quantized
+
+    li = _cat(spark, sf_dir).read("lineitem")
+    pairs = _copurchase_pairs(li)
+    edges = pairs.select(
+        F.col("pa").alias("src"), F.col("pb").alias("dst")
+    ).unionAll(pairs.select(F.col("pb").alias("src"), F.col("pa").alias("dst")))
+    ranks = pagerank_quantized(
+        edges, iters=3, scale=1_000_000, d_num=85, d_den=100
+    )
+    return ranks.select(
+        F.col("node").alias("part_key"), F.col("rank").alias("rank_ppm")
+    )
+
 
 _LINK_CTE = """
 WITH RECURSIVE c0 AS (

@@ -1,10 +1,23 @@
-"""Split from the original queries.py (registration order preserved)."""
+"""Mapping queries: the reference's combinator and T-SQL surface.
+
+C1–C15 are the column combinators (``functions/combinators.py``) compiled
+through ``plans/mapping.py``; T2–T17 are the mapping-level transforms:
+source filter, distinct, the MERGE matrix with audit, append, truncate,
+kill-where, idempotency, the setup hooks, dry runs, pipelines, temp
+qualification and config modes (``plans/runner.py``, ``plans/config.py``).
+x64 is C14's extension path through a registered pandas UDF.
+
+The flagship fixture lives here too: ``users_dest`` / ``users_mapping``
+transpose the reference's users-merge scenario (FIXTURES.md §C) onto the
+driver tables, and ``t5_merge_full`` runs it.
+"""
+
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dirty_js_etl_spark.catalog import Catalog, fixture_catalog
+from dirty_js_etl_spark.catalog import Catalog
 from dirty_js_etl_spark.functions.combinators import (
     AggregateColumn,
     CaseMap,
@@ -24,20 +37,367 @@ from dirty_js_etl_spark.functions.combinators import (
 )
 from dirty_js_etl_spark.plans.mapping import MappingSpec, compile_mapping, run_mapping
 from dirty_js_etl_spark.plans.runner import Pipeline
+from dirty_js_etl_spark.queries._shared import _cat, register
 
-from dirty_js_etl_spark.queries._shared import (
-    _USERS_CTE,
-    _cat,
-    _project,
-    _select_spec,
-    _users_cat,
-    register,
-    users_mapping,
+
+# ---------------------------------------------------------------------------
+# Flagship fixture: the reference's users-merge scenario (FIXTURES.md §C)
+# transposed onto the driver tables. ``users_dest`` is a deterministic
+# derived snapshot (even custkeys, stale values, one unmapped column) that
+# the merge upserts the full ``customer`` relation over.
+# ---------------------------------------------------------------------------
+def users_dest(cat: Catalog) -> DataFrame:
+    c = cat.read("customer")
+    return c.filter(F.col("c_custkey") % 2 == 0).select(
+        F.col("c_custkey").alias("orig_id"),
+        F.upper(F.col("c_name")).alias("user_nm"),
+        F.lit(0).alias("acct_i"),
+        F.lit(None).cast("string").alias("nation_nm"),
+        F.lit("STALE").alias("mktseg"),
+        F.lit("D").alias("tag"),
+        F.concat(F.lit("legacy-"), F.col("c_custkey").cast("string")).alias(
+            "legacy_note"
+        ),
+    )
+
+
+def users_mapping(**overrides) -> MappingSpec:
+    """The flagship mapping — reference ``mappings/users.js`` transposed:
+    MergeOn (C12), ConcatColumns (C7), CastAs (C2), ForeignKey (C13),
+    CopyOrDefault (C8), RawValue (C3) into one merge (T5) with audit (T6).
+    """
+    kw = dict(
+        destination="users",
+        source="customer",
+        use_merge=True,
+        columns={
+            "orig_id": MergeOn("c_custkey"),
+            "user_nm": ConcatColumns(["c_name", "c_mktsegment"]),
+            "acct_i": CastAs("c_acctbal", "INT"),
+            "nation_nm": ForeignKey(
+                "c_nationkey", "nation", "n_name", "n_nationkey"
+            ),
+            "mktseg": CopyOrDefault("c_mktsegment", "UNKNOWN"),
+            "tag": RawValue("S"),
+        },
+    )
+    kw.update(overrides)
+    return MappingSpec(**kw)
+
+
+# Shared oracle CTEs mirroring users_dest / users_mapping exactly.
+_USERS_CTE = """
+WITH dest AS (
+  SELECT c_custkey AS orig_id,
+         upper(c_name) AS user_nm,
+         0 AS acct_i,
+         CAST(NULL AS VARCHAR) AS nation_nm,
+         'STALE' AS mktseg,
+         'D' AS tag,
+         'legacy-' || CAST(c_custkey AS VARCHAR) AS legacy_note
+  FROM customer WHERE c_custkey % 2 = 0
+),
+src AS (
+  SELECT c.c_custkey AS orig_id,
+         trim(coalesce(c.c_name, '') || ' ' || coalesce(c.c_mktsegment, '')) AS user_nm,
+         CAST(trunc(c.c_acctbal) AS INT) AS acct_i,
+         n.n_name AS nation_nm,
+         CASE WHEN c.c_mktsegment IS NULL OR length(rtrim(c.c_mktsegment)) = 0
+              THEN 'UNKNOWN' ELSE c.c_mktsegment END AS mktseg,
+         'S' AS tag
+  FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
 )
+"""
 
-# ---------------------------------------------------------------------------
-# T2/T3: source filter + distinct
-# ---------------------------------------------------------------------------
+
+def _users_cat(spark: SparkSession, sf_dir: str) -> Catalog:
+    cat = _cat(spark, sf_dir)
+    cat.register("users", users_dest(cat))
+    return cat
+
+
+def _project(spec: MappingSpec, spark: SparkSession, sf_dir: str) -> DataFrame:
+    return compile_mapping(spec, _cat(spark, sf_dir)).projected
+
+
+def _select_spec(columns: dict, source: str, **kw) -> MappingSpec:
+    return MappingSpec(destination="__out", source=source, columns=columns, **kw)
+
+
+@register(
+    "c1_direct_copy",
+    "SELECT c_custkey AS custkey, c_name AS name FROM customer",
+)
+def c1_direct_copy(spark, sf_dir):
+    spec = _select_spec(
+        {"custkey": DirectCopy("c_custkey"), "name": DirectCopy("c_name")},
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c2_cast_as",
+    "SELECT CAST(trunc(c_acctbal) AS INT) AS bal_i, "
+    "CAST(c_custkey AS VARCHAR) AS key_s FROM customer",
+)
+def c2_cast_as(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "bal_i": CastAs("c_acctbal", "INT"),
+            "key_s": CastAs("c_custkey", "NVARCHAR(64)"),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c3_raw_value",
+    "SELECT r_regionkey AS k, 'fixed' AS s, 42 AS n, "
+    "CAST(NULL AS VARCHAR) AS nil FROM region",
+)
+def c3_raw_value(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "k": DirectCopy("r_regionkey"),
+            "s": RawValue("fixed"),
+            "n": RawValue(42),
+            "nil": RawValue(None, dtype="NVARCHAR"),
+        },
+        "region",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c4_case_map",
+    "SELECT o_orderkey AS okey, "
+    "CASE WHEN o_orderpriority = '1-URGENT' THEN 'P0' "
+    "     WHEN o_orderpriority = '2-HIGH' THEN 'P1' "
+    "     WHEN o_orderpriority = '3-MEDIUM' THEN 'P2' "
+    "     ELSE 'P3' END AS prio FROM orders",
+)
+def c4_case_map(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "okey": DirectCopy("o_orderkey"),
+            "prio": CaseMap(
+                "o_orderpriority",
+                {"1-URGENT": "P0", "2-HIGH": "P1", "3-MEDIUM": "P2"},
+                default="P3",
+            ),
+        },
+        "orders",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c5_invert_bit",
+    "SELECT l_orderkey AS okey, l_linenumber AS line, "
+    "CASE WHEN l_linenumber = 1 THEN 0 ELSE 1 END AS not_first FROM lineitem",
+)
+def c5_invert_bit(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "okey": DirectCopy("l_orderkey"),
+            "line": DirectCopy("l_linenumber"),
+            "not_first": InvertBit("l_linenumber"),
+        },
+        "lineitem",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c6_truncate_string",
+    "SELECT p_partkey AS pkey, "
+    "nullif(rtrim(substr(p_name, 1, 12)), '') AS name12 FROM part",
+)
+def c6_truncate_string(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "pkey": DirectCopy("p_partkey"),
+            "name12": TruncateString("p_name", 12),
+        },
+        "part",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c7_concat_columns",
+    "SELECT c_custkey AS custkey, "
+    "trim(coalesce(c_name, '') || ' ' || coalesce(c_mktsegment, '')) AS full_nm "
+    "FROM customer",
+)
+def c7_concat_columns(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "full_nm": ConcatColumns(["c_name", "c_mktsegment"]),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c8_copy_or_default",
+    "SELECT c_custkey AS custkey, "
+    "CASE WHEN c_mktsegment IS NULL OR length(rtrim(c_mktsegment)) = 0 "
+    "THEN 'UNKNOWN' ELSE c_mktsegment END AS seg FROM customer",
+)
+def c8_copy_or_default(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "seg": CopyOrDefault("c_mktsegment", "UNKNOWN"),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c9_copy_or_clear",
+    "SELECT c_custkey AS custkey, "
+    "CASE WHEN c_mktsegment IS NULL OR length(rtrim(c_mktsegment)) = 0 "
+    "THEN NULL ELSE c_mktsegment END AS seg FROM customer",
+)
+def c9_copy_or_clear(spark, sf_dir):
+    # C9 is C8 with a NULL default ("clear"): empty-or-null -> NULL
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "seg": CopyOrClear("c_mktsegment"),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+# StaticHash: digest computed driver-side at plan-build time (C10) — the
+# oracle embeds the same literal, proving the generation-time semantics.
+_C10_DIGEST = "2a1b5084e9c310025c1b3c574a4d8e0f"
+
+
+@register(
+    "c10_static_hash",
+    f"SELECT r_regionkey AS k, '{_C10_DIGEST}' AS secret_hash FROM region",
+)
+def c10_static_hash(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "k": DirectCopy("r_regionkey"),
+            "secret_hash": StaticHash("dirty-js-etl", algorithm="md5", encoding="hex"),
+        },
+        "region",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c11_t4_grouping",
+    "SELECT l_returnflag, l_linestatus, "
+    "SUM(l_quantity) AS l_quantity, "
+    "CAST(COUNT(l_orderkey) AS BIGINT) AS l_orderkey FROM lineitem "
+    "GROUP BY l_returnflag, l_linestatus",
+)
+def c11_t4_grouping(spark, sf_dir):
+    # GROUP BY keys inferred from the isColumn-flagged mappings (T4);
+    # aggregates aliased back to their source names (tsql2008.js:235-238).
+    spec = _select_spec(
+        {
+            "l_returnflag": DirectCopy("l_returnflag"),
+            "l_linestatus": DirectCopy("l_linestatus"),
+            "l_quantity": AggregateColumn("l_quantity", "SUM"),
+            "l_orderkey": AggregateColumn("l_orderkey", "COUNT"),
+        },
+        "lineitem",
+        use_grouping=True,
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c13_foreign_key",
+    "SELECT c.c_custkey AS custkey, n.n_name AS nation_nm FROM customer c "
+    "LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey",
+)
+def c13_foreign_key(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "nation_nm": ForeignKey("c_nationkey", "nation", "n_name", "n_nationkey"),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c13_foreign_key_filtered",
+    "SELECT c.c_custkey AS custkey, n.n_name AS nation_r1 FROM customer c "
+    "LEFT JOIN (SELECT * FROM nation WHERE n_regionkey = 1) n "
+    "ON c.c_nationkey = n.n_nationkey",
+)
+def c13_foreign_key_filtered(spark, sf_dir):
+    # filterColumn/filterValue variant (mappr.js:297-306: extra WHERE
+    # equality inside the generated lookup fn)
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "nation_r1": ForeignKey(
+                "c_nationkey",
+                "nation",
+                "n_name",
+                "n_nationkey",
+                filter_column="n_regionkey",
+                filter_value=1,
+            ),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c14_sql_function",
+    "SELECT c_custkey AS custkey, upper(c_name) AS name_u, "
+    "round(c_acctbal, 1) AS bal_r FROM customer",
+)
+def c14_sql_function(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "custkey": DirectCopy("c_custkey"),
+            "name_u": SqlFunction("upper", columns=["c_name"]),
+            "bal_r": SqlFunction("round", columns=["c_acctbal"], raws=[1]),
+        },
+        "customer",
+    )
+    return _project(spec, spark, sf_dir)
+
+
+@register(
+    "c15_sql_expr",
+    "SELECT o_orderkey AS okey, o_totalprice * 2 AS double_price, "
+    "CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS is_final FROM orders",
+)
+def c15_sql_expr(spark, sf_dir):
+    spec = _select_spec(
+        {
+            "okey": DirectCopy("o_orderkey"),
+            "double_price": Sql("o_totalprice * 2", source_column="o_totalprice"),
+            "is_final": Sql(
+                "CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END",
+                source_column="o_orderstatus",
+            ),
+        },
+        "orders",
+    )
+    return _project(spec, spark, sf_dir)
 
 
 @register(
@@ -69,10 +429,6 @@ def t3_force_distinct(spark, sf_dir):
     )
     return _project(spec, spark, sf_dir)
 
-
-# ---------------------------------------------------------------------------
-# T5/T6/T7/T9/T11: merge matrix, audit, append, cleanup, idempotency
-# ---------------------------------------------------------------------------
 
 _MERGE_FULL_SELECT = """
 SELECT
@@ -163,7 +519,6 @@ def t5_merge_pk(spark, sf_dir):
 # the column's own source expression (the literal) still lands in the
 # UPDATE SET and INSERT VALUES lists exactly like the golden's merge-on
 # column does (test.sql:63,89).
-
 _C12V_SQL = """
 WITH dest AS (
   SELECT r_regionkey AS k, lower(r_name) AS nm,
@@ -327,12 +682,6 @@ def t11_idempotent_merge(spark, sf_dir):
     return pipe.run(cat)["users"].result
 
 
-# ---------------------------------------------------------------------------
-# T10/T12/T16 as driver-verifiable queries: the runner semantics that were
-# previously pytest-only, each with a chained-CTE DuckDB oracle.
-# ---------------------------------------------------------------------------
-
-
 @register(
     "t16_registry_fk_chain",
     """
@@ -476,8 +825,6 @@ def t12_dry_run_invariance(spark, sf_dir):
     stored = cat.read("users").select(F.lit("stored").alias("kind"), "*")
     computed = res.select(F.lit("computed").alias("kind"), "*")
     return stored.unionByName(computed)
-
-
 
 
 @register(
@@ -676,3 +1023,31 @@ def t17_config_modes(spark, sf_dir):
         F.lit(bool(pipe.dry_run)).alias("sql_test"),
         F.col("n_rows"),
     )
+
+
+@register(
+    "x64_pandas_udf_log1p",
+    """
+SELECT event_id, round(ln(1 + value), 6) AS log1p_value
+FROM events WHERE value >= 0
+""",
+)
+def x64_pandas_udf_log1p(spark, sf_dir):
+    # the C14 extension path when no builtin matches: an Arrow-batched
+    # pandas UDF registered by name and resolved through the Sql/
+    # SqlFunction combinators -- vectorized numpy on the executor,
+    # never row-at-a-time
+    from dirty_js_etl_spark.functions.udfs import register_udfs
+
+    register_udfs(spark)
+    spec = _select_spec(
+        {
+            "event_id": DirectCopy("event_id"),
+            "log1p_value": Sql("round(log1p_val(value), 6)", columns=["value"]),
+        },
+        source="events",
+    )
+    events = _cat(spark, sf_dir).read("events").filter(F.col("value") >= 0)
+    cat = _cat(spark, sf_dir)
+    cat.register("events", events)
+    return compile_mapping(spec, cat).projected

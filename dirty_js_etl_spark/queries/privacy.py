@@ -1,11 +1,20 @@
-"""Privacy-release gate queries (``operators/privacy.py``).
+"""Privacy queries (``operators/privacy.py``, ``operators/pii.py``).
 
-Structured-data counterpart of the free-text PII layer (x51): before a
-table with quasi-identifiers ships in a training corpus, every released
-equivalence class must be k-anonymous, and k-anonymous classes must
-carry diverse sensitive values (l-diversity). Both are pure
-groupBy/broadcast shapes — exactly SQL-replayable, so the oracles
-hash-check them end to end.
+Release gates: before a table with quasi-identifiers ships in a
+training corpus, every released equivalence class must be k-anonymous,
+and k-anonymous classes must carry diverse sensitive values
+(l-diversity, t-closeness). All are pure groupBy/broadcast shapes —
+exactly SQL-replayable, so the oracles hash-check them end to end.
+
+x211 generalizes the x51 document scrub (``corpus.pii_report`` — two
+fixed patterns over customer-derived text): ordered configurable
+patterns, per-pattern placeholders, replacement-order counts, and an
+oracle that replays the exact redacted BYTES (md5), not just the
+counts. The fixture documents carry no real PII, so the query PLANTS
+deterministic synthetic PII derived from ``doc_id`` (an email, a
+phone-suffix, an IPv4) and then proves the scrub removes it: counts,
+the redacted text's md5, and its length are all hash-checked against a
+DuckDB replay of the same regex chain.
 """
 
 from __future__ import annotations
@@ -151,4 +160,59 @@ def x213_t_closeness(spark, sf_dir):
     )
     return t_closeness(
         cust, ["c_nationkey", "c_mktsegment"], "bal_band", t_num=1, t_den=5
+    )
+
+
+def _x211_sql() -> str:
+    from dirty_js_etl_spark.operators.pii import pii_redaction_sql
+
+    counts, red = pii_redaction_sql("t")
+    return f"""
+WITH noisy AS (
+  SELECT doc_id,
+         text || ' contact user' || CAST(doc_id AS VARCHAR)
+              || '@example.com or 555-'
+              || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+              || ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7' AS t
+  FROM documents
+)
+SELECT doc_id, {counts}, md5({red}) AS redacted_md5,
+       CAST(length({red}) AS INT) AS redacted_len
+FROM noisy
+"""
+
+
+@register("x211_pii_redact", _x211_sql())
+def x211_pii_redact(spark, sf_dir):
+    # map-only scrub: detection is regexp_count and redaction chained
+    # regexp_replace, all JVM codegen (no UDF, no shuffle) — at 100 TB
+    # this is scan-bound and scales by partition count alone. Patterns
+    # stay in the RE2 ∩ Java dialect so DuckDB replays the exact counts
+    # and the exact redacted bytes (md5-checked). Counts follow the
+    # replacement order (pattern i counted after patterns < i redacted).
+    from dirty_js_etl_spark.operators.pii import redact_pii
+
+    docs = _cat(spark, sf_dir).read("documents")
+    noisy = docs.select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or 555-"),
+            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+            F.lit(" ip 10.0."),
+            (F.col("doc_id") % 256).cast("string"),
+            F.lit(".7"),
+        ).alias("t"),
+    )
+    out = redact_pii(noisy, "t")
+    return out.select(
+        "doc_id",
+        "n_email",
+        "n_ipv4",
+        "n_phone_full",
+        "n_phone",
+        F.md5("redacted").alias("redacted_md5"),
+        F.length("redacted").cast("int").alias("redacted_len"),
     )

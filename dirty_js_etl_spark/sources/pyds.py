@@ -16,7 +16,7 @@ source is exactly reproducible on any cluster.
 
 from __future__ import annotations
 
-from datetime import date, timedelta
+from datetime import date
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 

@@ -3,7 +3,7 @@ a fixture directory and print per-query timings plus row counts.
 
 The fixture star schema carries no partsupp table; Q2/Q9/Q11/Q20 run on
 the deterministically DERIVED partsupp dimension
-(``dirty_js_etl_spark/queries/q13_partsupp.py``), so the full suite is
+(``dirty_js_etl_spark/queries/tpch.py``), so the full suite is
 self-contained on the shipped parquet. Every query here is also
 hash-checked against a DuckDB oracle in the standing sweeps
 (``python tools/runner.py oracle``, committed as

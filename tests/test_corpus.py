@@ -129,8 +129,9 @@ def test_chunking_reconstructs_corpus(spark):
     """Chunks (width 50, stride 40) losslessly cover the token stream:
     chunk 0 plus every later chunk minus its 10-token overlap re-forms
     the original normalized text."""
-    from dirty_js_etl_spark.queries import x85_chunk_documents
+    from dirty_js_etl_spark.queries import all_queries
 
+    x85_chunk_documents = all_queries()["x85_chunk_documents"]
     chunks = (
         x85_chunk_documents(spark, "/root/testdata/sf0.001")
         .orderBy("doc_id", "chunk_id")
@@ -160,8 +161,9 @@ def test_quantize_bounds_and_extremes(spark):
     max-magnitude component lands at 126/127 (truncation boundary)."""
     from pyspark.sql import functions as F
 
-    from dirty_js_etl_spark.queries import x84_embedding_quantize
+    from dirty_js_etl_spark.queries import all_queries
 
+    x84_embedding_quantize = all_queries()["x84_embedding_quantize"]
     q = x84_embedding_quantize(spark, "/root/testdata/sf0.001")
     stats = q.agg(
         F.min("q").alias("lo"), F.max(F.abs(F.col("q"))).alias("hi")

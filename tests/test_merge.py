@@ -121,35 +121,6 @@ def test_flags_mutually_exclusive(spark, frames):
         merge_upsert(dest, src, KEYS, insert_only=True, update_only=True)
 
 
-def test_broadcast_source_same_result(spark, frames):
-    dest, src = frames
-    a = merge_upsert(dest, src, KEYS)
-    b = merge_upsert(dest, src, KEYS, broadcast_source=True)
-    assert rows(a.result) == rows(b.result)
-    assert rows(a.audit) == rows(b.audit)
-
-
-def test_broadcast_source_never_shuffles_dest(spark, frames):
-    # Spark can't broadcast a full-outer hash join, so the naive hint
-    # would silently fall back to a dest-shuffling sort-merge join; the
-    # decomposition must keep every join a BroadcastHashJoin.
-    dest, src = frames
-    b = merge_upsert(dest, src, KEYS, broadcast_source=True)
-    plan = b.result._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-
-
-def test_broadcast_source_insert_only_and_pk(spark, frames):
-    dest, src = frames
-    for kw in (dict(insert_only=True), dict(merge_pk=("k",)), dict(update_only=True)):
-        a = merge_upsert(dest, src, KEYS, **kw)
-        b = merge_upsert(dest, src, KEYS, broadcast_source=True, **kw)
-        assert rows(a.result) == rows(b.result), kw
-        assert rows(a.audit) == rows(b.audit), kw
-
-
 def test_merge_into_sql_render():
     sql = merge_into_sql(
         "delta.users",
@@ -209,6 +180,13 @@ def test_merge_into_sql_goldens():
     # integer value-key renders unquoted
     assert "D.`site` = 7" in merge_into_sql(
         "t", "s", [MergeKey("site", kind="value", value=7)], ["site", "v"]
+    )
+    # string value-keys double embedded quotes; bools render as SQL
+    assert "ON D.`name` = 'O''Brien'\n" in merge_into_sql(
+        "t", "s", [MergeKey("name", kind="value", value="O'Brien")], ["name", "v"]
+    )
+    assert "ON D.`live` = TRUE\n" in merge_into_sql(
+        "t", "s", [MergeKey("live", kind="value", value=True)], ["live", "v"]
     )
 
 

@@ -1,11 +1,11 @@
-"""Invariants of the derived partsupp dimension (queries/q13_partsupp.py)
+"""Invariants of the derived partsupp dimension (queries/tpch.py)
 that the TPC-H Q2/Q9/Q11/Q20 analogs rely on."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dirty_js_etl_spark.queries.q13_partsupp import (
+from dirty_js_etl_spark.queries.tpch import (
     _derived_partsupp,
     _ps_availqty,
     _ps_supplycost,

@@ -40,24 +40,27 @@ def test_every_query_has_callable_and_name_parity():
     assert len(qs) >= 20
 
 
-def test_window_is_sentinels_then_registration_order():
-    """The driver verifies the first ~51 entries of queries(): sentinels
-    lead, then every other query in registration order."""
-    from dirty_js_etl_spark.queries import _SENTINELS, _window_order
+def test_window_leads_queries():
+    """The driver verifies the first 51 entries of queries(): they are
+    the pinned WINDOW, in its order."""
+    import __spark_entry__ as e
+    from dirty_js_etl_spark.queries import WINDOW
 
-    order = _window_order()
-    assert order[: len(_SENTINELS)] == _SENTINELS
+    assert len(WINDOW) == 51
+    assert list(e.queries())[:51] == list(WINDOW)
+
+
+def test_queries_is_registry_permutation_with_sorted_tail():
+    import __spark_entry__ as e
+
+    order = list(e.queries())
     assert sorted(order) == sorted(_REGISTRY)  # a permutation, no loss
-    assert order[len(_SENTINELS):] == [
-        n for n in _REGISTRY if n not in _SENTINELS
-    ]
+    assert order[51:] == sorted(order[51:])
 
 
-def test_unregistered_sentinel_raises(monkeypatch):
+def test_unregistered_window_name_raises(monkeypatch):
     from dirty_js_etl_spark.queries import _shared
 
-    monkeypatch.setattr(
-        _shared, "_SENTINELS", [*_shared._SENTINELS, "no_such_query"]
-    )
+    monkeypatch.setattr(_shared, "WINDOW", (*_shared.WINDOW, "no_such_query"))
     with pytest.raises(ValueError, match="no_such_query"):
-        _shared._window_order()
+        _shared.all_queries()

@@ -75,10 +75,10 @@ def test_semi_anti_join_complement(spark, catalog):
 
 
 def test_pivot_counts_match_long_counts(spark, catalog):
-    from dirty_js_etl_spark.queries import x39_pivot_events
+    from dirty_js_etl_spark.queries import all_queries
 
     ev = catalog.read("events")
-    wide = x39_pivot_events(spark, SF_DIR)
+    wide = all_queries()["x39_pivot_events"](spark, SF_DIR)
     types = ["click", "error", "purchase", "signup", "view"]
     total_wide = wide.select(
         sum(F.sum(t) for t in types).alias("n")
@@ -87,9 +87,9 @@ def test_pivot_counts_match_long_counts(spark, catalog):
 
 
 def test_percentiles_bounded_by_min_max(spark, catalog):
-    from dirty_js_etl_spark.queries import x40_group_percentiles
+    from dirty_js_etl_spark.queries import all_queries
 
-    out = x40_group_percentiles(spark, SF_DIR).collect()
+    out = all_queries()["x40_group_percentiles"](spark, SF_DIR).collect()
     li = catalog.read("lineitem").agg(
         F.min("l_quantity"), F.max("l_quantity")
     ).first()

@@ -9,6 +9,9 @@
   ``ROUND_AUDIT.json`` inventory is the current one.
 - Stamps: every artifact ``tools/runner.py`` committed carries the
   runner's full stamp, and the stamp's command names a runner mode.
+- Imports: no engine module imports a name it never reads
+  (``__init__.py`` re-exports and ``__all__`` names are exempt).
+- Layout: query modules are named for operator families, not rounds.
 """
 
 from __future__ import annotations
@@ -74,6 +77,44 @@ def test_every_engine_module_reached_from_driver_surface():
     roots += sorted(glob.glob(os.path.join(REPO, "tools", "*.py")))
     mods = _package_modules()
     assert sorted(set(mods) - _reached(mods, roots)) == []
+
+
+def _unused_imports(path: str) -> list[str]:
+    """Module-level imports (top level, or under a top-level ``if`` such
+    as ``TYPE_CHECKING``) whose bound name the module never reads."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    stmts = list(tree.body)
+    bound: dict[str, int] = {}
+    exported: set[str] = set()
+    for node in stmts:
+        if isinstance(node, ast.If):
+            stmts += node.body + node.orelse
+        elif isinstance(node, ast.Import):
+            bound.update((a.asname or a.name.split(".")[0], node.lineno) for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound.update((a.asname or a.name, node.lineno) for a in node.names)
+        elif isinstance(node, ast.Assign) and any(
+            getattr(t, "id", None) == "__all__" for t in node.targets
+        ):
+            exported = set(ast.literal_eval(node.value))
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    rel = os.path.relpath(path, REPO)
+    return [f"{rel}:{line} {name}" for name, line in bound.items()
+            if name not in read and name not in exported]
+
+
+def test_no_unused_module_imports():
+    hits = []
+    for path in sorted(_package_modules().values()):
+        if os.path.basename(path) != "__init__.py":
+            hits += _unused_imports(path)
+    assert hits == []
+
+
+def test_no_query_module_named_for_a_round():
+    names = os.listdir(os.path.join(REPO, PKG, "queries"))
+    assert [n for n in names if "round" in n] == []
 
 
 def test_round_audit_sites_classified_and_committed():

@@ -87,54 +87,50 @@ RULES: list[tuple[str, str, str, str]] = [
      "evaluates 0.4 as DECIMAL, Spark as double; round absorbs"),
     ("operators/text.py", r"F\.log", "KEEP-NOISE-ABSORBING",
      "tfidf: libm log is not correctly-rounded; JVM vs DuckDB differ"),
-    ("queries/q09_graph_sketch.py", r"term_score", "KEEP-NOISE-ABSORBING",
+    ("queries/text.py", r"term_score", "KEEP-NOISE-ABSORBING",
      "bm25: sum of log-based doubles in engine order"),
-    ("queries/q09_graph_sketch.py", r"sum\(lp\)", "KEEP-NOISE-ABSORBING",
+    ("queries/text.py", r"sum\(lp\)", "KEEP-NOISE-ABSORBING",
      "bigram logprob: libm log + double sum"),
-    ("queries/q03_analytics.py", r"F\.log", "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r"F\.log", "KEEP-NOISE-ABSORBING",
      "log_price: libm log not correctly-rounded"),
-    ("queries/q04_corpus.py", r"percentile", "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r"percentile", "KEEP-NOISE-ABSORBING",
      "percentile interpolation arithmetic differs across engines"),
-    ("queries/q08_features.py", r"percentile", "KEEP-NOISE-ABSORBING",
-     "percentile interpolation arithmetic differs across engines"),
-    ("queries/q07_windows.py", r"percentile", "KEEP-NOISE-ABSORBING",
-     "percentile interpolation arithmetic differs across engines"),
-    ("queries/q07_windows.py", r"F\.corr|covar_samp|stddev_samp",
+    ("queries/analytics.py", r"F\.corr|covar_samp|stddev_samp",
      "KEEP-NOISE-ABSORBING",
      "corr/covar/stddev: multi-pass moment arithmetic differs"),
-    ("queries/q07_windows.py", r"regr_", "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r"regr_", "KEEP-NOISE-ABSORBING",
      "regression aggregates: moment arithmetic differs across engines"),
-    ("queries/q07_windows.py", r'F\.avg\("value"\)', "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r'F\.avg\("value"\)', "KEEP-NOISE-ABSORBING",
      "windowed moving average of non-integral doubles in frame order"),
-    ("queries/q08_features.py", r'F\.sum\("sval"\)', "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r'F\.sum\("sval"\)', "KEEP-NOISE-ABSORBING",
      "weekly avg over sums of non-integral double values"),
-    ("queries/q08_features.py", r"F\.sqrt", "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r"F\.sqrt", "KEEP-NOISE-ABSORBING",
      "embedding norm: the per-row round makes the downstream "
      "DECIMAL(18,9) cast exact (a full-precision double would be "
      "re-rounded by each engine's own double->decimal cast rule); the "
      "OUTER avg/min/max rounds over these were flipped to raw"),
-    ("queries/q10_round4.py", r'f"p\{j\}"', "KEEP-NOISE-ABSORBING",
+    ("queries/similarity.py", r'f"p\{j\}"', "KEEP-NOISE-ABSORBING",
      "random projection: DuckDB list_dot_product vs Spark sequential "
      "fold — summation algorithms may differ in ulps; round absorbs"),
-    ("queries/q06_timeseries.py", r"F\.avg", "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r"F\.avg", "KEEP-NOISE-ABSORBING",
      "avg of float32 values: sums of non-integral doubles in engine "
      "order"),
-    ("queries/q10_round4.py", r'"med"|"mad"', "KEEP-NOISE-ABSORBING",
+    ("queries/analytics.py", r'"med"|"mad"', "KEEP-NOISE-ABSORBING",
      "median/MAD via percentile interpolation"),
-    ("queries/q08_features.py", r"F\.log", "KEEP-NOISE-ABSORBING",
+    ("queries/text.py", r"F\.log", "KEEP-NOISE-ABSORBING",
      "entropy: p*log(p) with libm log"),
-    ("queries/q09_graph_sketch.py", r"ratio\(F\.col", "NOT-CROSS-ENGINE",
+    ("queries/text.py", r"ratio\(F\.col", "NOT-CROSS-ENGINE",
      "x135 compression ratio is rows-only (zlib udf); no oracle hash"),
     # --- EXACT-DECIMAL ------------------------------------------------------
-    ("queries/q03_analytics.py", r"decimal\(18,2\)", "EXACT-DECIMAL",
+    ("queries/analytics.py", r"decimal\(18,2\)", "EXACT-DECIMAL",
      "money through DECIMAL(18,2): exact decimal arithmetic; the "
      "2-scale round of an exact 2-decimal value is the identity"),
-    ("queries/q08_features.py", r"decimal\(18,2\)", "EXACT-DECIMAL",
+    ("queries/analytics.py", r"decimal\(18,2\)", "EXACT-DECIMAL",
      "decimal-summed money / 7.0: the quotient is rounded at 6 but "
      "inputs are exact decimals — see FLIPPED-RAW note in q08"),
-    ("queries/q10_round4.py", r"\* 100\)", "EXACT-DECIMAL",
+    ("queries/analytics.py", r"\* 100\)", "EXACT-DECIMAL",
      "cents quantization: round(x*100) cast long, exact integer"),
-    ("queries/q07_windows.py", r'F\.when\(F\.col\("cd"\)', "EXACT-DECIMAL",
+    ("queries/analytics.py", r'F\.when\(F\.col\("cd"\)', "EXACT-DECIMAL",
      "p50_floor: max picks an existing 2-decimal acctbal; round(.,2) "
      "is the identity on it"),
 ]
